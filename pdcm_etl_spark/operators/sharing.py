@@ -1,4 +1,5 @@
-"""Compute-once sharing for multi-consumer intermediates INSIDE a query.
+"""Compute-once sharing for multi-consumer intermediates — the one place
+that decides how a frame read by several consumers is shared.
 
 Catalyst does not common-subexpression-eliminate repeated SUBTREES, and
 AQE's ReusedExchange only fires on byte-identical exchange subplans.
@@ -11,19 +12,36 @@ corpus re-scans.
 
 ``shared(df)`` is the fix: a lazy ``localCheckpoint`` — materialized by
 the first consumer, replayed from stored blocks (memory-and-disk,
-spills gracefully) by the rest; the guide-§8 decide-once pattern and
-the same idiom the flagship EntityDag uses for multiply-consumed
-entities. ``SPARK_GRAFT_SHARE_INTERMEDIATES=none`` restores recompute
-(for clusters where executor-loss recovery matters more than the
-scans — localCheckpoint blocks die with their executor; plain persist
-keeps lineage but was measured 2× slower on the flagship from
-re-analysis cost).
+spills gracefully) by the rest; the guide-§8 decide-once pattern.
+
+The same policy governs every other compute-once site: the operators'
+multi-consumer intermediates, the flagship ``EntityDag``'s
+multiply-consumed entities (``plans/dag.py``) and the synthetic provider
+spine (``plans/synth.py``). Truncating lineage matters most in the DAG:
+with ~50 chained entities, full lineage makes Catalyst re-analyze an
+ever-deeper tree for every downstream node (quadratic driver cost —
+measured ~40% of flagship wall time at sf0.1).
+
+``SPARK_GRAFT_SHARE_INTERMEDIATES`` picks the mode for all of them:
+
+- ``checkpoint`` (default): the lazy ``localCheckpoint`` above.
+- ``persist``: ``persist(MEMORY_AND_DISK)``, full lineage kept, so an
+  executor loss recomputes the blocks instead of failing the job
+  (localCheckpoint blocks die with their executor). Measured 2× slower
+  on the flagship from re-analysis cost.
+- ``none``: recompute in every consumer.
+
+Memory-pressure note (measured at sf1, 4g heap): the binding variable is
+PER-TASK memory, not the mode — 4g ÷ 32 concurrent tasks kills the
+flagship in either mode, 4g ÷ 4 tasks completes with ~18 GB of spill and
+zero OOM (scripts_dev/mem_pressure.py).
 """
 
 from __future__ import annotations
 
 import os
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 
 
@@ -32,10 +50,5 @@ def shared(df: DataFrame) -> DataFrame:
     if mode == "none":
         return df
     if mode == "persist":
-        # keeps full lineage: an executor loss recomputes the blocks
-        # instead of failing the job (the cluster-safe mode; see module
-        # docstring for the measured local cost of the re-analysis)
-        from pyspark import StorageLevel
-
         return df.persist(StorageLevel.MEMORY_AND_DISK)
     return df.localCheckpoint(eager=False)

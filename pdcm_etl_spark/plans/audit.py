@@ -57,16 +57,6 @@ def _walk_expr(x):
             pass
 
 
-def _alias_map(jplan) -> dict[int, object]:
-    defs: dict[int, object] = {}
-    for node in _walk_plan(jplan):
-        for e in _seq(node.expressions()):
-            for x in _walk_expr(e):
-                if x.getClass().getSimpleName() == "Alias":
-                    defs[x.exprId().id()] = x.child()
-    return defs
-
-
 _NUMERIC_PREFIXES = ("int", "bigint", "smallint", "tinyint", "decimal",
                      "double", "float")
 
@@ -103,28 +93,34 @@ def overflow_findings(df: DataFrame) -> list[str]:
     """Lint one DataFrame's analyzed plan; return finding strings
     (empty = clean)."""
     jplan = df._jdf.queryExecution().analyzed()
-    defs = _alias_map(jplan)
-    findings: list[str] = []
+    # one py4j walk collects both the Alias definitions and the
+    # Multiply/Sum candidates; a Sum is judged once every alias is known
+    defs: dict[int, object] = {}
+    candidates: list[tuple[str, object]] = []
     for node in _walk_plan(jplan):
         for e in _seq(node.expressions()):
             for x in _walk_expr(e):
                 cn = x.getClass().getSimpleName()
-                if cn == "Multiply" and x.dataType().simpleString() == "int":
-                    findings.append(
-                        f"int32-multiply: {x.toString()[:120]}"
-                    )
-                elif cn == "Sum":
-                    child = _seq(x.children())[0]
-                    if child.dataType().simpleString() != "bigint":
-                        continue
-                    for r in _resolved_walk(child, defs, set()):
-                        if r.getClass().getSimpleName() == "Multiply":
-                            findings.append(
-                                "bigint-sum-of-product: "
-                                f"sum({child.toString()[:60]}) over product "
-                                f"{r.toString()[:80]}"
-                            )
-                            break
+                if cn == "Alias":
+                    defs[x.exprId().id()] = x.child()
+                elif cn in ("Multiply", "Sum"):
+                    candidates.append((cn, x))
+    findings: list[str] = []
+    for cn, x in candidates:
+        if cn == "Multiply":
+            if x.dataType().simpleString() == "int":
+                findings.append(f"int32-multiply: {x.toString()[:120]}")
+        else:
+            child = _seq(x.children())[0]
+            if child.dataType().simpleString() == "bigint":
+                for r in _resolved_walk(child, defs, set()):
+                    if r.getClass().getSimpleName() == "Multiply":
+                        findings.append(
+                            "bigint-sum-of-product: "
+                            f"sum({child.toString()[:60]}) over product "
+                            f"{r.toString()[:80]}"
+                        )
+                        break
     return findings
 
 

@@ -5,9 +5,9 @@ between every task (~60 write/read barriers, transformer.py:74-79). Here
 the whole entity graph is one Spark application: nodes are pure transform
 functions, edges are declared dependencies, intermediates stay as in-memory
 lineage (Catalyst sees the full plan), and only entities marked
-``materialize`` hit storage. Multiply-consumed nodes are persisted to
-avoid recomputation (the reference's molecular_characterization pattern,
-SURVEY §4).
+``materialize`` hit storage. Multiply-consumed nodes are computed once
+through ``operators.sharing.shared`` (the reference's
+molecular_characterization pattern, SURVEY §4).
 """
 
 from __future__ import annotations
@@ -18,7 +18,8 @@ from dataclasses import dataclass, field
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.storagelevel import StorageLevel
+
+from pdcm_etl_spark.operators.sharing import shared
 
 
 @dataclass
@@ -35,38 +36,11 @@ class Node:
 
 
 class EntityDag:
-    """Topologically-executed entity graph with memoization.
+    """Topologically-executed entity graph with memoization. How a
+    multiply-consumed node is shared is ``operators/sharing.py``'s call."""
 
-    ``reuse`` controls how multiply-consumed nodes are shared:
-
-    - ``"checkpoint"`` (default): ``localCheckpoint(eager=False)`` — the
-      node is computed once, stored like a persisted DataFrame, **and its
-      logical lineage is truncated**. With ~50 chained entities, full
-      lineage makes Catalyst re-analyze an ever-deeper tree for every
-      downstream node (quadratic driver cost — measured ~40% of flagship
-      wall time at sf0.1); truncation makes analysis O(node).
-    - ``"persist"``: plain ``persist(MEMORY_AND_DISK)``, full lineage
-      kept. Use on clusters where executor loss must be recoverable —
-      localCheckpoint data dies with its executor, persisted data can be
-      recomputed from lineage.
-    """
-
-    def __init__(self, spark: SparkSession, reuse: str | None = None):
-        import os
-
+    def __init__(self, spark: SparkSession):
         self.spark = spark
-        # SPARK_GRAFT_DAG_REUSE flips the sharing mode without a code
-        # change — "persist" keeps lineage for executor-loss recovery
-        # on clusters, "checkpoint" is the roomy-heap fast path (see
-        # class docstring). Memory-pressure note (measured at sf1, 4g
-        # heap): the binding variable is PER-TASK memory, not the mode —
-        # 4g ÷ 32 concurrent tasks (128 MB/task) kills the flagship in
-        # either mode, 4g ÷ 4 tasks completes with ~18 GB of spill and
-        # zero OOM (scripts_dev/mem_pressure.py; a real 4g executor
-        # container runs 2-4 cores, exactly that profile)
-        self.reuse = reuse or os.environ.get(
-            "SPARK_GRAFT_DAG_REUSE", "checkpoint"
-        )
         self.nodes: dict[str, Node] = {}
         self._results: dict[str, DataFrame] = {}
 
@@ -113,12 +87,7 @@ class EntityDag:
             self.nodes[n] for n in scope
         )
         consumers = sum(1 for n in nodes if name in n.deps)
-        if consumers > 1:
-            if self.reuse == "checkpoint":
-                df = df.localCheckpoint(eager=False)
-            else:
-                df = df.persist(StorageLevel.MEMORY_AND_DISK)
-        return df
+        return shared(df) if consumers > 1 else df
 
     def materialized_run(
         self,

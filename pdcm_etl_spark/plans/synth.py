@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pdcm_etl_spark.functions.local_table import values_table
+from pdcm_etl_spark.operators.sharing import shared
 from pdcm_etl_spark.sources.registry import module_columns
 from pdcm_etl_spark.sources.tsv import PROVIDER_COL
 
@@ -121,10 +122,10 @@ def synthesize_provider_modules(
         ),
         customer.c_nationkey == F.col("n_nationkey"),
     ).select("c_custkey", "nation_name", "prov")
-    # shared by patient + the orders spine below; checkpointing mirrors the
+    # shared by patient + the orders spine below; sharing mirrors the
     # reference's materialize-raw-extraction-once step (spark_reader.py:108)
     # and truncates lineage so downstream analysis stays O(node)
-    cust_prov = cust_prov.localCheckpoint(eager=False)
+    cust_prov = shared(cust_prov)
 
     patient = _module(
         cust_prov,
@@ -154,8 +155,8 @@ def synthesize_provider_modules(
         )
     )
     # the model/sample spine feeds 8 modules — compute the o⋈customer
-    # shuffle once (lineage-truncating, see plans/dag.py reuse policy)
-    o = o.localCheckpoint(eager=False)
+    # shuffle once (lineage-truncating, see operators/sharing.py)
+    o = shared(o)
 
     pdx = o.filter("ok % 10 != 0")
     cell = o.filter("ok % 10 = 0")
@@ -262,7 +263,7 @@ def synthesize_provider_modules(
     )
     # lineitem⋈orders feeds 4 modules (dosing, patient tx, mutation,
     # expression) — one shuffle, reused
-    li_o = li.join(o, "ok").localCheckpoint(eager=False)
+    li_o = shared(li.join(o, "ok"))
     drug = f"concat('drug ', pk % {N_TREATMENTS})"
     # every third protocol is a 2-drug combination ('+'-separated, the
     # reference's posexplode positional-dose shape)

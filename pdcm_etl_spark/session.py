@@ -16,6 +16,31 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
 
+def _default_driver_memory() -> str:
+    """``min(24g, 0.6 × memory)``, memory being the host's MemTotal or the
+    cgroup limit, whichever is smaller. In local mode the JVM heap is
+    the whole cluster, so bigger is faster, but a heap the host cannot
+    back gets the JVM OOM-killed instead of spilling."""
+    mem: list[int] = []
+    try:
+        with open("/proc/meminfo") as f:
+            mem += [int(line.split()[1]) * 1024 for line in f
+                    if line.startswith("MemTotal:")]
+    except OSError:
+        pass
+    for path in ("/sys/fs/cgroup/memory.max",
+                 "/sys/fs/cgroup/memory/memory.limit_in_bytes"):
+        try:
+            with open(path) as f:
+                raw = f.read().strip()
+        except OSError:
+            continue
+        if raw.isdigit():
+            mem.append(int(raw))
+    heap = min([24 * 2**30] + [int(0.6 * m) for m in mem])
+    return f"{heap // 2**20}m"
+
+
 def get_spark(
     app_name: str = "pdcm_etl_spark",
     master: str | None = None,
@@ -51,8 +76,12 @@ def get_spark(
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # local[32] = 32 concurrent tasks sharing one unified pool, plus
         # the DAG's localCheckpoint blocks live in the same heap — 8g
-        # starves execution memory at sf0.1 (UNABLE_TO_ACQUIRE_MEMORY)
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
+        # starves execution memory at sf0.1 (UNABLE_TO_ACQUIRE_MEMORY);
+        # the default is capped by what the host can back
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or _default_driver_memory(),
+        )
         # Shuffle/spill codec (guide §2.3): measured r11 on the suite's
         # heaviest shuffler (dedup_prefix_filter, sf0.1): zstd writes
         # 2.2x fewer shuffle bytes (382->174 MB) at equal executor CPU,

@@ -7,7 +7,7 @@ seconds, capture ``explain("formatted")``, and pull per-stage metrics
 REST API so shuffle-bound vs compute-bound is evidence, not guesswork.
 
     python scripts_dev/profile_queries.py [sf_dir] q1 q2 ... [--reps N]
-                                          [--plans-dir plans/r11]
+                                          [--plans-dir DIR]
 
 Writes one JSON line per query to stdout and (optionally) the formatted
 plan to <plans-dir>/<query>_<tag>.txt.

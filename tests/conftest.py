@@ -6,12 +6,27 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+# The suite's data is sf0.001 (sf0.1 for the determinism screen), whose
+# live set stays near 1 GB. A 4g heap keeps the JVM's resident size near
+# 5 GB where the host-sized default (session._default_driver_memory)
+# lets it grow to ~10 GB; the fingerprint check's subprocess JVM
+# inherits the setting. An explicit SPARK_DRIVER_MEMORY still wins.
+os.environ.setdefault("SPARK_DRIVER_MEMORY", "4g")
+
+
+def _cpus() -> str:
+    """Task slots for the test session: SPARK_GRAFT_CPUS (which also
+    sizes the shuffle partitions), else the CPUs this process may use.
+    More slots than cores only adds contention on the suite's many
+    small jobs."""
+    return os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
+
 
 @pytest.fixture(scope="session")
 def spark():
     from pdcm_etl_spark.session import get_spark
 
-    s = get_spark("pdcm-etl-spark-tests", master="local[8]")
+    s = get_spark("pdcm-etl-spark-tests", master=f"local[{_cpus()}]")
     yield s
 
 

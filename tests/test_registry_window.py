@@ -310,10 +310,37 @@ def test_registry_is_large_and_oracled():
     import __spark_entry__ as e
 
     q, o = e.queries(), e.oracle_sql()
-    assert len(q) >= 88
-    # every query has an oracle except the full-width flagship (whose
-    # 66-column wide twin IS hash-checked); round 3 converted
-    # stream_sessionize, approx_distinct and multimodal_decode (the
-    # deterministic stub fake is SQL-expressible) to exact oracles
-    rows_only = set(q) - set(o)
-    assert rows_only <= {"etl_search_index"}, rows_only
+    assert len(q) == 227
+    # every query has an oracle; round 3 converted stream_sessionize,
+    # approx_distinct and multimodal_decode (the deterministic stub fake
+    # is SQL-expressible) to exact oracles
+    assert set(q) == set(o), set(q) ^ set(o)
+    # the window order is hand-kept: each name once, each one registered
+    assert len(e._PRIORITY) == len(set(e._PRIORITY))
+    assert set(e._PRIORITY) <= set(q), set(e._PRIORITY) - set(q)
+
+
+def test_registry_import_error_is_fatal(monkeypatch):
+    """A broken registry module must fail the registry, not silently
+    drop its queries from the gated 50-query window and the bench."""
+    import sys
+
+    import pytest
+
+    import __spark_entry__ as e
+
+    # a None entry in sys.modules makes the next import raise ImportError
+    monkeypatch.setitem(sys.modules, "pdcm_etl_spark.plans.extensions_j", None)
+    with pytest.raises(ImportError):
+        e.queries()
+
+
+def test_registry_duplicate_name_is_fatal(monkeypatch):
+    """Two modules registering one name must not silently keep the later."""
+    import pytest
+
+    import __spark_entry__ as e
+
+    monkeypatch.setattr(e, "_CATALOGS", e._CATALOGS + e._CATALOGS[-1:])
+    with pytest.raises(ValueError, match="registered twice"):
+        e.queries()
