@@ -268,6 +268,30 @@ HEADLINE = [
 ]
 
 
+def release_blocks(spark) -> None:
+    """Drop every checkpointed / persisted RDD and force a driver-JVM GC
+    so the async ContextCleaner reclaims broadcast + block-store state,
+    then run a trivial job and cool down so the cleaner drains outside
+    the timed region. The r8 flagship "warm-exec regression" (11.8 ->
+    18.1 s) was a measurement taken after ~150 warm-up queries with NO
+    release — accumulated block pressure, not a plan change."""
+    import gc
+
+    from pdcm_etl_spark.operators.sharing import release
+
+    gc.collect()
+    release(spark)
+    spark.sparkContext._jvm.System.gc()
+    spark.range(10).count()
+    time.sleep(0.5)
+
+
+def _first_line(e: BaseException) -> str:
+    """A short, JSON-friendly description of a failure."""
+    lines = str(e).strip().splitlines()
+    return f"{type(e).__name__}: {lines[0] if lines else ''}"[:160]
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
@@ -299,14 +323,17 @@ def main() -> None:
     warm_dir = "/root/testdata/sf0.001"
     if not os.path.isdir(warm_dir):
         warm_dir = sf_dir
+    # a query failing at warm scale still gets timed below; the failure
+    # is recorded in BENCH_FULL.json
+    warmup_errors: dict[str, str] = {}
     for name in HEADLINE:
         fn = queries.get(name)
         if fn is None:
             continue
         try:
             fn(spark, warm_dir).write.format("noop").mode("overwrite").save()
-        except Exception:
-            pass  # a query failing at warm scale still gets timed below
+        except Exception as e:  # noqa: BLE001
+            warmup_errors[name] = _first_line(e)
     for t in ("lineitem", "orders", "documents", "embeddings"):
         spark.read.parquet(f"{sf_dir}/{t}.parquet").count()
     # the flagship's first execution at the TIMED scale is 2-5x its
@@ -321,38 +348,16 @@ def main() -> None:
     # + ~14s execution; the cold surplus (~40s) is one-time JVM/codegen
     # /first-scan warmup, not plan cost — it amortizes across a session,
     # which is exactly how a 100 TB deployment runs (long-lived driver).
-    def release_blocks() -> None:
-        # Same discipline as the timed loop below: drop checkpointed /
-        # persisted RDD refs and force a driver-JVM GC so the async
-        # ContextCleaner reclaims broadcast + block-store state. The r8
-        # flagship "warm-exec regression" (11.8 -> 18.1 s) was exactly
-        # this measurement running after ~150 warm-up queries with NO
-        # release — accumulated block pressure, not a plan change (the
-        # timed loop's flagship median, which DOES release, stayed flat).
-        import gc
-
-        gc.collect()
-        jsc = spark.sparkContext._jsc.sc()
-        it = jsc.getPersistentRDDs().iterator()
-        while it.hasNext():
-            it.next()._2().unpersist(False)
-        try:
-            spark.sparkContext._jvm.System.gc()
-        except Exception:
-            pass
-        spark.range(10).count()
-        time.sleep(0.5)
-
-    flagship_split: dict[str, float] = {}
+    flagship_split: dict[str, object] = {}
     fn = queries.get("etl_search_index")
     if fn is not None:
         try:
-            release_blocks()
+            release_blocks(spark)
             t0 = time.time()
             fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             flagship_split["flagship_cold_sec"] = round(time.time() - t0, 3)
             # one warm pass, split into plan-construction vs execution
-            release_blocks()
+            release_blocks(spark)
             t0 = time.time()
             df = fn(spark, sf_dir)
             flagship_split["flagship_warm_build_sec"] = round(
@@ -388,8 +393,8 @@ def main() -> None:
                     f"{warm_total:.1f}s exceeds {budget:.0f}s budget",
                     file=sys.stderr,
                 )
-        except Exception:
-            pass
+        except Exception as e:  # noqa: BLE001
+            flagship_split["flagship_error"] = _first_line(e)
 
     # Per-query timing is the MEDIAN of REPS runs: single-run wall clock
     # at this scale has ±30% noise (GC, async block cleanup, codegen
@@ -412,7 +417,7 @@ def main() -> None:
             # on driver-JVM GC, which a 128 GiB heap may never trigger
             # between reps). release_blocks runs a trivial job + cooldown
             # so the async cleaner drains outside the timed region.
-            release_blocks()
+            release_blocks(spark)
             t0 = time.time()
             df = fn(spark, sf_dir)
             df.write.format("noop").mode("overwrite").save()
@@ -439,6 +444,11 @@ def main() -> None:
                 "unit": "sec",
                 "queries": timings,
                 "sf": sf_val,
+                "cpus": spark.sparkContext.defaultParallelism,
+                "spark.driver.memory": spark.sparkContext.getConf().get(
+                    "spark.driver.memory"
+                ),
+                "warmup_errors": warmup_errors,
                 **flagship_split,
             },
             fh,

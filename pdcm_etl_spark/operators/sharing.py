@@ -35,6 +35,10 @@ Memory-pressure note (measured at sf1, 4g heap): the binding variable is
 PER-TASK memory, not the mode — 4g ÷ 32 concurrent tasks kills the
 flagship in either mode, 4g ÷ 4 tasks completes with ~18 GB of spill and
 zero OOM (scripts_dev/mem_pressure.py).
+
+``release(spark, keep)`` is the counterpart: it unpersists every
+persistent RDD (checkpoint or persist blocks) whose id is not in the
+``keep`` snapshot taken earlier with ``persistent_rdd_ids``.
 """
 
 from __future__ import annotations
@@ -42,7 +46,7 @@ from __future__ import annotations
 import os
 
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 
 def shared(df: DataFrame) -> DataFrame:
@@ -52,3 +56,22 @@ def shared(df: DataFrame) -> DataFrame:
     if mode == "persist":
         return df.persist(StorageLevel.MEMORY_AND_DISK)
     return df.localCheckpoint(eager=False)
+
+
+def _persistent_rdds(spark: SparkSession):
+    it = spark.sparkContext._jsc.sc().getPersistentRDDs().iterator()
+    while it.hasNext():
+        e = it.next()
+        yield e._1(), e._2()
+
+
+def persistent_rdd_ids(spark: SparkSession) -> set[int]:
+    return {rdd_id for rdd_id, _ in _persistent_rdds(spark)}
+
+
+def release(spark: SparkSession, keep: set[int] = frozenset()) -> None:
+    """Unpersist every persistent RDD not in ``keep``: a scoped release
+    leaves the blocks of frames that were live at the snapshot alone."""
+    for rdd_id, rdd in list(_persistent_rdds(spark)):
+        if rdd_id not in keep:
+            rdd.unpersist(False)

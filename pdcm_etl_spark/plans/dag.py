@@ -21,6 +21,9 @@ from pyspark.sql import DataFrame, SparkSession
 
 from pdcm_etl_spark.operators.sharing import shared
 
+# threads EntityDag.run resolves nodes on (its docstring has the measurement)
+RESOLVE_THREADS = 24
+
 
 @dataclass
 class Node:
@@ -31,7 +34,9 @@ class Node:
     needs_spark: bool = False
     # cheap projection of an already-materialized input: never checkpoint
     # it, even when multiply consumed — each consumer's column pruning
-    # through the thin plan beats re-serializing the wide frame
+    # through the thin plan beats re-serializing the wide frame. Cheap
+    # nodes are transparent to the consumer count: their input counts
+    # the cheap node's own consumers instead.
     cheap: bool = False
 
 
@@ -54,23 +59,20 @@ class EntityDag:
         return self
 
     def get(self, name: str) -> DataFrame:
-        """Resolve a node (and its transitive deps) memoized."""
-        if name in self._results:
-            return self._results[name]
-        if name not in self.nodes:
-            raise KeyError(f"unknown entity '{name}' (not a node or input)")
-        node = self.nodes[name]
-        args = [self.get(d) for d in node.deps]
-        if node.needs_spark:
-            df = node.fn(self.spark, *args)
-        else:
-            df = node.fn(*args)
-        df = self._share_if_reused(name, df)
-        self._results[name] = df
-        return df
+        """Resolve one node (and its transitive deps) memoized."""
+        return self.run(targets=[name])[name]
+
+    def _consumers(self, name: str, scope: set[str]) -> int:
+        """Consumers of ``name`` among the ``scope`` nodes; a cheap
+        consumer is transparent and counts its own consumers instead."""
+        return sum(
+            self._consumers(n, scope) if self.nodes[n].cheap else 1
+            for n in scope
+            if name in self.nodes[n].deps
+        )
 
     def _share_if_reused(
-        self, name: str, df: DataFrame, scope: set[str] | None = None
+        self, name: str, df: DataFrame, scope: set[str]
     ) -> DataFrame:
         """Nodes consumed by >1 downstream node are computed once and
         reused — replaces the reference's parquet round-trip barriers.
@@ -81,52 +83,24 @@ class EntityDag:
         barrier would block Catalyst's column pruning / filter pushdown
         through it for zero reuse benefit (e.g. a measurement table's
         profile consumer when only search_index is asked for)."""
-        if self.nodes[name].cheap:
+        if self.nodes[name].cheap or self._consumers(name, scope) <= 1:
             return df
-        nodes = self.nodes.values() if scope is None else (
-            self.nodes[n] for n in scope
-        )
-        consumers = sum(1 for n in nodes if name in n.deps)
-        return shared(df) if consumers > 1 else df
+        return shared(df)
 
     def materialized_run(
-        self,
-        materialize_dir: str,
-        targets: list[str] | None = None,
-        parallelism: int = 8,
+        self, materialize_dir: str, targets: list[str] | None = None
     ) -> dict[str, DataFrame]:
         """Resumable run — the reference's Luigi file-existence memoization
         (etl/workflow/config.py:4-7 LocalTarget: completed stages skip).
 
-        Every resolved entity is written to ``materialize_dir/<name>`` as
-        parquet; entities whose directory already holds a ``_SUCCESS``
-        marker are loaded from parquet instead of recomputed (and their
-        upstream subtree is never resolved unless another target needs
-        it). Crash mid-run → rerun redoes only the missing entities.
+        An ``incremental_run`` with nothing changed: entities whose
+        ``materialize_dir/<name>`` already holds a ``_SUCCESS`` marker
+        load from parquet (and their upstream subtree is never resolved
+        unless another target needs it); every other resolved entity is
+        written there. Crash mid-run → rerun redoes only the missing
+        entities.
         """
-        import os
-
-        names = targets or list(self.nodes)
-        done = {}
-        for n in list(self.nodes):
-            path = os.path.join(materialize_dir, n)
-            if os.path.exists(os.path.join(path, "_SUCCESS")):
-                done[n] = self.spark.read.parquet(path)
-        # pre-seed results so resolution treats finished entities as inputs
-        self._results.update(done)
-        out = self.run(targets=names, parallelism=parallelism)
-        # persist EVERY resolved entity, not just the targets — the
-        # intermediates are what a later incremental_run serves clean
-        # nodes from (and what a crash-resume skips)
-        for n in list(self._results):
-            if n in done or n not in self.nodes:
-                continue
-            path = os.path.join(materialize_dir, n)
-            self._results[n].write.mode("overwrite").parquet(path)
-            self._results[n] = self.spark.read.parquet(path)
-            if n in out:
-                out[n] = self._results[n]
-        return out
+        return self.incremental_run(materialize_dir, set(), targets)[0]
 
     def dirty_downstream(self, changed_inputs: set[str]) -> set[str]:
         """Entity nodes transitively downstream of the given input /
@@ -147,7 +121,6 @@ class EntityDag:
         materialize_dir: str,
         changed_inputs: set[str],
         targets: list[str] | None = None,
-        parallelism: int = 8,
     ) -> tuple[dict[str, DataFrame], set[str], set[str]]:
         """DATA-incremental rerun over a prior ``materialized_run``
         directory: only entities transitively downstream of
@@ -161,8 +134,9 @@ class EntityDag:
         run; a new provider drop invalidates every target file and
         reruns everything): here invalidation follows the DATA dependency
         graph, so a drop touching one module recomputes only that
-        module's cone. Recomputed entities re-materialize over their
-        stale parquet, so consecutive incremental runs compose.
+        module's cone. Every resolved entity that was not loaded —
+        targets and intermediates alike — is written back over its stale
+        parquet, so consecutive incremental runs compose.
 
         Returns ``(results, recomputed, loaded)`` — the latter two are
         the observable proof that the run touched a strict subset.
@@ -172,34 +146,22 @@ class EntityDag:
         dirty = self.dirty_downstream(changed_inputs)
         names = targets or list(self.nodes)
         loaded: set[str] = set()
-        for n in list(self.nodes):
-            if n in dirty:
-                continue
+        for n in self.nodes:
             path = os.path.join(materialize_dir, n)
-            if os.path.exists(os.path.join(path, "_SUCCESS")):
+            if n not in dirty and os.path.exists(os.path.join(path, "_SUCCESS")):
                 self._results[n] = self.spark.read.parquet(path)
                 loaded.add(n)
-        self.run(targets=names, parallelism=parallelism)
-        recomputed = {
-            n for n in self._results
-            if n in dirty and n in self.nodes
-        }
+        self.run(targets=names)
+        recomputed = [
+            n for n in self._results if n in self.nodes and n not in loaded
+        ]
         for n in recomputed:
             path = os.path.join(materialize_dir, n)
-            df = self._results[n]
-            df.write.mode("overwrite").parquet(path)
+            self._results[n].write.mode("overwrite").parquet(path)
             self._results[n] = self.spark.read.parquet(path)
-        return (
-            {n: self._results[n] for n in names},
-            recomputed,
-            loaded,
-        )
+        return {n: self._results[n] for n in names}, set(recomputed), loaded
 
-    def run(
-        self,
-        targets: list[str] | None = None,
-        parallelism: int = 24,
-    ) -> dict[str, DataFrame]:
+    def run(self, targets: list[str] | None = None) -> dict[str, DataFrame]:
         """Resolve all (or the given) entities; returns name → DataFrame.
 
         Nodes are resolved on a thread pool in dependency order: each node
@@ -208,16 +170,14 @@ class EntityDag:
         finalizes the plan when the RDD is created) — serially that puts
         every materialization on the critical path; threaded, independent
         subgraphs overlap and the wall time is the DAG's critical path
-        (measured sf0.1 flagship: 45.9s → 27.7s cold at 8 threads; 24
-        threads takes warm 32s → 24s — the per-node materializations are
-        small jobs, so a deeper submission queue keeps the scheduler fed;
-        executors are shared FIFO either way). Spark job submission is
-        thread-safe; node fns are pure plan builders. ``parallelism=1``
-        falls back to sequential resolution.
+        (measured sf0.1 flagship: 45.9s → 27.7s cold at 8 threads; the
+        ``RESOLVE_THREADS`` = 24 threads take warm 32s → 24s — the
+        per-node materializations are small jobs, so a deeper submission
+        queue keeps the scheduler fed; executors are shared FIFO either
+        way). Spark job submission is thread-safe; node fns are pure plan
+        builders.
         """
         names = targets or list(self.nodes)
-        if parallelism <= 1:
-            return {n: self.get(n) for n in names}
 
         # transitive closure of what the targets need
         needed: set[str] = set()
@@ -253,7 +213,7 @@ class EntityDag:
                 self._results[name] = df
             return df
 
-        with ThreadPoolExecutor(max_workers=parallelism) as pool:
+        with ThreadPoolExecutor(max_workers=RESOLVE_THREADS) as pool:
             # topo order guarantees dep futures exist before dependents
             for n in self.topological_order():
                 if n in needed:
@@ -351,10 +311,13 @@ def build_metadata_dag(spark: SparkSession, raw: dict[str, DataFrame]) -> Entity
 
     # optional clusters — wired only when their raw modules are provided
     from pdcm_etl_spark.transforms import (
+        facets as facets_t,
+        links as links_t,
+        metadata as meta_t,
         molecular as mol_t,
+        molecular_data as md_t,
         ontology as ont_t,
         sample as sample_t,
-        search as search_t,
         treatment as tr_t,
     )
 
@@ -408,7 +371,7 @@ def build_metadata_dag(spark: SparkSession, raw: dict[str, DataFrame]) -> Entity
             spec_t.quality_assurance,
             ["raw/model_validation", "initial_model"],
         )
-        dag.add("qa_json_agg", _qa_json_adapter, ["quality_assurance"])
+        dag.add("qa_json_agg", meta_t.quality_assurance_json, ["quality_assurance"])
     if "model" in raw:
         from pdcm_etl_spark.transforms import lineage as lin_t, specimen as spec_t
 
@@ -427,7 +390,7 @@ def build_metadata_dag(spark: SparkSession, raw: dict[str, DataFrame]) -> Entity
         dag.add("model_relationships", lin_t.model_relationships, ["initial_model"])
         dag.add(
             "specimens_json_agg",
-            _specimens_json_adapter,
+            meta_t.xenograft_specimens_json,
             ["xenograft_model_specimen", "host_strain",
              "engraftment_site", "engraftment_type",
              "engraftment_sample_type", "engraftment_sample_state"],
@@ -446,7 +409,8 @@ def build_metadata_dag(spark: SparkSession, raw: dict[str, DataFrame]) -> Entity
             _resolve_molchar_model_ids,
             ["molecular_characterization", "initial_model"],
         )
-        dag.add("dataset_available", _dataset_available_adapter, ["model_molchar"])
+        # treatment / publication markers are appended row-wise in search_index
+        dag.add("dataset_available", meta_t.dataset_available, ["model_molchar"])
         dag.add(
             "platform",
             sample_t.platform,
@@ -479,7 +443,7 @@ def build_metadata_dag(spark: SparkSession, raw: dict[str, DataFrame]) -> Entity
             if "markers" in raw
             else []
         )
-        if len(h_mods) >= 2:
+        if h_mods:
             # ONE 5-stage cascade over the tagged union of every
             # harmonisable module instead of one cascade per module: the
             # inputs are disjoint row sets, the cascade is row-local
@@ -496,25 +460,25 @@ def build_metadata_dag(spark: SparkSession, raw: dict[str, DataFrame]) -> Entity
                    "gene_marker_alias_symbols"],
             )
         for mod in meas_mods:
-            if mod in h_mods and len(h_mods) >= 2:
+            if mod not in h_mods:
                 dag.add(
                     f"{mod}_measurement_data",
-                    _measurement_slice_adapter(mod),
-                    ["harmonised_measurements", f"raw/{mod}",
-                     "molecular_characterization"],
-                    # thin slice of the checkpointed cascade union: let
-                    # each consumer prune columns through it (the marker
-                    # aggregates read 2 of ~30 columns and skip the row
-                    # hash entirely) instead of re-materializing the
-                    # wide frame
-                    cheap=True,
+                    md_t.measurement_data,
+                    [f"raw/{mod}", "molecular_characterization"],
                 )
                 continue
-            deps = [f"raw/{mod}", "molecular_characterization"]
-            if mod in harmonisable and "markers" in raw:
-                deps += ["gene_marker", "gene_marker_previous_symbols",
-                         "gene_marker_alias_symbols"]
-            dag.add(f"{mod}_measurement_data", _measurement_adapter, deps)
+            dag.add(
+                f"{mod}_measurement_data",
+                _measurement_slice_adapter(mod),
+                ["harmonised_measurements", f"raw/{mod}",
+                 "molecular_characterization"],
+                # thin slice of the checkpointed cascade union: let
+                # each consumer prune columns through it (the marker
+                # aggregates read 2 of ~30 columns and skip the row
+                # hash entirely) instead of re-materializing the
+                # wide frame
+                cheap=True,
+            )
         if meas_mods:
             dag.add(
                 "available_molecular_data_columns",
@@ -539,25 +503,25 @@ def build_metadata_dag(spark: SparkSession, raw: dict[str, DataFrame]) -> Entity
         if "immunemarker" in meas_mods:
             dag.add(
                 "msi_status",
-                _msi_adapter,
+                md_t.msi_status_per_model,
                 ["immunemarker_measurement_data", "model_molchar"],
             )
             dag.add(
                 "hla_types",
-                _hla_adapter,
+                md_t.hla_types_per_model,
                 ["immunemarker_measurement_data", "model_molchar"],
             )
         if "biomarker" in meas_mods:
             dag.add(
                 "breast_cancer_biomarkers",
-                _breast_biomarkers_adapter,
+                md_t.breast_cancer_biomarkers_per_model,
                 ["biomarker_measurement_data", "model_molchar"],
             )
         # raw-data archive names per model (ENA/EGA/GEO from raw_data_url;
         # ref model_metadata_transformer_job.py:88-89)
         dag.add(
             "raw_data_resources",
-            _raw_data_resources_adapter,
+            links_t.raw_data_resources_per_model,
             ["molecular_characterization", "model_molchar"],
         )
         # annotation resources matching the model's molecular data
@@ -576,7 +540,7 @@ def build_metadata_dag(spark: SparkSession, raw: dict[str, DataFrame]) -> Entity
         dag.add("image_study", img_t.image_study, ["raw/image_study"])
     if "model_image" in raw:
         dag.add("model_image", img_t.model_image, ["raw/model_image", "initial_model"])
-        dag.add("images_json_agg", _images_json_adapter, ["model_image"])
+        dag.add("images_json_agg", img_t.model_images_json, ["model_image"])
 
     # HGNC gene-marker reference + exploded symbol side tables
     # (gene_marker_transformer_job.py:25-46)
@@ -642,7 +606,7 @@ def build_metadata_dag(spark: SparkSession, raw: dict[str, DataFrame]) -> Entity
                         "qa_json_agg", "specimens_json_agg", "images_json_agg"):
                 if agg in dag.nodes:
                     six_deps.append(agg)
-            dag.add("publications_json_agg", _publications_json_adapter,
+            dag.add("publications_json_agg", meta_t.publications_json,
                     ["initial_model"])
             six_deps.append("publications_json_agg")
             # molecular per-model aggregates (marker lists, msi, hla,
@@ -659,7 +623,7 @@ def build_metadata_dag(spark: SparkSession, raw: dict[str, DataFrame]) -> Entity
                     and "treatment_component_helper" in dag.nodes):
                 dag.add(
                     "custom_treatment_types",
-                    _custom_treatment_types_adapter,
+                    links_t.custom_treatment_types_per_model,
                     ["treatment_protocol", "treatment_component_helper",
                      "treatment_name_harmonisation", "term_ancestors"],
                 )
@@ -674,7 +638,7 @@ def build_metadata_dag(spark: SparkSession, raw: dict[str, DataFrame]) -> Entity
             dag.add("search_index", _search_index_adapter, six_deps)
             dag.add(
                 "search_facet",
-                _search_facet_adapter,
+                facets_t.search_facets,
                 ["search_index"],
                 needs_spark=True,
             )
@@ -727,15 +691,6 @@ def _resolve_molchar_model_ids(molchar, initial_model):
     )
 
 
-def _dataset_available_adapter(model_molchar):
-    """Per-model distinct molchar types with the reference's display
-    renames (model_metadata_transformer_job.py:219-231); the treatment /
-    publication markers are appended row-wise in search_index."""
-    from pdcm_etl_spark.transforms import metadata as meta_t
-
-    return meta_t.dataset_available(model_molchar)
-
-
 def _genes_per_model_adapter(out_col: str, symbol_col: str):
     """Sorted distinct marker list per model for one measurement type —
     feeds search_index and the models_by_mutated_gene view
@@ -749,30 +704,6 @@ def _genes_per_model_adapter(out_col: str, symbol_col: str):
     return build
 
 
-def _msi_adapter(imm_md, model_molchar):
-    from pdcm_etl_spark.transforms import molecular_data as md_t
-
-    return md_t.msi_status_per_model(imm_md, model_molchar)
-
-
-def _hla_adapter(imm_md, model_molchar):
-    from pdcm_etl_spark.transforms import molecular_data as md_t
-
-    return md_t.hla_types_per_model(imm_md, model_molchar)
-
-
-def _breast_biomarkers_adapter(bio_md, model_molchar):
-    from pdcm_etl_spark.transforms import molecular_data as md_t
-
-    return md_t.breast_cancer_biomarkers_per_model(bio_md, model_molchar)
-
-
-def _raw_data_resources_adapter(molchar, model_molchar):
-    from pdcm_etl_spark.transforms import links as links_t
-
-    return links_t.raw_data_resources_per_model(molchar, model_molchar)
-
-
 def _annotation_resources_adapter(n_measurements: int):
     def build(*dfs):
         from pdcm_etl_spark.transforms import links as links_t
@@ -784,38 +715,6 @@ def _annotation_resources_adapter(n_measurements: int):
         )
 
     return build
-
-
-def _qa_json_adapter(qa):
-    from pdcm_etl_spark.transforms import metadata as meta_t
-
-    return meta_t.quality_assurance_json(qa)
-
-
-def _specimens_json_adapter(sp, hs, es, et, est, ess):
-    from pdcm_etl_spark.transforms import metadata as meta_t
-
-    return meta_t.xenograft_specimens_json(sp, hs, es, et, est, ess)
-
-
-def _images_json_adapter(model_image):
-    from pdcm_etl_spark.transforms import images as img_t
-
-    return img_t.model_images_json(model_image)
-
-
-def _publications_json_adapter(initial_model):
-    from pdcm_etl_spark.transforms import metadata as meta_t
-
-    return meta_t.publications_json(initial_model)
-
-
-def _custom_treatment_types_adapter(protocol, helper, harmonisation, ancestors):
-    from pdcm_etl_spark.transforms import links as links_t
-
-    return links_t.custom_treatment_types_per_model(
-        protocol, helper, harmonisation, ancestors
-    )
 
 
 def _scores_adapter(model_metadata, six_ps):
@@ -901,34 +800,6 @@ def _measurement_slice_adapter(mod: str):
     return build
 
 
-def _measurement_adapter(raw_df, molchar, gene_marker=None, prev_syms=None,
-                         alias_syms=None):
-    """Measurement table builder; when the HGNC reference tables are
-    wired in, rows go through the 5-stage symbol-harmonisation cascade
-    first so the table carries hgnc_symbol / non_harmonised_symbol /
-    harmonisation_result (the columns every *_data_table view exposes,
-    views.sql:363-404)."""
-    from pdcm_etl_spark.transforms import molecular as mol_t
-    from pdcm_etl_spark.transforms import molecular_data as md_t
-
-    harmonised = None
-    if gene_marker is not None:
-        from pyspark.sql import functions as F
-
-        h_in = raw_df
-        # biomarker module names its gene column 'biomarker' and carries
-        # no stable ids — normalize so the cascade's later stages no-op
-        if "symbol" not in h_in.columns and "biomarker" in h_in.columns:
-            h_in = h_in.withColumn("symbol", F.col("biomarker"))
-        for id_col in ("ensembl_gene_id", "ncbi_gene_id"):
-            if id_col not in h_in.columns:
-                h_in = h_in.withColumn(id_col, F.lit(None).cast("string"))
-        harmonised = mol_t.harmonise_marker_symbols(
-            h_in, gene_marker, prev_syms, alias_syms
-        )
-    return md_t.measurement_data(raw_df, molchar, harmonised=harmonised)
-
-
 def _available_columns_adapter(mod_names: list[str]):
     def build(*dfs):
         from pdcm_etl_spark.transforms import profile as profile_t
@@ -936,12 +807,6 @@ def _available_columns_adapter(mod_names: list[str]):
         return profile_t.available_columns_all(dict(zip(mod_names, dfs)))
 
     return build
-
-
-def _search_facet_adapter(spark, search_index_df):
-    from pdcm_etl_spark.transforms import facets as facets_t
-
-    return facets_t.search_facets(spark, search_index_df)
 
 
 def _search_index_adapter(model, six_ps, provider_group, project_group, *aggs):

@@ -47,6 +47,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pdcm_etl_spark.operators.sharing import persistent_rdd_ids, release
 from pdcm_etl_spark.sources.tsv import PROVIDER_COL
 
 # (applicationId, sf_dir-hash, provider) -> base search_index parquet dir
@@ -65,27 +66,6 @@ def _filter_modules(
         name: df.filter(pred) if PROVIDER_COL in df.columns else df
         for name, df in raw.items()
     }
-
-
-def _persistent_rdd_ids(spark: SparkSession) -> set[int]:
-    ids: set[int] = set()
-    it = spark.sparkContext._jsc.sc().getPersistentRDDs().iterator()
-    while it.hasNext():
-        ids.add(it.next()._1())
-    return ids
-
-
-def _release_new_persistent_rdds(
-    spark: SparkSession, before: set[int]
-) -> None:
-    """Unpersist every RDD persisted since the ``before`` snapshot —
-    scoped release: blocks belonging to other live queries' memoized
-    frames (taken BEFORE the window) are untouched."""
-    it = spark.sparkContext._jsc.sc().getPersistentRDDs().iterator()
-    while it.hasNext():
-        e = it.next()
-        if e._1() not in before:
-            e._2().unpersist(False)
 
 
 def _base_six_dir(
@@ -116,7 +96,7 @@ def _base_six_dir(
     key = (app, digest, delta_provider)
     if key in _BASE_SIX:
         return _BASE_SIX[key]
-    rdds_before = _persistent_rdd_ids(spark)
+    rdds_before = persistent_rdd_ids(spark)
     base_raw = _filter_modules(
         raw, F.col(PROVIDER_COL) != delta_provider
     )
@@ -131,7 +111,7 @@ def _base_six_dir(
     six.write.mode("overwrite").partitionBy("data_source").parquet(out)
     # base is durable on disk now; its checkpoint blocks are dead weight
     # the delta DAG's own blocks would otherwise stack on top of
-    _release_new_persistent_rdds(spark, rdds_before)
+    release(spark, keep=rdds_before)
     _BASE_SIX[key] = out
     return out
 

@@ -16,7 +16,6 @@ those).
 
 from __future__ import annotations
 
-import gc
 import json
 import os
 import sys
@@ -24,19 +23,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-
-def release_blocks(spark) -> None:
-    gc.collect()
-    jsc = spark.sparkContext._jsc.sc()
-    it = jsc.getPersistentRDDs().iterator()
-    while it.hasNext():
-        it.next()._2().unpersist(False)
-    try:
-        spark.sparkContext._jvm.System.gc()
-    except Exception:
-        pass
-    spark.range(10).count()
-    time.sleep(0.5)
+from bench import release_blocks  # noqa: E402
 
 
 def main() -> None:

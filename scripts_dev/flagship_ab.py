@@ -29,6 +29,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import release_blocks  # noqa: E402
+
 
 def main() -> None:
     reps = int(sys.argv[1]) if len(sys.argv) > 1 else 7
@@ -45,18 +47,6 @@ def main() -> None:
 
     fn = entry.queries()["etl_search_index"]
 
-    def release() -> None:
-        jsc = spark.sparkContext._jsc.sc()
-        it = jsc.getPersistentRDDs().iterator()
-        while it.hasNext():
-            it.next()._2().unpersist(False)
-        try:
-            spark.sparkContext._jvm.System.gc()
-        except Exception:  # noqa: BLE001
-            pass
-        spark.range(10).count()
-        time.sleep(0.5)
-
     # bench-identical warmup: compile the flagship's codegen classes at
     # sf0.001 so the timed reps measure the engine, not class-loading
     warm_dir = "/root/testdata/sf0.001"
@@ -64,14 +54,14 @@ def main() -> None:
         warm_dir = sf_dir
     fn(spark, warm_dir).write.format("noop").mode("overwrite").save()
 
-    release()
+    release_blocks(spark)
     t0 = time.time()
     fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
     cold = round(time.time() - t0, 3)
 
     runs = []
     for i in range(reps):
-        release()
+        release_blocks(spark)
         t0 = time.time()
         df = fn(spark, sf_dir)
         build = time.time() - t0

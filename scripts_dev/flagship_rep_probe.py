@@ -18,7 +18,7 @@ import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from scripts_dev.profile_queries import release_blocks  # noqa: E402
+from bench import release_blocks  # noqa: E402
 
 
 def main() -> None:

@@ -24,6 +24,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import release_blocks  # noqa: E402
+
 # queries that ride the same minhash/LSH pair-graph candidate core
 _SHARED_CORE_QUERIES = {
     "dedup_groups",
@@ -104,24 +106,13 @@ def main() -> None:
                 if ln.strip() and "name" in json.loads(ln)
             }
 
-    def release() -> None:
-        jsc = spark.sparkContext._jsc.sc()
-        it = jsc.getPersistentRDDs().iterator()
-        while it.hasNext():
-            it.next()._2().unpersist(False)
-        try:
-            spark.sparkContext._jvm.System.gc()
-        except Exception:  # noqa: BLE001
-            pass
-
     for i, name in enumerate(names):
         if name not in qs:
             print(f"skip unknown query {name}")
             continue
         if name in done:
             continue
-        release()
-        spark.range(10).count()
+        release_blocks(spark)
         group = f"mem-{name}"
         spark.sparkContext.setJobGroup(group, name, True)
         timer = threading.Timer(

@@ -16,7 +16,6 @@ plan to <plans-dir>/<query>_<tag>.txt.
 from __future__ import annotations
 
 import contextlib
-import gc
 import io
 import json
 import os
@@ -26,19 +25,7 @@ import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-
-def release_blocks(spark) -> None:
-    gc.collect()
-    jsc = spark.sparkContext._jsc.sc()
-    it = jsc.getPersistentRDDs().iterator()
-    while it.hasNext():
-        it.next()._2().unpersist(False)
-    try:
-        spark.sparkContext._jvm.System.gc()
-    except Exception:
-        pass
-    spark.range(10).count()
-    time.sleep(0.5)
+from bench import release_blocks  # noqa: E402
 
 
 def _rest(spark, path: str):

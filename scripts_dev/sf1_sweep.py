@@ -26,6 +26,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import release_blocks  # noqa: E402
+
 EXCLUDED = {
     "dedup_recall": (
         "truth side pair-quadratic; replicated-stress lake squares dup "
@@ -61,16 +63,6 @@ def main() -> None:
         with open(out) as fh:
             done = {json.loads(ln)["name"] for ln in fh if ln.strip()}
 
-    def release() -> None:
-        jsc = spark.sparkContext._jsc.sc()
-        it = jsc.getPersistentRDDs().iterator()
-        while it.hasNext():
-            it.next()._2().unpersist(False)
-        try:
-            spark.sparkContext._jvm.System.gc()
-        except Exception:  # noqa: BLE001
-            pass
-
     names = sorted(qs)
     for i, name in enumerate(names):
         if only is not None and name not in only:
@@ -81,8 +73,7 @@ def main() -> None:
             rec = {"name": name, "status": "EXCLUDED",
                    "reason": EXCLUDED[name]}
         else:
-            release()
-            spark.range(10).count()
+            release_blocks(spark)
             group = f"sweep-{name}"
             spark.sparkContext.setJobGroup(group, name, True)
             timer = threading.Timer(

@@ -59,6 +59,8 @@ sys.path.insert(
     ),
 )
 
+from bench import release_blocks  # noqa: E402
+
 SF01 = "/root/testdata/sf0.1"
 
 # ---------------------------------------------------------------------------
@@ -494,16 +496,6 @@ def main() -> None:
         with open(out, "a") as fh:
             fh.write(json.dumps(rec) + "\n")
 
-    def release() -> None:
-        jsc = spark.sparkContext._jsc.sc()
-        it = jsc.getPersistentRDDs().iterator()
-        while it.hasNext():
-            it.next()._2().unpersist(False)
-        try:
-            spark.sparkContext._jvm.System.gc()
-        except Exception:  # noqa: BLE001
-            pass
-
     # -- method: oracle ---------------------------------------------------
     for name in oracle_set:
         if name in done:
@@ -538,7 +530,7 @@ def main() -> None:
                 "issues": [f"EXC {type(exc).__name__}: {exc}"[:300]],
                 "wall_sec": round(time.time() - t0, 1),
             })
-        release()
+        release_blocks(spark)
 
     # -- method: invariant (dedup_prefix_filter replica lift) -------------
     if rnd == 10 and "dedup_prefix_filter" not in done:
@@ -553,7 +545,7 @@ def main() -> None:
             ).count()
             expected = 100 * n01 + 45 * n3
             h1 = frame_hash(qs["dedup_prefix_filter"](spark, sf1))
-            release()
+            release_blocks(spark)
             h2 = frame_hash(qs["dedup_prefix_filter"](spark, sf1))
             ok = (h1 == h2) and (h1[1] == expected)
             emit({
@@ -574,7 +566,7 @@ def main() -> None:
                 "issues": [f"EXC {type(exc).__name__}: {exc}"[:300]],
                 "wall_sec": round(time.time() - t0, 1),
             })
-        release()
+        release_blocks(spark)
 
     # -- method: determinism double-run ------------------------------------
     for name, reason in det_set.items():
@@ -583,7 +575,7 @@ def main() -> None:
         t0 = time.time()
         try:
             h1 = frame_hash(qs[name](spark, sf1))
-            release()
+            release_blocks(spark)
             h2 = frame_hash(qs[name](spark, sf1))
             emit({
                 "name": name, "method": "determinism_2run",
@@ -599,7 +591,7 @@ def main() -> None:
                 "issues": [f"EXC {type(exc).__name__}: {exc}"[:300]],
                 "wall_sec": round(time.time() - t0, 1),
             })
-        release()
+        release_blocks(spark)
 
     # -- at-scale committed VALUE rows (sampled recall family) -------------
     # bounded outputs (1 row scalar / ≤5 band rows); the committed

@@ -10,6 +10,10 @@ def test_bench_line_fits_driver_tail_budget():
     import bench
 
     timings = {f"query_with_a_long_name_{i:03d}": 123.456 for i in range(240)}
+    # the longest error a failed split can carry
+    error = bench._first_line(
+        RuntimeError("flagship failed: " + "x" * 500 + "\nsecond line")
+    )
     line = bench.format_bench_line(
         timings,
         0.1,
@@ -19,6 +23,7 @@ def test_bench_line_fits_driver_tail_budget():
             "flagship_warm_exec_sec": 14.321,
             "flagship_budget_sec": 25.0,
             "flagship_budget_breach": False,
+            "flagship_error": error,
         },
     )
     assert len(line) < 1900
@@ -32,6 +37,10 @@ def test_bench_line_fits_driver_tail_budget():
     # driver parses — stderr warnings are lost to the stdout tail
     assert parsed["flagship_budget_breach"] is False
     assert parsed["flagship_budget_sec"] == 25.0
+    # a failed split is recorded, not swallowed, and stays one short line
+    assert parsed["flagship_error"] == error
+    assert error.startswith("RuntimeError: flagship failed: ")
+    assert "second line" not in error
 
 
 def test_bench_line_small_registry_keeps_everything():

@@ -41,3 +41,83 @@ def test_dag_and_operators_share_the_same_way(spark, monkeypatch, mode):
     finally:
         for df in frames.values():
             df.unpersist()
+
+
+def _checkpointed(dag) -> set[str]:
+    return {
+        n for n, df in dag._results.items()
+        if n in dag.nodes and _is_checkpoint(df)
+    }
+
+
+def test_get_and_run_share_the_same_nodes(spark, monkeypatch):
+    """``get`` is ``run`` with one target: both count a node's consumers
+    inside the requested cone only, so they checkpoint the same nodes."""
+    from pdcm_etl_spark.plans.dag import build_metadata_dag
+
+    monkeypatch.delenv("SPARK_GRAFT_SHARE_INTERMEDIATES", raising=False)
+    by_get = build_metadata_dag(spark, fixtures.metadata_fixture(spark))
+    by_get.get("model")
+    by_run = build_metadata_dag(spark, fixtures.metadata_fixture(spark))
+    by_run.run(targets=["model"])
+    assert set(by_get._results) == set(by_run._results)
+    assert _checkpointed(by_get) == _checkpointed(by_run)
+
+
+def test_single_module_harmonisation_matches_per_module_cascade(
+    spark, monkeypatch
+):
+    """With ``markers`` and ONE harmonisable module the measurement table
+    still goes through the shared cascade node: its rows and ids equal
+    the cascade applied to that module alone, and the cascade is shared
+    because the consumers of its cheap slice are counted."""
+    from pdcm_etl_spark.plans.dag import _harmonise_input, build_metadata_dag
+    from pdcm_etl_spark.transforms import molecular as mol_t
+    from pdcm_etl_spark.transforms import molecular_data as md_t
+
+    monkeypatch.delenv("SPARK_GRAFT_SHARE_INTERMEDIATES", raising=False)
+    raw = fixtures.metadata_fixture(spark)
+    mk = fixtures.make_module_df
+    raw["molchar_sample"] = mk(spark, "molchar_sample", [
+        dict(model_id="M1", sample_id="MS1", sample_origin="patient",
+             passage="0", platform_id="pl1", data_source_tmp="TRACE"),
+    ])
+    raw["molchar_platform"] = mk(spark, "molchar_platform", [
+        dict(platform_id="pl1", molecular_characterisation_type="mutation",
+             instrument_model="Illumina", library_strategy="WGS",
+             data_source_tmp="TRACE"),
+    ])
+    raw["mutation"] = mk(spark, "mutation", [
+        dict(sample_id="MS1", symbol="KRAS", chromosome="12",
+             read_depth="40", platform_id="pl1", data_source_tmp="TRACE"),
+        dict(sample_id="MS1", symbol="KRAS2", chromosome="12",
+             read_depth="7", platform_id="pl1", data_source_tmp="TRACE"),
+        dict(sample_id="MS1", symbol="TP53", chromosome="17",
+             read_depth=None, platform_id="pl1", data_source_tmp="TRACE"),
+    ])
+    raw["markers"] = mk(spark, "markers", [
+        dict(hgnc_id="HGNC:6407", approved_symbol="KRAS", status="Approved",
+             previous_symbols="KRAS2", alias_symbols="K-ras, Ki-ras",
+             ensembl_gene_id="ENSG00000133703", ncbi_gene_id="3845",
+             data_source_tmp="AUX"),
+    ])
+
+    dag = build_metadata_dag(spark, raw)
+    out = dag.run()
+    got = out["mutation_measurement_data"]
+    want = md_t.measurement_data(
+        raw["mutation"],
+        out["molecular_characterization"],
+        harmonised=mol_t.harmonise_marker_symbols(
+            _harmonise_input(raw["mutation"]),
+            out["gene_marker"],
+            out["gene_marker_previous_symbols"],
+            out["gene_marker_alias_symbols"],
+        ),
+    )
+    assert got.columns == want.columns
+    assert sorted(map(tuple, got.collect()), key=repr) == sorted(
+        map(tuple, want.collect()), key=repr
+    )
+    assert got.count() == 3
+    assert _is_checkpoint(out["harmonised_measurements"])
