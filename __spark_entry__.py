@@ -181,9 +181,7 @@ _PRIORITY: list[str] = [
     "dedup_containment",
     "dedup_paragraph",
     "grouped_topk",
-    "etl_search_index_spine",
     "dedup_edit_distance",
-    "etl_search_index_wide",
 ]
 
 

@@ -1,6 +1,6 @@
 #!/usr/bin/env python
-"""Benchmark harness — runs the headline operator queries end-to-end and
-prints ONE JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
+"""Benchmark harness — runs every registry query end-to-end and prints
+ONE JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 "queries": {name: sec}, "sf": ...}.
 
 Each query is forced with the noop sink (full computation, no driver
@@ -16,257 +16,6 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-
-HEADLINE = [
-    "etl_search_index",  # the flagship: full entity DAG -> 67-col search_index
-    # (round-1 comparison note: r01's flagship projected only the 17-col
-    # spine; the full-width index adds the 5 measurement modules + 16
-    # per-model aggregates, so flagship seconds are not like-for-like)
-    "pricing_summary",
-    "filter_project",
-    "join_left_fk",
-    "join_multi_key",
-    "join_full_outer",
-    "correlated_count",
-    "harmonisation_cascade",
-    "sorted_list_per_group",
-    "window_latest",
-    "collect_set_markers",
-    "explode_group_count",
-    "events_daily",
-    "recursive_closure",
-    "dedup_exact",
-    "dedup_ngram_jaccard",
-    "dedup_minhash_lsh",
-    "dedup_groups",
-    "dedup_semantic",
-    "asof_join",
-    "range_join",
-    "scd2_merge",
-    "session_window",
-    "sample_stratified",
-    "corpus_curation",
-    "ann_cosine_topk",
-    "ann_ivf_trained_topk",
-    "kmeans_assign",
-    "text_quality",
-    "text_langid",
-    "text_tfidf",
-    "text_contamination",
-    "text_repetition",
-    "text_chunk",
-    "ngram_topk",
-    "pack_sequences",
-    "shuffle_shards",
-    "quality_percentile",
-    "multimodal_meta",
-    # round-4 additions (round-3 verdict item 7): every registry family
-    # has timing history — streaming drains + the Arrow multimodal ops
-    "stream_events_daily",
-    "stream_events_sliding",
-    "stream_dedup",
-    "stream_scd2_upsert",
-    "multimodal_decode",
-    "multimodal_frames",
-    "dedup_paragraph",
-    "sample_domain_mix",
-    "bpe_pair_counts",
-    "bpe_train",
-    "bpe_encode",
-    "unigram_lm_score",
-    "inverted_index",
-    "stump_train",
-    "zorder_layout",
-    "pagerank",
-    "funnel_stages",
-    "cohort_retention",
-    "dedup_edit_distance",
-    "triangle_count",
-    "itemset_pairs",
-    "timeseries_gapfill",
-    "anomaly_iqr",
-    "dedup_containment",
-    "pareto_frontier",
-    "bucket_cojoin",
-    "sessionize_batch",
-    "ivm_merge",
-    "bloom_prune_join",
-    "grouped_topk",
-    "multimodal_dedup",
-    "corpus_language_mix",
-    # round-5 additions: star components + large-k kmeans + sketches +
-    # trailing window / interval overlap / skew diagnostics
-    "dedup_groups_star",
-    "kmeans_assign_bcast",
-    "heavy_hitters",
-    "approx_quantile",
-    "rolling_window",
-    "interval_overlap_join",
-    "key_skew_profile",
-    "partition_prune",
-    "dedup_winnow",
-    "dedup_prefix_filter",
-    "token_budget_select",
-    "snapshot_diff",
-    "sorted_neighborhood",
-    "multimodal_audio",
-    "assoc_rules",
-    "event_transitions",
-    "table_stats",
-    "twap",
-    "crosstab_lift",
-    "kcore",
-    "stream_windowed_topk",
-    "anomaly_mad",
-    "percentile_rank",
-    "target_encode",
-    "robust_scale",
-    "spearman_corr",
-    # round-6 additions: statistical analytics + DQ + BFS + LISTAGG +
-    # weighted sampling
-    "linreg_group",
-    "chi_square_assoc",
-    "benford_profile",
-    "entropy_profile",
-    "gini_concentration",
-    "dq_check",
-    "bfs_distance",
-    "string_agg_ordered",
-    "sample_weighted",
-    "bigram_lm_score",
-    "quantile_normalize",
-    "er_score_pairs",
-    "dedup_recall",
-    "stream_dq_monitor",
-    "sample_weighted_grouped",
-    "join_cardinality_estimate",
-    "stream_static_join",
-    "grouped_quantiles",
-    "event_path_topk",
-    "grouped_moments",
-    # round-7 additions: persisted-index ANN serving, winsorization,
-    # link prediction, session attribution
-    "ann_ivf_persisted",
-    "ann_ivf_delta_append",
-    "winsorize_group",
-    "link_predict_cn",
-    "attribution_touch",
-    "stream_left_outer_join",
-    "distribution_drift",
-    "quantile_bin",
-    "trimmed_mean_group",
-    "funnel_time_to_convert",
-    "ks_drift",
-    "grouped_auc",
-    # round-8 additions: incremental flagship, multi-touch attribution,
-    # gains/lift, chi-square drift decomposition, n-gram novelty,
-    # rank fusion
-    "etl_search_index_incremental",
-    "attribution_position",
-    "grouped_gain_curve",
-    "chisq_drift",
-    "ngram_novelty",
-    "rrf_fusion",
-    # round-8 session-2: weighted/seasonal rank kit, growth accounting,
-    # collocation mining, split-leakage audit
-    "weighted_median_group",
-    "concentration_topn",
-    "seasonal_anomaly",
-    "user_accumulation",
-    "bigram_pmi_topk",
-    "split_leakage_audit",
-    # round-8 session-3: deterministic mode, FK integrity audit,
-    # source vocabulary overlap, Heaps growth curve, churn accounting
-    "mode_group",
-    "fk_orphan_audit",
-    "source_token_overlap",
-    "vocab_accumulation",
-    "churn_summary",
-    # round-8 session-4: language confusion, dup-cluster histogram,
-    # class balancing, survivorship merge, decile migration
-    "lang_confusion",
-    "dup_cluster_histogram",
-    "balanced_downsample",
-    "golden_record_merge",
-    "decile_migration",
-    # round-9 additions: curation audits, spectra, cadence/kfold/embedding
-    # profiles
-    "label_noise_audit",
-    "dup_rate_by_source",
-    "token_frequency_spectrum",
-    "char_class_profile",
-    "rare_category_collapse",
-    "interarrival_profile",
-    "stratified_kfold_assign",
-    "degree_histogram",
-    "embedding_norm_profile",
-    "pit_tier_enrich",
-    "rfm_segments",
-    "label_distinctive_terms",
-    "freshness_audit",
-    "audience_overlap",
-    "revenue_retention",
-    "activity_streaks",
-    "json_key_profile",
-    "nzv_audit",
-    "out_of_orderness_profile",
-    "snapshot_field_churn",
-    # round-9 (verdict ask 7): the remaining registry queries — mostly
-    # sub-second micro-ops, folded in so every registry row (220 as of
-    # r9; the list below is additive each round) has a round-over-round
-    # sf0.1 anchor in BENCH_FULL.json (the printed line still truncates
-    # slowest-first to the driver's tail budget)
-    "ann_ivf_topk",
-    "ann_lsh_topk",
-    "ann_recall",
-    "approx_distinct",
-    "array_equality_group",
-    "case_buckets",
-    "conditional_agg",
-    "cube_counts",
-    "date_arithmetic",
-    "dedup_embedding",
-    "dedup_keeper_quality",
-    "dedup_minhash_incremental",
-    "dedup_simhash",
-    "etl_search_index_spine",
-    "etl_search_index_wide",
-    "exact_percentile",
-    "except_keys",
-    "fk_dim_dense_id",
-    "global_agg",
-    "grouping_sets",
-    "intersect_keys",
-    "join_anti",
-    "join_nullsafe",
-    "join_salted_skew",
-    "join_semi",
-    "join_theta_rewrite",
-    "json_agg_struct",
-    "json_build",
-    "json_extract",
-    "multimodal_resize",
-    "pivot_status",
-    "posexplode_split",
-    "profile_histogram",
-    "profile_notnull",
-    "regexp_extract",
-    "rollup_totals",
-    "split_part",
-    "stream_sessionize",
-    "stream_stream_join",
-    "string_clean",
-    "string_kit",
-    "text_fingerprint",
-    "text_pii_scrub",
-    "text_tokens",
-    "topk",
-    "union_distinct",
-    "unpivot_metrics",
-    "window_lag_delta",
-    "window_ntile",
-]
-
 
 def release_blocks(spark) -> None:
     """Drop every checkpointed / persisted RDD and force a driver-JVM GC
@@ -300,16 +49,11 @@ def main() -> None:
     spark = get_spark("pdcm-etl-spark-bench")
     import __spark_entry__ as entrymod
 
+    # the whole registry, in registry order (the flagship first)
     queries = entrymod.queries()
 
-    # round-10: auto-fold registry queries missing from the manual list
-    # so BENCH_FULL always covers the WHOLE registry — the list used to
-    # need a hand-append every round and drifted (r10 shipped 224
-    # queries while the list held 220)
-    HEADLINE.extend(sorted(set(queries) - set(HEADLINE)))
-
     # JVM/codegen warmup so timings measure the engine, not first-job
-    # class-loading: JMH-style — run every headline query once at the
+    # class-loading: JMH-style — run every registry query once at the
     # smallest scale factor (sf0.001) before the timed loop. Whole-stage
     # codegen keys on generated source, so the sf0.001 run compiles the
     # same janino classes the timed sf run reuses (measured: flagship
@@ -326,10 +70,7 @@ def main() -> None:
     # a query failing at warm scale still gets timed below; the failure
     # is recorded in BENCH_FULL.json
     warmup_errors: dict[str, str] = {}
-    for name in HEADLINE:
-        fn = queries.get(name)
-        if fn is None:
-            continue
+    for name, fn in queries.items():
         try:
             fn(spark, warm_dir).write.format("noop").mode("overwrite").save()
         except Exception as e:  # noqa: BLE001
@@ -402,10 +143,7 @@ def main() -> None:
     reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3"))
 
     timings: dict[str, float] = {}
-    for name in HEADLINE:
-        fn = queries.get(name)
-        if fn is None:
-            continue
+    for name, fn in queries.items():
         runs: list[float] = []
         for _ in range(reps):
             # drop refs to the previous run's checkpointed/persisted RDDs

@@ -432,135 +432,10 @@ def q_etl_search_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_etl_search_index(spark, sf_dir)
 
 
-def q_etl_search_index_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Round-3 wide flagship oracle (round-2 verdict item 1): the full
-    metadata DAG projected onto EVERY search_index column except the
-    portable internal id — 66 of 67 columns hash-checked against a
-    pure-SQL DuckDB re-derivation. Beyond the 16-column spine this pins
-    the JSON aggregates (quality_assurance, xenograft_model_specimens,
-    model_images, pdx_model_publications, scores), the per-model marker
-    lists for all four measurement types, breast-cancer biomarkers,
-    MSI/HLA, raw-data/annotation resources, patient+model treatment and
-    response lists, the custom treatment-type classifier, licenses, and
-    the supplier/rrid passthroughs (ref entities_registry.py:621-692)."""
-    from pdcm_etl_spark.plans.synth import (
-        SEARCH_INDEX_COLUMNS,
-        run_etl_search_index,
-    )
-
-    cols = [c for c in SEARCH_INDEX_COLUMNS if c != "pdcm_model_id"]
-    return run_etl_search_index(spark, sf_dir, columns=cols)
-
-
-def q_etl_search_index_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hash-checked flagship twin: the same full metadata DAG, projected
-    onto the search_index spine (16 deterministic columns — everything in
-    SEARCH_INDEX_CORE_COLUMNS except the internal id, which since round 4
-    is ALSO oracle-checked (portable md5 hash) via etl_search_index; no
-    other engine can reproduce). The DuckDB oracle re-derives every value
-    from the synth workload's key arithmetic (plans/synth.py) composed
-    with the pipeline semantics: ontology mapping + Neoplasm→Cancer
-    rename, age binning, sex/ethnicity normalization, dataset_available
-    display renames + availability-marker appends, treatment component
-    splitting, and the per-model marker set."""
-    from pdcm_etl_spark.plans.synth import (
-        SEARCH_INDEX_CORE_COLUMNS,
-        run_etl_search_index,
-    )
-
-    cols = [c for c in SEARCH_INDEX_CORE_COLUMNS if c != "pdcm_model_id"]
-    return run_etl_search_index(spark, sf_dir, columns=cols)
-
-
-SQL_ETL_SEARCH_INDEX_SPINE = """
-WITH prov AS (
-  SELECT n_nationkey, n_name, r_name AS provider_name,
-         replace(r_name, ' ', '_') AS prov
-  FROM nation JOIN region ON n_regionkey = r_regionkey
-), cust AS (
-  -- ethnicity dim init-caps the lowered nation name (functions/cleaner
-  -- init_cap_and_trim_all): first letter upper, rest as lowered
-  SELECT c_custkey, p.provider_name, p.prov,
-         upper(substr(lower(p.n_name), 1, 1)) || substr(lower(p.n_name), 2)
-           AS ethnicity,
-         CASE WHEN c_custkey % 2 = 0 THEN 'female' ELSE 'male' END AS patient_sex
-  FROM customer JOIN prov p ON c_nationkey = p.n_nationkey
-), o AS (
-  SELECT o_orderkey AS ok, o_custkey AS ck,
-         c.prov, c.provider_name, c.patient_sex, c.ethnicity
-  FROM orders JOIN cust c ON o_custkey = c.c_custkey
-), li AS (
-  SELECT l_orderkey AS ok, CAST(l_linenumber AS INTEGER) AS ln,
-         CAST(l_partkey AS BIGINT) AS pk
-  FROM lineitem
-), muts AS (
-  SELECT ok,
-         array_to_string(list_sort(list_distinct(list('GENE' || (pk % 2000)))), '|')
-           AS markers
-  FROM li GROUP BY ok
-), dosing AS (
-  -- drug_dosing: line 1 of pdx orders; every 3rd order is a 2-drug combo
-  -- split into components by the treatment_component_helper
-  SELECT ok,
-         list_sort(list_distinct(flatten(list(
-           CASE WHEN ok % 3 = 0
-                THEN ['drug ' || (pk % 50), 'drug ' || ((pk + 1) % 50)]
-                ELSE ['drug ' || (pk % 50)] END)))) AS mt
-  FROM li WHERE ln = 1 AND ok % 10 != 0 GROUP BY ok
-), pt AS (
-  -- patient-target protocols key on the PATIENT and attach to every
-  -- model of that patient (ref views.sql:1218-1230 / treatment_protocol):
-  -- a model shows 'patient treatment' iff its customer has any order
-  -- with a 2nd lineitem
-  SELECT o2.o_custkey AS ck,
-         list_sort(list_distinct(list('drug ' || (li.pk % 50)))) AS ptl
-  FROM orders o2 JOIN li ON li.ok = o2.o_orderkey AND li.ln = 2
-  GROUP BY o2.o_custkey
-)
-SELECT
-  CASE WHEN o.ok % 10 = 0 THEN 'C' || o.ok ELSE 'M' || o.ok END AS external_model_id,
-  o.prov AS data_source,
-  CASE WHEN o.ok % 10 = 0 THEN
-    CASE o.ok % 3 WHEN 0 THEN 'cell line' WHEN 1 THEN 'organoid' ELSE 'other' END
-  ELSE 'PDX' END AS model_type,
-  o.provider_name AS provider_name,
-  'SYNTH' AS project_name,
-  'Diagnosis ' || (o.ok % 97) || ' Cancer' AS histology,
-  'Unclassified' AS cancer_system,
-  'site' || ((o.ok % 97) % 20) AS primary_site,
-  'site' || (((o.ok % 97) + 1) % 20) AS collection_site,
-  CASE WHEN o.ok % 2 = 0 THEN 'Primary' ELSE 'Metastatic' END AS tumour_type,
-  (((20 + o.ok % 65) - 1) // 10) * 10 || ' - '
-    || ((((20 + o.ok % 65) - 1) // 10) * 10 + 9) AS patient_age,
-  o.patient_sex AS patient_sex,
-  o.ethnicity AS patient_ethnicity,
-  array_to_string(
-    list_sort(
-      ['mutation']
-      || CASE WHEN o.ok % 3 = 0 THEN ['expression'] ELSE []::VARCHAR[] END
-      || CASE WHEN o.ok % 4 = 0 THEN ['copy number alteration'] ELSE []::VARCHAR[] END
-      || CASE WHEN o.ok % 5 = 0 THEN ['immune markers'] ELSE []::VARCHAR[] END
-      || CASE WHEN o.ok % 6 = 0 THEN ['bio markers'] ELSE []::VARCHAR[] END)
-    || CASE WHEN dosing.mt IS NOT NULL AND len(dosing.mt) > 0
-            THEN ['model treatment'] ELSE []::VARCHAR[] END
-    || CASE WHEN pt.ptl IS NOT NULL AND len(pt.ptl) > 0
-            THEN ['patient treatment'] ELSE []::VARCHAR[] END
-    || CASE WHEN o.ok % 5 = 0 THEN ['publication'] ELSE []::VARCHAR[] END,
-    '|') AS dataset_available,
-  array_to_string(dosing.mt, '|') AS model_treatments,
-  -- every model has a pl_mut molchar, so the pipeline's left join always
-  -- yields an array (empty when the order has no lineitems) → ''
-  COALESCE(muts.markers, '') AS markers_with_mutation_data
-FROM o
-LEFT JOIN muts USING (ok)
-LEFT JOIN dosing USING (ok)
-LEFT JOIN pt ON pt.ck = o.ck
-"""
-
-
-# Wide-flagship oracle: every search_index column except the portable
-# internal id, re-derived in pure SQL from the synth workload's key
-# arithmetic (plans/synth.py) composed with the pipeline semantics.
+# Body of the etl_search_index oracle (_sql_etl_search_index_full): every
+# search_index column except the portable internal id, re-derived in pure
+# SQL from the synth workload's key arithmetic (plans/synth.py) composed
+# with the pipeline semantics.
 # Display strings produced by initcap-style cleaners are hardcoded
 # (Spark initcap capitalizes every word); JSON aggregate columns are
 # re-built as literal to_json output (sorted single-element arrays).
@@ -570,6 +445,8 @@ WITH prov AS (
          replace(r_name, ' ', '_') AS prov
   FROM nation JOIN region ON n_regionkey = r_regionkey
 ), cust AS (
+  -- ethnicity dim init-caps the lowered nation name (functions/cleaner
+  -- init_cap_and_trim_all): first letter upper, rest as lowered
   SELECT c_custkey, p.provider_name, p.prov,
          upper(substr(lower(p.n_name), 1, 1)) || substr(lower(p.n_name), 2)
            AS ethnicity,
@@ -617,6 +494,8 @@ WITH prov AS (
          )))) AS res
   FROM li GROUP BY ok
 ), dosing AS (
+  -- drug_dosing: line 1 of pdx orders; every 3rd order is a 2-drug combo
+  -- split into components by the treatment_component_helper
   SELECT ok,
          list_sort(list_distinct(flatten(list(
            CASE WHEN ok % 3 = 0
@@ -639,6 +518,10 @@ WITH prov AS (
            END)))) AS ttypes
   FROM li WHERE ln = 1 AND ok % 10 != 0 GROUP BY ok
 ), pt AS (
+  -- patient-target protocols key on the PATIENT and attach to every
+  -- model of that patient (ref views.sql:1218-1230 / treatment_protocol):
+  -- a model shows 'patient treatment' iff its customer has any order
+  -- with a 2nd lineitem
   SELECT o2.o_custkey AS ck,
          list_sort(list_distinct(list('drug ' || (li.pk % 50)))) AS ptl,
          array_to_string(list_sort(list_distinct(list(
@@ -750,6 +633,8 @@ SELECT
     || '","magnification":"20x","staining":"H&E"}]' END AS model_images,
   CASE WHEN o.ok % 4 = 0 THEN COALESCE(muts.markers, '') ELSE '' END
     AS markers_with_cna_data,
+  -- every model has a pl_mut molchar, so the pipeline's left join always
+  -- yields an array (empty when the order has no lineitems) → ''
   COALESCE(muts.markers, '') AS markers_with_mutation_data,
   CASE WHEN o.ok % 3 = 0 THEN COALESCE(muts.markers, '') ELSE '' END
     AS markers_with_expression_data,
@@ -810,8 +695,6 @@ def _sql_etl_search_index_full() -> str:
 
 EXTRA_CATALOG: dict[str, tuple] = {
     "etl_search_index": (q_etl_search_index, _sql_etl_search_index_full()),
-    "etl_search_index_wide": (q_etl_search_index_wide, SQL_ETL_SEARCH_INDEX_WIDE),
-    "etl_search_index_spine": (q_etl_search_index_spine, SQL_ETL_SEARCH_INDEX_SPINE),
     "join_salted_skew": (q_join_salted_skew, SQL_JOIN_SALTED_SKEW),
     "window_lag_delta": (q_window_lag_delta, SQL_WINDOW_LAG_DELTA),
     "grouping_sets": (q_grouping_sets, SQL_GROUPING_SETS),

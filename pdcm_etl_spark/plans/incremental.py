@@ -73,7 +73,6 @@ def _base_six_dir(
     sf_dir: str,
     raw: dict[str, DataFrame],
     delta_provider: str,
-    columns: list[str],
 ) -> str:
     """Materialize (once per session) the BASE run: the full metadata
     DAG over every provider EXCEPT the delta one, written as parquet
@@ -101,9 +100,7 @@ def _base_six_dir(
         raw, F.col(PROVIDER_COL) != delta_provider
     )
     dag = build_metadata_dag(spark, base_raw)
-    six = _project_columns(
-        dag.run(targets=["search_index"])["search_index"], columns
-    )
+    six = _project_columns(dag.run(targets=["search_index"])["search_index"])
     out = os.path.join(
         tempfile.gettempdir(), f"pdcm_base_six_{app}_{digest}"
     )
@@ -120,7 +117,6 @@ def run_etl_search_index_incremental(
     spark: SparkSession,
     sf_dir: str,
     delta_provider: str = "EUROPE",
-    columns: list[str] | None = None,
 ) -> DataFrame:
     """The flagship, recomputed delta-aware: the base run's
     search_index (all providers but ``delta_provider``, served from its
@@ -143,9 +139,8 @@ def run_etl_search_index_incremental(
         synthesize_provider_modules,
     )
 
-    cols = columns or SEARCH_INDEX_COLUMNS
     raw = synthesize_provider_modules(spark, sf_dir)
-    base_dir = _base_six_dir(spark, sf_dir, raw, delta_provider, cols)
+    base_dir = _base_six_dir(spark, sf_dir, raw, delta_provider)
 
     # rows tagged with a provider NOT in the source registry are shared
     # configuration (e.g. the annotation-resource catalog, tagged
@@ -162,7 +157,7 @@ def run_etl_search_index_incremental(
     )
     ddag = build_metadata_dag(spark, delta_raw)
     delta_six = _project_columns(
-        ddag.run(targets=["search_index"])["search_index"], cols
+        ddag.run(targets=["search_index"])["search_index"]
     )
 
     # partition-pruned drop of the (possibly re-shipped) provider, then
@@ -171,6 +166,6 @@ def run_etl_search_index_incremental(
     base = (
         spark.read.parquet(base_dir)
         .filter(F.col("data_source") != delta_provider)
-        .select(*cols)
+        .select(*SEARCH_INDEX_COLUMNS)
     )
     return base.unionByName(delta_six)

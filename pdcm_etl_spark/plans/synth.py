@@ -647,28 +647,19 @@ SEARCH_INDEX_COLUMNS = [
     "model_availability", "date_submitted", "scores",
 ]
 
-# the 17-column spine (hash-checked against a pure-SQL DuckDB oracle via
-# the etl_search_index_spine catalog query)
-SEARCH_INDEX_CORE_COLUMNS = [
-    "pdcm_model_id", "external_model_id", "data_source", "model_type",
-    "provider_name", "project_name", "histology", "cancer_system",
-    "primary_site", "collection_site", "tumour_type", "patient_age",
-    "patient_sex", "patient_ethnicity", "dataset_available",
-    "model_treatments", "markers_with_mutation_data",
-]
 
-
-def _project_columns(six: DataFrame, columns: list[str]) -> DataFrame:
-    """Fixed-list projection with array serialization: arrays are
-    '|'-joined (sorted upstream) — the reference flattens these to
-    `{a,b}` literals at export the same way; the string form also keeps
-    the driver canonicalizer hash-stable. Missing columns → null strings
-    (the reference's left-join chain yields NULL there too)."""
+def _project_columns(six: DataFrame) -> DataFrame:
+    """Projection onto SEARCH_INDEX_COLUMNS with array serialization:
+    arrays are '|'-joined (sorted upstream) — the reference flattens
+    these to `{a,b}` literals at export the same way; the string form
+    also keeps the driver canonicalizer hash-stable. Missing columns →
+    null strings (the reference's left-join chain yields NULL there
+    too)."""
     from pyspark.sql.types import ArrayType
 
     array_cols = {f.name for f in six.schema.fields if isinstance(f.dataType, ArrayType)}
     cols = []
-    for c in columns:
+    for c in SEARCH_INDEX_COLUMNS:
         if c not in six.columns:
             cols.append(F.lit(None).cast("string").alias(c))
         elif c in array_cols:
@@ -678,9 +669,7 @@ def _project_columns(six: DataFrame, columns: list[str]) -> DataFrame:
     return six.select(*cols)
 
 
-def run_etl_search_index(
-    spark: SparkSession, sf_dir: str, columns: list[str] | None = None
-) -> DataFrame:
+def run_etl_search_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The flagship query: full metadata DAG over the synthetic provider
     workload, returning the denormalized search_index with the
     reference's full declared column list."""
@@ -689,4 +678,4 @@ def run_etl_search_index(
     raw = synthesize_provider_modules(spark, sf_dir)
     dag = build_metadata_dag(spark, raw)
     out = dag.run(targets=["search_index"])
-    return _project_columns(out["search_index"], columns or SEARCH_INDEX_COLUMNS)
+    return _project_columns(out["search_index"])

@@ -520,11 +520,11 @@ def _registered(spark: SparkSession, name: str) -> bool:
     return any(t.name == name for t in spark.catalog.listTables())
 
 
-def _mmm_sql(spark: SparkSession) -> str | None:
-    """model_molecular_metadata (views.sql:406-446): molchar metadata +
-    data_exists (EXISTS per measurement table → one distinct-id union +
-    left join, a single shuffle instead of N correlated probes) +
-    data_restricted from the restriction config."""
+def _molecular_preamble(spark: SparkSession) -> tuple[str, str] | None:
+    """The SQL both molecular views build their data-presence flag from,
+    or None when no measurement table is registered: a distinct-id union over the
+    registered measurement tables (one shuffle instead of N correlated
+    EXISTS probes) and the CASE arms mapping data_type to its table."""
     present = {label: t for label, t in MEASUREMENT_TABLES.items()
                if _registered(spark, t)}
     if not present:
@@ -536,6 +536,17 @@ def _mmm_sql(spark: SparkSession) -> str | None:
     type_to_table = " ".join(
         f"WHEN '{label}' THEN '{t}'" for label, t in MEASUREMENT_TABLES.items()
     )
+    return existing, type_to_table
+
+
+def _mmm_sql(spark: SparkSession) -> str | None:
+    """model_molecular_metadata (views.sql:406-446): molchar metadata +
+    data_exists (EXISTS per measurement table) + data_restricted from
+    the restriction config."""
+    preamble = _molecular_preamble(spark)
+    if preamble is None:
+        return None
+    existing, type_to_table = preamble
     return f"""
         SELECT mcv.*,
                CASE WHEN ex.molecular_characterization_id IS NOT NULL
@@ -556,17 +567,10 @@ def _mmm_sql(spark: SparkSession) -> str | None:
 def _details_molecular_data_sql(spark: SparkSession) -> str | None:
     """details_molecular_data (views.sql:1041-1095): molchar rows with a
     per-type data_availability flag."""
-    present = {label: t for label, t in MEASUREMENT_TABLES.items()
-               if _registered(spark, t)}
-    if not present:
+    preamble = _molecular_preamble(spark)
+    if preamble is None:
         return None
-    existing = " UNION ALL ".join(
-        f"SELECT DISTINCT molecular_characterization_id, '{t}' AS src_table FROM {t}"
-        for t in sorted(set(present.values()))
-    )
-    type_to_table = " ".join(
-        f"WHEN '{label}' THEN '{t}'" for label, t in MEASUREMENT_TABLES.items()
-    )
+    existing, type_to_table = preamble
     return f"""
         SELECT mcv.molecular_characterization_id AS id,
                mcv.sample_id, mcv.model_id, mcv.source,

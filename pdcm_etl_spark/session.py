@@ -13,8 +13,6 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = os.environ.get("SPARK_GRAFT_CPUS", "32")
-
 
 def _default_driver_memory() -> str:
     """``min(24g, 0.6 × memory)``, memory being the host's MemTotal or the
@@ -55,11 +53,13 @@ def get_spark(
       (the correctness oracle compares values).
     - Arrow on: pandas UDF / applyInPandas paths move batches, not rows.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    # task slots and shuffle partitions: SPARK_GRAFT_CPUS, else the CPUs
+    # this process may use
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", DEFAULT_SHUFFLE_PARTITIONS)
+        .config("spark.sql.shuffle.partitions", cpus)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -74,35 +74,20 @@ def get_spark(
         # (profiled: ~2x the py4j chatter). The engine's errors carry
         # entity names already; trade the call-site decoration away.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
-        # local[32] = 32 concurrent tasks sharing one unified pool, plus
+        # local[N] = N concurrent tasks sharing one unified pool, plus
         # the DAG's localCheckpoint blocks live in the same heap — 8g
-        # starves execution memory at sf0.1 (UNABLE_TO_ACQUIRE_MEMORY);
-        # the default is capped by what the host can back
+        # starved execution memory at local[32], sf0.1
+        # (UNABLE_TO_ACQUIRE_MEMORY); the default is capped by what the
+        # host can back
         .config(
             "spark.driver.memory",
             os.environ.get("SPARK_DRIVER_MEMORY") or _default_driver_memory(),
         )
-        # Shuffle/spill codec (guide §2.3): measured r11 on the suite's
-        # heaviest shuffler (dedup_prefix_filter, sf0.1): zstd writes
-        # 2.2x fewer shuffle bytes (382->174 MB) at equal executor CPU,
-        # but local wall is WORSE — local-mode shuffle goes through the
-        # page cache at memory bandwidth, so compression CPU is pure
-        # overhead. Default stays lz4 (Spark default) locally; a
-        # network-shuffling cluster deployment should set
-        # SPARK_GRAFT_IO_CODEC=zstd, where 2.2x fewer bytes crossing
-        # NICs is the dominant term (guide §1.3 napkin math).
-        # NOTE (r12, advisor): spark.io.compression.codec also compresses
-        # RDD block storage and broadcasts — including every
-        # localCheckpoint block behind the repo's shared()/EntityDag
-        # boundaries — so zstd in production recompresses all
-        # share-boundary blocks too, a cost the shuffle-only measurement
-        # above does not cover; re-measure the flagship (checkpoint-heavy)
-        # before flipping it fleet-wide, or scope the change to
-        # spark.shuffle.* if only shuffle bytes are intended.
-        .config(
-            "spark.io.compression.codec",
-            os.environ.get("SPARK_GRAFT_IO_CODEC", "lz4"),
-        )
+        # spark.io.compression.codec stays Spark's lz4: zstd wrote 2.2x
+        # fewer shuffle bytes on dedup_prefix_filter at sf0.1 but ran
+        # slower locally, where shuffle moves at page-cache speed and
+        # compression CPU is pure overhead (r11); a network-shuffling
+        # cluster can pass it through extra_conf or --conf.
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

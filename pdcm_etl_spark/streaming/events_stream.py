@@ -32,10 +32,9 @@ from pyspark.sql import types as T
 # directions: too many stores at bench scale, and a CONSTANT (rather
 # than data-derived) count at 100 TB. 32 MB of compressed source per
 # partition ≈ 100-300 MB of in-memory working set — the 100 MB-1 GB
-# band the optimization guide (§2.2) targets per partition; override
-# with SPARK_GRAFT_STREAM_STATE_PARTITIONS for a pinned deployment
-# value (a production checkpoint bakes the count in — this derivation
-# is for fresh drains like the bench's).
+# band the optimization guide (§2.2) targets per partition. A restarted
+# query takes its count from its checkpoint, so this derivation only
+# sizes fresh drains like the bench's.
 _STATE_PARTITION_BYTES = 32 * 1024 * 1024
 
 
@@ -65,22 +64,16 @@ def _stream_state_partitions(
     stays the CAP, so a 100 TB source still fans out to the full
     configured width while a bench-scale drain stops paying 32 stores'
     fixed commit cost per micro-batch."""
-    import os
-
     key = "spark.sql.shuffle.partitions"
     prev = spark.conf.get(key)
-    override = os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS")
-    if override is not None:
-        n = max(1, int(override))
-    else:
-        n = max(
-            1,
-            min(
-                (_source_bytes(source_path) + _STATE_PARTITION_BYTES - 1)
-                // _STATE_PARTITION_BYTES,
-                int(prev),
-            ),
-        )
+    n = max(
+        1,
+        min(
+            (_source_bytes(source_path) + _STATE_PARTITION_BYTES - 1)
+            // _STATE_PARTITION_BYTES,
+            int(prev),
+        ),
+    )
     spark.conf.set(key, str(n))
     try:
         yield

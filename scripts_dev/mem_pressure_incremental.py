@@ -43,19 +43,14 @@ def phase1(sf_dir: str) -> None:
     import shutil
 
     from pdcm_etl_spark.plans import incremental as inc
-    from pdcm_etl_spark.plans.synth import (
-        SEARCH_INDEX_COLUMNS,
-        synthesize_provider_modules,
-    )
+    from pdcm_etl_spark.plans.synth import synthesize_provider_modules
     from pdcm_etl_spark.session import get_spark
 
     spark = get_spark("mem_pressure_inc_base")
     spark.sparkContext.setLogLevel("ERROR")
     raw = synthesize_provider_modules(spark, sf_dir)
     t0 = time.time()
-    path = inc._base_six_dir(
-        spark, sf_dir, raw, "EUROPE", SEARCH_INDEX_COLUMNS
-    )
+    path = inc._base_six_dir(spark, sf_dir, raw, "EUROPE")
     sec = round(time.time() - t0, 1)
     shutil.rmtree(KEEP, ignore_errors=True)
     shutil.copytree(path, KEEP)
@@ -126,7 +121,10 @@ def main() -> None:
                 "err", (proc.stderr or proc.stdout or "")[-400:]
             )
         rec["heap"] = "4g"
-        rec["cores"] = os.environ.get("SPARK_GRAFT_CPUS", "32")
+        # the phases size their sessions the way get_spark does
+        rec["cores"] = (
+            os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
+        )
         results.append(rec)
         print(rec, flush=True)
         if rec["status"] != "OK":

@@ -36,7 +36,7 @@ def main() -> None:
     args = [a for a in sys.argv[1:] if not a.startswith("--")]
     check = "--check" in sys.argv[1:]
     sf_dir = args[0] if args else "/root/testdata/sf0.001"
-    spark = get_spark("pdcm-etl-spark-tests", master="local[8]")
+    spark = get_spark("pdcm-etl-spark-tests")
     fps = build_fingerprints(spark, sf_dir)
     path = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),

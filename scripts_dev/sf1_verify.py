@@ -82,8 +82,6 @@ SF01 = "/root/testdata/sf0.1"
 # DuckDB-oracle at sf1: queries with data-linear oracles.
 ORACLE_R10 = [
     "etl_search_index",
-    "etl_search_index_wide",
-    "etl_search_index_spine",
     "etl_search_index_incremental",   # oracle IS the full rebuild
     "table_stats",
     "bucket_cojoin",

@@ -1,4 +1,4 @@
-"""Per-column diff of etl_search_index_wide vs its DuckDB oracle.
+"""Per-column diff of the 67-column etl_search_index vs its DuckDB oracle.
 
 Usage: python scripts_dev/wide_dev.py [sf_dir]
 Joins both sides on external_model_id and reports, per column, how many
@@ -33,14 +33,14 @@ def main():
     import __spark_entry__ as e
 
     q, o = e.queries(), e.oracle_sql()
-    sdf = q["etl_search_index_wide"](spark, SF).toPandas()
+    sdf = q["etl_search_index"](spark, SF).toPandas()
 
     con = duckdb.connect()
     for t in TABLES:
         p = f"{SF}/{t}.parquet"
         if os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
-    odf = con.execute(o["etl_search_index_wide"]).df()
+    odf = con.execute(o["etl_search_index"]).df()
 
     print(f"spark rows={len(sdf)} oracle rows={len(odf)}")
     s = sdf.set_index("external_model_id").sort_index()

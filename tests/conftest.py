@@ -14,19 +14,14 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 os.environ.setdefault("SPARK_DRIVER_MEMORY", "4g")
 
 
-def _cpus() -> str:
-    """Task slots for the test session: SPARK_GRAFT_CPUS (which also
-    sizes the shuffle partitions), else the CPUs this process may use.
-    More slots than cores only adds contention on the suite's many
-    small jobs."""
-    return os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
-
-
 @pytest.fixture(scope="session")
 def spark():
     from pdcm_etl_spark.session import get_spark
 
-    s = get_spark("pdcm-etl-spark-tests", master=f"local[{_cpus()}]")
+    # get_spark sizes task slots and shuffle partitions alike from
+    # SPARK_GRAFT_CPUS, else the CPUs this process may use: more slots
+    # than cores only adds contention on the suite's many small jobs
+    s = get_spark("pdcm-etl-spark-tests")
     yield s
 
 

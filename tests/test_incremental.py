@@ -63,7 +63,6 @@ def test_incremental_run_recomputes_only_changed_cone(
     from pdcm_etl_spark.operators.cdc import snapshot_diff
     from pdcm_etl_spark.plans.dag import build_metadata_dag
     from pdcm_etl_spark.plans.synth import (
-        SEARCH_INDEX_COLUMNS,
         _project_columns,
         synthesize_provider_modules,
     )
@@ -136,13 +135,11 @@ def test_incremental_run_recomputes_only_changed_cone(
     ref = dag3.run(targets=["search_index"])["search_index"]
     got = sorted(
         tuple(r)
-        for r in _project_columns(
-            out["search_index"], SEARCH_INDEX_COLUMNS
-        ).collect()
+        for r in _project_columns(out["search_index"]).collect()
     )
     want = sorted(
         tuple(r)
-        for r in _project_columns(ref, SEARCH_INDEX_COLUMNS).collect()
+        for r in _project_columns(ref).collect()
     )
     assert got == want
 
@@ -157,7 +154,6 @@ def test_incremental_runs_compose_across_consecutive_drops(
     contract in EntityDag.incremental_run's docstring."""
     from pdcm_etl_spark.plans.dag import build_metadata_dag
     from pdcm_etl_spark.plans.synth import (
-        SEARCH_INDEX_COLUMNS,
         _project_columns,
         synthesize_provider_modules,
     )
@@ -195,12 +191,10 @@ def test_incremental_runs_compose_across_consecutive_drops(
     ]
     got = sorted(
         tuple(r)
-        for r in _project_columns(
-            out2["search_index"], SEARCH_INDEX_COLUMNS
-        ).collect()
+        for r in _project_columns(out2["search_index"]).collect()
     )
     want = sorted(
         tuple(r)
-        for r in _project_columns(ref, SEARCH_INDEX_COLUMNS).collect()
+        for r in _project_columns(ref).collect()
     )
     assert got == want

@@ -103,10 +103,8 @@ def test_first_50_covers_every_family():
     families = {
         "flagship": ["etl_search_index"],
         # since r4 the flagship row itself carries the FULL 67-column hash
-        # oracle — the wide/spine twins are redundant proofs, both r1-r4
-        # driver-green and pytest-oracle-checked
-        "flagship-oracle": ["etl_search_index", "etl_search_index_wide",
-                            "etl_search_index_spine"],
+        # oracle, which covers every column of the retired wide/spine twins
+        "flagship-oracle": ["etl_search_index"],
         "aggregation": ["global_agg", "rollup_totals", "cube_counts"],
         "join": ["join_salted_skew", "harmonisation_cascade",
                  "bloom_prune_join"],
@@ -310,7 +308,7 @@ def test_registry_is_large_and_oracled():
     import __spark_entry__ as e
 
     q, o = e.queries(), e.oracle_sql()
-    assert len(q) == 227
+    assert len(q) == 225
     # every query has an oracle; round 3 converted stream_sessionize,
     # approx_distinct and multimodal_decode (the deterministic stub fake
     # is SQL-expressible) to exact oracles

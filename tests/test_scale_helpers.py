@@ -191,7 +191,7 @@ def test_hash_compare_agrees_with_row_compare(spark, sf_dir):
             f"CREATE VIEW {t} AS SELECT * FROM "
             f"read_parquet('{sf_dir}/{t}.parquet')"
         )
-    for name in ["etl_search_index_spine", "table_stats"]:
+    for name in ["etl_search_index", "table_stats"]:
         df = qs[name](spark, sf_dir)
         row = harness.compare(name, df, con, oracles[name])
         hsh = sv.hash_compare(name, df, con, oracles[name])

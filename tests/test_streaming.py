@@ -438,3 +438,38 @@ def test_stream_left_outer_join_kill_and_restart(spark, sf_dir, tmp_path):
     # each (event_id, purchase_ts) pair exactly once — replay-after-
     # crash must not double-emit
     assert len(got) == len({(g[0], g[3]) for g in got})
+
+
+def test_stream_state_partitions_follow_source_size(spark, tmp_path):
+    """The state-partition count is ceil(source bytes / 32 MB), at least
+    1 and capped by the session's shuffle partitions, which are restored
+    when the scope exits, also on an error."""
+    import pytest
+
+    from pdcm_etl_spark.streaming.events_stream import _stream_state_partitions
+
+    key = "spark.sql.shuffle.partitions"
+    tiny = tmp_path / "tiny.parquet"
+    tiny.write_bytes(b"x" * 100)
+    big = tmp_path / "big"
+    big.mkdir()
+    with open(big / "part-0.parquet", "wb") as fh:
+        fh.truncate(100 * 2**20)  # sparse: 100 MB of size, no disk
+    prev = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "8")
+        with _stream_state_partitions(spark, str(tiny)):
+            assert spark.conf.get(key) == "1"
+        assert spark.conf.get(key) == "8"
+        with _stream_state_partitions(spark, str(big)):
+            assert spark.conf.get(key) == "4"
+        spark.conf.set(key, "2")
+        with _stream_state_partitions(spark, str(big)):
+            assert spark.conf.get(key) == "2"
+        assert spark.conf.get(key) == "2"
+        with pytest.raises(RuntimeError):
+            with _stream_state_partitions(spark, str(tiny)):
+                raise RuntimeError("drain failed")
+        assert spark.conf.get(key) == "2"
+    finally:
+        spark.conf.set(key, prev)
