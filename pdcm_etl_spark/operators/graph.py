@@ -81,16 +81,6 @@ def ancestor_closure(
     return result
 
 
-def descendants_of(closure: DataFrame, ancestor_ids: list) -> DataFrame:
-    """All nodes under any of ``ancestor_ids`` (ref graph_builder.py:47-64
-    networkx.descendants) — a semi-join over the closure table."""
-    return (
-        closure.filter(F.col("ancestor").isin(ancestor_ids))
-        .select("node")
-        .distinct()
-    )
-
-
 def connected_components(
     edges: DataFrame,
     src: str = "src",

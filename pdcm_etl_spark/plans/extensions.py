@@ -942,10 +942,11 @@ FROM documents
 
 def x_stream_scd2_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """foreachBatch CDC: drain the event stream, merge each microbatch
-    into the Type-2 dimension via scd2_merge with alternating snapshot
-    dirs (write-then-swap). Single AvailableNow drain + latest-per-key
-    compaction ⇒ identical to the batch twin, so SQL_SCD2_MERGE is the
-    exact oracle (streaming/events_stream.py::scd2_upsert_stream)."""
+    into the Type-2 dimension via scd2_merge, and commit it by writing
+    ``snap_<batch_id>`` then atomically flipping the ``_LATEST``
+    pointer. Single AvailableNow drain + latest-per-key compaction ⇒
+    identical to the batch twin, so SQL_SCD2_MERGE is the exact oracle
+    (streaming/events_stream.py::scd2_upsert_stream)."""
     from pdcm_etl_spark.streaming.events_stream import scd2_upsert_stream
 
     return scd2_upsert_stream(spark, sf_dir)
@@ -3390,7 +3391,7 @@ def x_stream_windowed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming state)."""
     from pdcm_etl_spark.streaming.events_stream import windowed_topk_stream
 
-    return windowed_topk_stream(spark, sf_dir, k=3)
+    return windowed_topk_stream(spark, sf_dir)
 
 
 SQL_STREAM_WINDOWED_TOPK = """

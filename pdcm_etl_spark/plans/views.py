@@ -516,17 +516,14 @@ MEASUREMENT_TABLES: dict[str, str] = {
 }
 
 
-def _registered(spark: SparkSession, name: str) -> bool:
-    return any(t.name == name for t in spark.catalog.listTables())
-
-
-def _molecular_preamble(spark: SparkSession) -> tuple[str, str] | None:
+def _molecular_preamble(registered: set[str]) -> tuple[str, str] | None:
     """The SQL both molecular views build their data-presence flag from,
-    or None when no measurement table is registered: a distinct-id union over the
-    registered measurement tables (one shuffle instead of N correlated
-    EXISTS probes) and the CASE arms mapping data_type to its table."""
+    or None when no measurement table is in ``registered`` (the session
+    catalog's names): a distinct-id union over the registered
+    measurement tables (one shuffle instead of N correlated EXISTS
+    probes) and the CASE arms mapping data_type to its table."""
     present = {label: t for label, t in MEASUREMENT_TABLES.items()
-               if _registered(spark, t)}
+               if t in registered}
     if not present:
         return None
     existing = " UNION ALL ".join(
@@ -539,11 +536,11 @@ def _molecular_preamble(spark: SparkSession) -> tuple[str, str] | None:
     return existing, type_to_table
 
 
-def _mmm_sql(spark: SparkSession) -> str | None:
+def _mmm_sql(registered: set[str]) -> str | None:
     """model_molecular_metadata (views.sql:406-446): molchar metadata +
     data_exists (EXISTS per measurement table) + data_restricted from
     the restriction config."""
-    preamble = _molecular_preamble(spark)
+    preamble = _molecular_preamble(registered)
     if preamble is None:
         return None
     existing, type_to_table = preamble
@@ -564,10 +561,10 @@ def _mmm_sql(spark: SparkSession) -> str | None:
     """
 
 
-def _details_molecular_data_sql(spark: SparkSession) -> str | None:
+def _details_molecular_data_sql(registered: set[str]) -> str | None:
     """details_molecular_data (views.sql:1041-1095): molchar rows with a
     per-type data_availability flag."""
-    preamble = _molecular_preamble(spark)
+    preamble = _molecular_preamble(registered)
     if preamble is None:
         return None
     existing, type_to_table = preamble
@@ -585,8 +582,8 @@ def _details_molecular_data_sql(spark: SparkSession) -> str | None:
     """
 
 
-# views whose SQL depends on which entities this run registered;
-# each callable returns SQL or None (skip)
+# views whose SQL depends on which entities this run registered; each
+# callable takes the catalog's names and returns SQL or None (skip)
 DYNAMIC_VIEW_DEFINITIONS = {
     "model_molecular_metadata": _mmm_sql,
     "details_molecular_data": _details_molecular_data_sql,
@@ -626,7 +623,12 @@ def create_views(spark: SparkSession, only: list[str] | None = None) -> list[str
     model_molecular_metadata which reads molecular_characterization_vw),
     so creation loops to a fixpoint: each pass creates whatever now
     resolves, until no progress — the SQL-level equivalent of the
-    reference's ordered views.sql script, without hand-ordering."""
+    reference's ordered views.sql script, without hand-ordering.
+
+    The catalog is listed once per call: the views created here are
+    never measurement tables or passthrough entities, so one listing
+    answers every presence check."""
+    registered = {t.name for t in spark.catalog.listTables()}
     pending: dict[str, object] = {}
     for name, sql in VIEW_DEFINITIONS.items():
         if only and name not in only:
@@ -642,7 +644,7 @@ def create_views(spark: SparkSession, only: list[str] | None = None) -> list[str
         progressed = False
         for name in list(pending):
             defn = pending[name]
-            sql = defn(spark) if callable(defn) else defn
+            sql = defn(registered) if callable(defn) else defn
             if sql is None:  # dynamic view: inputs absent in this run
                 del pending[name]
                 continue
@@ -656,7 +658,7 @@ def create_views(spark: SparkSession, only: list[str] | None = None) -> list[str
     # passthrough API views: the registered entity view under the same
     # name is the view — report the ones live in this session's catalog
     for name in PASSTHROUGH_VIEWS:
-        if (only is None or name in only) and _registered(spark, name):
+        if (only is None or name in only) and name in registered:
             created.append(name)
     return created
 

@@ -95,32 +95,3 @@ def get_spark(
     spark.sparkContext.setLogLevel("WARN")
     return spark
 
-
-def load_tables(spark: SparkSession, sf_dir: str, names: list[str] | None = None):
-    """Load the test-lake parquet tables and register temp views.
-
-    Returns a dict name -> DataFrame. Mirrors the reference's pattern of
-    reading every input as parquet (spark_transformation_job.py:6-18) but in
-    one app, keeping lineage in memory instead of Luigi's ~60 write/read
-    barriers.
-    """
-    names = names or [
-        "region",
-        "nation",
-        "customer",
-        "supplier",
-        "part",
-        "orders",
-        "lineitem",
-        "events",
-        "documents",
-        "embeddings",
-    ]
-    out = {}
-    for n in names:
-        path = os.path.join(sf_dir, f"{n}.parquet")
-        if os.path.exists(path):
-            df = spark.read.parquet(path)
-            df.createOrReplaceTempView(n)
-            out[n] = df
-    return out

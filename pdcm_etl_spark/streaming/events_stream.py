@@ -1,10 +1,24 @@
 """Streaming ingest of the events table.
 
 Structured Streaming over the same parquet lake: readStream → watermark →
-windowed aggregation → memory/parquet sink. ``run_availablenow`` drains
-everything currently in the source (Trigger.AvailableNow) so the result is
-deterministically comparable to the batch twin
-(plans/catalog.py::q_events_daily) — that equivalence is the correctness
+windowed aggregation → memory/parquet sink. Every query is a source plus
+one drain, and each streaming mechanism exists once:
+
+- ``events_stream`` is the one reader: a file stream over an events
+  path (a single parquet file or a directory of them) with ``ts``
+  normalized like the batch twin; ``events_stream_source`` points it at
+  a lake's ``events.parquet``.
+- ``_drain`` is the one Trigger.AvailableNow drain: it runs the query
+  inside ``_stream_state_partitions`` and returns what the sink holds
+  (a memory table, or a checkpointed parquet file sink).
+- ``_attribution_join`` is the one click→purchase range join, for the
+  inner and left-outer queries alike.
+- ``_scd2_upsert`` is the one foreachBatch SCD2 body, committing each
+  microbatch through the ``_LATEST`` pointer.
+
+AvailableNow drains everything currently in the source, so each result
+is deterministically comparable to its batch twin (e.g.
+plans/catalog.py::q_events_daily) — that equivalence is the correctness
 oracle for the streaming path.
 
 Scale: in production the source is a file/Kafka stream; the watermark
@@ -15,8 +29,9 @@ bounds state, the 1-day tumbling window keys the state store, and
 from __future__ import annotations
 
 import contextlib
+import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -39,8 +54,6 @@ _STATE_PARTITION_BYTES = 32 * 1024 * 1024
 
 
 def _source_bytes(path: str) -> int:
-    import os
-
     if os.path.isdir(path):
         return sum(
             os.path.getsize(os.path.join(r, f))
@@ -83,7 +96,7 @@ def _stream_state_partitions(
 
 def _session_scratch_dir(prefix: str) -> str:
     """mkdtemp registered for atexit removal (round-3 advice: the
-    scd2_dim_* snapshot dir outlives the workdir cleanup by design — the
+    scd2_dim_* snapshot dir outlives the drain by design — the
     returned DataFrame lazily reads it — but must not leak a directory
     per invocation past process exit)."""
     import atexit
@@ -94,50 +107,84 @@ def _session_scratch_dir(prefix: str) -> str:
     atexit.register(shutil.rmtree, d, ignore_errors=True)
     return d
 
-def events_stream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """readStream over events.parquet with `ts` normalized to TIMESTAMP.
 
-    A file stream needs a declared schema, so take it from a batch footer
-    read of the same file, then normalize `ts` exactly like the batch twin
-    (catalog.load_events): legacy nanos-as-long → µs timestamp; µs
-    TIMESTAMP_NTZ → session-tz timestamp (UTC session ⇒ value-identical)."""
+def events_stream(
+    spark: SparkSession, path: str, schema: T.StructType | None = None
+) -> DataFrame:
+    """readStream over the events parquet at ``path`` with `ts`
+    normalized to TIMESTAMP — the one events reader.
+
+    A file stream needs a declared schema; without ``schema`` it comes
+    from a batch footer read of the same path. `ts` is normalized
+    exactly like the batch twin (catalog.load_events): legacy
+    nanos-as-long → µs timestamp; µs TIMESTAMP_NTZ → session-tz
+    timestamp (UTC session ⇒ value-identical)."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    if schema is None:
+        schema = spark.read.parquet(path).schema
+    reader = spark.readStream.schema(schema).format("parquet")
     # the driver lake stores ONE parquet file per table, so a file
     # source must point at the parent dir and glob-filter to that file;
     # Spark-written lakes (the gen_scale stress dirs) store events
     # .parquet as a DIRECTORY of part files — there the glob would
     # match nothing (part-*.parquet names) and the stream reads zero
-    # rows, so load the directory itself
-    import os
-
-    if os.path.isdir(f"{sf_dir}/events.parquet"):
-        raw = (
-            spark.readStream.schema(schema)
-            .format("parquet")
-            .load(f"{sf_dir}/events.parquet")
-        )
+    # rows, so load the directory itself (staging dirs too)
+    if os.path.isdir(path):
+        raw = reader.load(path)
     else:
-        raw = (
-            spark.readStream.schema(schema)
-            .format("parquet")
-            .option("pathGlobFilter", "events.parquet")
-            .load(sf_dir)
+        raw = reader.option("pathGlobFilter", os.path.basename(path)).load(
+            os.path.dirname(path)
         )
     if isinstance(schema["ts"].dataType, T.LongType):
-        raw = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+        return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    return raw.withColumn("ts", F.col("ts").cast("timestamp"))
+
+
+def events_stream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The events stream of the lake at ``sf_dir``."""
+    return events_stream(spark, f"{sf_dir}/events.parquet")
+
+
+def _drain(
+    df: DataFrame,
+    source_path: str,
+    sink: str,
+    mode: str = "append",
+    checkpoint: str | None = None,
+) -> DataFrame:
+    """Drain ``df`` with Trigger.AvailableNow, its state partitions
+    sized from ``source_path``, and return what the sink holds.
+
+    Without ``checkpoint`` the sink is the in-memory table named
+    ``sink``. With it, ``sink`` is the path of a parquet file sink — the
+    production-shaped exactly-once path (file sink + WAL commit log):
+    restarting with the same checkpoint re-emits nothing that was
+    already committed (offsets + commits replayed)."""
+    spark = df.sparkSession
+    writer = df.writeStream.outputMode(mode)
+    if checkpoint is None:
+        writer = writer.format("memory").queryName(sink)
     else:
-        raw = raw.withColumn("ts", F.col("ts").cast("timestamp"))
-    return raw
+        writer = (
+            writer.format("parquet")
+            .option("path", sink)
+            .option("checkpointLocation", checkpoint)
+        )
+    with _stream_state_partitions(spark, source_path):
+        writer.trigger(availableNow=True).start().awaitTermination()
+    if checkpoint is None:
+        return spark.table(sink)
+    return spark.read.parquet(sink)
 
 
-def daily_counts_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """readStream → event-time watermark → tumbling 1-day window per
-    event_type. Same aggregates as the batch twin."""
-    ev = events_stream_source(spark, sf_dir)
+def _windowed_sums(
+    ev: DataFrame, window: Column, key: str, start: str
+) -> DataFrame:
+    """Watermarked event count and exact value sum per (window, key),
+    the window start named ``start``."""
     return (
         ev.withWatermark("ts", "1 day")
-        .groupBy(F.window("ts", "1 day").alias("win"), "event_type")
+        .groupBy(window.alias("win"), key)
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             # exact decimal sum, final-projected to bigint micro-units so
@@ -146,35 +193,32 @@ def daily_counts_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("sum_value_micro"),
         )
-        .select(
-            # keep TIMESTAMP (not DATE): Spark DATE becomes object-dtype
-            # datetime.date in pandas while DuckDB DATE becomes
-            # datetime64 — the driver canonicalizer hashes them apart
-            F.col("win.start").alias("day"),
-            "event_type",
-            "n_events",
-            "sum_value_micro",
-        )
+        # keep TIMESTAMP (not DATE): Spark DATE becomes object-dtype
+        # datetime.date in pandas while DuckDB DATE becomes datetime64 —
+        # the driver canonicalizer hashes them apart
+        .select(F.col("win.start").alias(start), key, "n_events",
+                "sum_value_micro")
     )
 
 
-def run_availablenow(
-    spark: SparkSession, sf_dir: str, table_name: str = "events_daily_stream"
-) -> DataFrame:
-    """Drain the source with Trigger.AvailableNow into an in-memory sink in
-    complete mode; returns the resulting DataFrame. Deterministic: one
-    final emission containing every window."""
-    agg = daily_counts_stream(spark, sf_dir)
-    with _stream_state_partitions(spark, f"{sf_dir}/events.parquet"):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(table_name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(table_name)
+def daily_counts_stream(ev: DataFrame) -> DataFrame:
+    """Event stream ``ev`` → event-time watermark → tumbling 1-day window
+    per event_type. Same aggregates as the batch twin
+    (catalog.q_events_daily), which stays the oracle whatever the
+    source: the lake, or a staging directory whose files arrive over
+    time (the crash/restart test)."""
+    return _windowed_sums(ev, F.window("ts", "1 day"), "event_type", "day")
+
+
+def run_availablenow(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Drain the lake's daily counts into an in-memory sink in complete
+    mode. Deterministic: one final emission containing every window."""
+    return _drain(
+        daily_counts_stream(events_stream_source(spark, sf_dir)),
+        f"{sf_dir}/events.parquet",
+        "events_daily_stream",
+        "complete",
+    )
 
 
 def run_to_parquet(
@@ -183,44 +227,37 @@ def run_to_parquet(
     out_dir: str,
     checkpoint_dir: str,
 ) -> DataFrame:
-    """Production-shaped sink: drain the source with Trigger.AvailableNow
-    into a parquet file sink with a checkpoint location — the
-    exactly-once path (file sink + WAL commit log). Append mode requires
-    the watermark to close windows; AvailableNow advances the watermark
-    to max(event time) at drain end, so every window whose end precedes
-    it emits exactly once. Restarting with the same checkpoint_dir
-    re-emits nothing (offsets + commits replayed) — that idempotence is
+    """Drain the lake's daily counts into a parquet file sink with a
+    checkpoint. Append mode requires the watermark to close windows;
+    AvailableNow advances the watermark to max(event time) at drain end,
+    so every window whose end precedes it emits exactly once. Restarting
+    with the same checkpoint_dir re-emits nothing — that idempotence is
     what the test pins.
 
     Returns the batch DataFrame read back from the sink."""
-    agg = daily_counts_stream(spark, sf_dir)
-    with _stream_state_partitions(spark, f"{sf_dir}/events.parquet"):
-        q = (
-            agg.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", checkpoint_dir)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.read.parquet(out_dir)
+    return _drain(
+        daily_counts_stream(events_stream_source(spark, sf_dir)),
+        f"{sf_dir}/events.parquet",
+        out_dir,
+        checkpoint=checkpoint_dir,
+    )
 
 
-def attribution_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stream-stream inner join with event-time range condition: each
-    click joins purchases by the same user within the preceding hour —
-    the streaming twin of the batch bucketed range join
+def _attribution_join(
+    clicks_src: DataFrame, purchases_src: DataFrame, how: str
+) -> DataFrame:
+    """Stream-stream join with an event-time range condition: each click
+    joins purchases by the same user within the preceding hour — the
+    streaming twin of the batch bucketed range join
     (operators/temporal.py::range_join_points_in_intervals).
 
     Both sides carry watermarks; the range condition bounds each side's
     state retention (Spark evicts purchase state once the watermark
     passes purchase_ts + 1h — unbounded state is the stream-stream join
-    failure mode at scale). Drained with AvailableNow into a memory sink;
-    deterministic, so the batch inequality-join SQL is an exact oracle."""
+    failure mode at scale). ``how`` is ``inner`` or ``left_outer``; the
+    outer join adds a ``matched`` flag."""
     clicks = (
-        events_stream_source(spark, sf_dir)
-        .filter(F.col("event_type") == "click")
+        clicks_src.filter(F.col("event_type") == "click")
         .select(
             "event_id",
             F.col("user_id").alias("c_user_id"),
@@ -229,35 +266,38 @@ def attribution_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withWatermark("click_ts", "1 day")
     )
     purchases = (
-        events_stream_source(spark, sf_dir)
-        .filter(F.col("event_type") == "purchase")
-        .select(F.col("user_id").alias("p_user_id"), F.col("ts").alias("purchase_ts"))
+        purchases_src.filter(F.col("event_type") == "purchase")
+        .select(
+            F.col("user_id").alias("p_user_id"),
+            F.col("ts").alias("purchase_ts"),
+        )
         .withWatermark("purchase_ts", "1 day")
     )
-    joined = clicks.join(
+    cols = ["event_id", F.col("c_user_id").alias("user_id"), "click_ts",
+            "purchase_ts"]
+    if how == "left_outer":
+        cols.append(F.col("purchase_ts").isNotNull().alias("matched"))
+    return clicks.join(
         purchases,
         F.expr(
             "c_user_id = p_user_id AND "
             "click_ts >= purchase_ts AND "
             "click_ts <= purchase_ts + INTERVAL 1 HOUR"
         ),
+        how,
+    ).select(*cols)
+
+
+def attribution_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Stream-stream INNER range join (``_attribution_join``) over two
+    streams of the lake, drained with AvailableNow into a memory sink;
+    deterministic, so the batch inequality-join SQL is an exact oracle."""
+    joined = _attribution_join(
+        events_stream_source(spark, sf_dir),
+        events_stream_source(spark, sf_dir),
         "inner",
-    ).select(
-        "event_id",
-        F.col("c_user_id").alias("user_id"),
-        "click_ts",
-        "purchase_ts",
     )
-    with _stream_state_partitions(spark, f"{sf_dir}/events.parquet"):
-        q = (
-            joined.writeStream.format("memory")
-            .queryName("attribution_stream")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table("attribution_stream")
+    return _drain(joined, f"{sf_dir}/events.parquet", "attribution_stream")
 
 
 def dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -295,51 +335,109 @@ def dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .dropDuplicatesWithinWatermark(["user_id", "event_type"])
         .select("user_id", "event_type")
     )
-    with _stream_state_partitions(spark, f"{sf_dir}/events.parquet"):
-        q = (
-            deduped.writeStream.format("memory")
-            .queryName("dedup_stream")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table("dedup_stream")
+    return _drain(deduped, f"{sf_dir}/events.parquet", "dedup_stream")
 
 
-def scd2_upsert_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming CDC ingestion: drain the event stream with foreachBatch,
-    merging every microbatch into a Type-2 dimension snapshot
+def _scd2_upsert(
+    events: DataFrame,
+    source_path: str,
+    work_dir: str,
+    seed: DataFrame | None = None,
+) -> tuple[DataFrame, int]:
+    """The one streaming SCD2 ingest: drain ``events`` with foreachBatch,
+    merging every microbatch into a Type-2 dimension
     (operators/cdc.py::scd2_merge) — the incremental-ingest pattern for
     lakes without a transactional table format.
 
-    Each batch writes the merged dimension to an ALTERNATING snapshot
-    directory and re-reads it (write-then-swap: never overwrite the
-    snapshot being read; the pointer flip is the atomic commit). The
-    dimension is seeded with each user's FIRST event; scd2_merge's
-    latest-per-key batch compaction means draining ALL events in one
-    AvailableNow batch yields exactly the batch twin's result (seed +
-    last events), so SQL_SCD2_MERGE is an exact oracle. That equivalence
-    holds ONLY for a single-microbatch drain (per-batch merges would
-    record intermediate versions the oracle lacks), so a multi-batch
-    drain raises rather than silently diverging.
+    Both the stream checkpoint and the dimension snapshot live under
+    ``work_dir``, so a torn-down (or crashed) query restarted with the
+    same ``work_dir`` resumes exactly where it stopped — the file-source
+    checkpoint replays only unprocessed files, and the dimension state
+    reloads from the last COMMITTED snapshot (else from ``seed``).
 
-    The final snapshot stays a distributed parquet read from a stable
-    directory — the dimension is not driver-sized at scale, so there is
-    deliberately no collect() on this path (round-2 verdict item 3)."""
-    import shutil
-    import tempfile
+    Commit protocol: each microbatch writes its merged dimension to a
+    ``snap_<batch_id>`` directory, then flips the ``_LATEST`` pointer
+    file (the atomic commit — a crash between parquet write and pointer
+    flip leaves the previous snapshot current). Exactly-once composes
+    from two idempotencies: the batch_id-keyed snapshot dir makes a
+    replayed write land in the same place, and ``scd2_merge`` itself is
+    a no-op when re-applied (identical tracked values → "keep" branch,
+    no new version rows), so a batch replayed after a crash-after-write
+    cannot double-version the dimension.
 
+    The dimension stays a distributed parquet read of the committed
+    snapshot — it is not driver-sized at scale, so there is deliberately
+    no collect() on this path (round-2 verdict item 3). Returns it with
+    the number of microbatches this drain merged."""
+    from pdcm_etl_spark.operators.cdc import scd2_merge
+
+    spark = events.sparkSession
+    ptr = f"{work_dir}/_LATEST"
+
+    def _load_state() -> DataFrame:
+        if os.path.exists(ptr):
+            with open(ptr) as fh:
+                return spark.read.parquet(
+                    f"{work_dir}/snap_{fh.read().strip()}"
+                )
+        if seed is None:
+            raise ValueError("no committed snapshot and no seed")
+        return seed
+
+    state = {"df": _load_state(), "batches": 0}
+
+    def upsert(batch_df, batch_id):
+        # Crash window: if the last run died AFTER the pointer flip but
+        # BEFORE the stream checkpoint committed, the replayed batch
+        # arrives with the pointer already at batch_id. Re-merging
+        # would lazily read snap_<batch_id> while overwriting it
+        # (AnalysisException), so an already-committed batch is a pure
+        # no-op: reload the committed state and return.
+        if os.path.exists(ptr):
+            with open(ptr) as fh:
+                if fh.read().strip() == str(batch_id):
+                    state["df"] = batch_df.sparkSession.read.parquet(
+                        f"{work_dir}/snap_{batch_id}"
+                    )
+                    return
+        merged = scd2_merge(
+            state["df"],
+            batch_df.select("user_id", "event_type", "ts"),
+            keys=["user_id"],
+            tracked=["event_type"],
+        )
+        snap = f"{work_dir}/snap_{batch_id}"
+        merged.write.mode("overwrite").parquet(snap)
+        with open(ptr + ".tmp", "w") as fh:
+            fh.write(str(batch_id))
+        os.replace(ptr + ".tmp", ptr)  # atomic pointer flip
+        state["df"] = batch_df.sparkSession.read.parquet(snap)
+        state["batches"] += 1
+
+    with _stream_state_partitions(spark, source_path):
+        (
+            events.select("user_id", "event_type", "ts")
+            .writeStream.foreachBatch(upsert)
+            .option("checkpointLocation", f"{work_dir}/ckpt")
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination()
+        )
+    dim = _load_state().select(
+        "user_id", "event_type", "valid_from", "valid_to", "is_current"
+    )
+    return dim, state["batches"]
+
+
+def _first_event_seed(ev: DataFrame) -> DataFrame:
+    """The SCD2 seed: each user's FIRST event (by ts, then event_id) as
+    its open version."""
     from pyspark.sql import Window
 
-    from pdcm_etl_spark.operators.cdc import scd2_merge
-    from pdcm_etl_spark.plans.catalog import load_events
-
-    ev = load_events(spark, sf_dir)
     wf = Window.partitionBy("user_id").orderBy(
         F.col("ts").asc(), F.col("event_id").asc()
     )
-    current = (
+    return (
         ev.withColumn("__rn", F.row_number().over(wf))
         .filter(F.col("__rn") == 1)
         .select(
@@ -350,53 +448,65 @@ def scd2_upsert_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(True).alias("is_current"),
         )
     )
-    work = tempfile.mkdtemp(prefix="scd2_stream_")
-    state = {"df": current, "flip": 0, "batches": 0}
 
-    def upsert(batch_df, batch_id):
-        merged = scd2_merge(
-            state["df"],
-            batch_df.select("user_id", "event_type", "ts"),
-            keys=["user_id"],
-            tracked=["event_type"],
-        )
-        snap = f"{work}/snap_{state['flip'] % 2}"
-        merged.write.mode("overwrite").parquet(snap)
-        state["df"] = batch_df.sparkSession.read.parquet(snap)
-        state["flip"] += 1
-        state["batches"] += 1
 
-    with _stream_state_partitions(spark, f"{sf_dir}/events.parquet"):
-        q = (
-            events_stream_source(spark, sf_dir)
-            .select("user_id", "event_type", "ts")
-            .writeStream.foreachBatch(upsert)
-            .option("checkpointLocation", f"{work}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    if state["batches"] > 1:
-        shutil.rmtree(work, ignore_errors=True)
+def _scd2_single_batch(
+    events: DataFrame, source_path: str, seed: DataFrame
+) -> DataFrame:
+    """``_scd2_upsert`` in a fresh session scratch dir, raising when the
+    drain took more than one microbatch: scd2_merge's latest-per-key
+    batch compaction makes a SINGLE-batch drain of every event equal the
+    batch twin (seed + last events), so SQL_SCD2_MERGE is an exact
+    oracle only then — per-batch merges would record intermediate
+    versions the oracle lacks, and that must fail loudly rather than
+    silently diverge."""
+    dim, batches = _scd2_upsert(
+        events, source_path, _session_scratch_dir("scd2_dim_"), seed
+    )
+    if batches > 1:
         raise AssertionError(
-            f"scd2_upsert_stream: drain took {state['batches']} microbatches;"
+            f"scd2_upsert_stream: drain took {batches} microbatches;"
             " the SQL_SCD2_MERGE oracle is exact only for a single-batch"
             " drain (per-batch merges record intermediate versions) —"
             " unset maxFilesPerTrigger / keep the lake single-file"
         )
-    # move the winning snapshot to a STABLE dir (outlives the workdir
-    # cleanup — the returned DataFrame lazily reads it; removed atexit)
-    # and return a distributed read — never collect the dimension
-    final = _session_scratch_dir("scd2_dim_")
-    if state["batches"] == 0:  # empty drain: the seed IS the dimension
-        state["df"].write.mode("overwrite").parquet(final)
-    else:
-        shutil.rmtree(final)
-        shutil.move(f"{work}/snap_{(state['flip'] - 1) % 2}", final)
-    shutil.rmtree(work, ignore_errors=True)
-    return spark.read.parquet(final).select(
-        "user_id", "event_type", "valid_from", "valid_to", "is_current"
+    return dim
+
+
+def scd2_upsert_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Streaming CDC ingestion of the lake (``_scd2_upsert``), seeded
+    with each user's first event and drained as one microbatch, so
+    SQL_SCD2_MERGE is an exact oracle (``_scd2_single_batch``)."""
+    from pdcm_etl_spark.plans.catalog import load_events
+
+    return _scd2_single_batch(
+        events_stream_source(spark, sf_dir),
+        f"{sf_dir}/events.parquet",
+        _first_event_seed(load_events(spark, sf_dir)),
     )
+
+
+def scd2_upsert_restartable(
+    spark: SparkSession,
+    staging_dir: str,
+    schema: T.StructType,
+    work_dir: str,
+    seed: DataFrame | None = None,
+) -> DataFrame:
+    """Crash-RECOVERABLE streaming CDC ingest (``_scd2_upsert``) over a
+    staging directory, resumable with the same ``work_dir``.
+
+    Unlike scd2_upsert_stream (whose SQL oracle is exact only for a
+    single-batch drain), this variant ACCEPTS multi-batch ingestion:
+    version history then legitimately includes intermediate states, and
+    the recovery contract — what tests/test_streaming.py pins — is that
+    the CURRENT rows equal the batch twin's current rows and every
+    key's version intervals chain without overlap.
+
+    Returns the dimension read from the committed snapshot.
+    """
+    events = events_stream(spark, staging_dir, schema)
+    return _scd2_upsert(events, staging_dir, work_dir, seed)[0]
 
 
 def sliding_counts_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -411,42 +521,20 @@ def sliding_counts_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic, and SQL-expressible: the oracle duplicates each event
     into its ⌈len/slide⌉ covering windows with generate_series and
     re-aggregates."""
-    ev = events_stream_source(spark, sf_dir)
-    agg = (
-        ev.withWatermark("ts", "1 day")
-        .groupBy(
-            F.window("ts", "2 days", "1 day").alias("win"), "event_type"
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            (F.sum(F.col("value").cast("decimal(18,6)")) * 1000000)
-            .cast("bigint")
-            .alias("sum_value_micro"),
-        )
-        .select(
-            F.col("win.start").alias("win_start"),
-            "event_type",
-            "n_events",
-            "sum_value_micro",
-        )
+    agg = _windowed_sums(
+        events_stream_source(spark, sf_dir),
+        F.window("ts", "2 days", "1 day"),
+        "event_type",
+        "win_start",
     )
-    with _stream_state_partitions(spark, f"{sf_dir}/events.parquet"):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName("events_sliding_stream")
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table("events_sliding_stream")
+    return _drain(
+        agg, f"{sf_dir}/events.parquet", "events_sliding_stream", "complete"
+    )
 
 
-def windowed_topk_stream(
-    spark: SparkSession, sf_dir: str, k: int = 3
-) -> DataFrame:
+def windowed_topk_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming leaderboard: watermarked TUMBLING-day counts per event
-    type maintained by the stream, top-k per window ranked over the
+    type maintained by the stream, top-3 per window ranked over the
     sink — the standard split for ranking under streaming semantics
     (Structured Streaming cannot rank inside the streaming aggregation:
     a rank is non-incremental, it changes retroactively as counts grow;
@@ -459,31 +547,24 @@ def windowed_topk_stream(
     """
     from pyspark.sql import Window
 
-    ev = events_stream_source(spark, sf_dir)
     agg = (
-        ev.withWatermark("ts", "1 day")
+        events_stream_source(spark, sf_dir)
+        .withWatermark("ts", "1 day")
         .groupBy(F.window("ts", "1 day").alias("win"), "event_type")
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(
             F.col("win.start").alias("win_start"), "event_type", "n_events"
         )
     )
-    with _stream_state_partitions(spark, f"{sf_dir}/events.parquet"):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName("events_windowed_topk")
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    counts = _drain(
+        agg, f"{sf_dir}/events.parquet", "events_windowed_topk", "complete"
+    )
     w = Window.partitionBy("win_start").orderBy(
         F.col("n_events").desc(), F.col("event_type").asc()
     )
     return (
-        spark.table("events_windowed_topk")
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        counts.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= 3)
         .select("win_start", "event_type", "n_events", F.col("rank").cast("int").alias("rank"))
     )
 
@@ -502,9 +583,9 @@ def dq_monitor_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     derived at the SINK read (a rate is a ratio of two counters — the
     counters are the incremental part, exactly like the topk split).
     """
-    ev = events_stream_source(spark, sf_dir)
     agg = (
-        ev.withWatermark("ts", "1 day")
+        events_stream_source(spark, sf_dir)
+        .withWatermark("ts", "1 day")
         .groupBy(F.window("ts", "1 day").alias("win"))
         .agg(
             F.count(F.lit(1)).alias("n_events"),
@@ -531,16 +612,9 @@ def dq_monitor_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("win.start").alias("win_start"), "n_events",
                 "v_type", "v_value", "n_error")
     )
-    with _stream_state_partitions(spark, f"{sf_dir}/events.parquet"):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName("events_dq_monitor")
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table("events_dq_monitor").select(
+    return _drain(
+        agg, f"{sf_dir}/events.parquet", "events_dq_monitor", "complete"
+    ).select(
         "win_start",
         F.col("n_events").cast("bigint").alias("n_events"),
         F.col("v_type").cast("bigint").alias("v_type"),
@@ -574,7 +648,6 @@ def enriched_segment_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     lake's id spaces); unmatched users fall out (inner join) exactly as
     in the batch oracle.
     """
-    ev = events_stream_source(spark, sf_dir)
     dim = (
         spark.read.parquet(f"{sf_dir}/customer.parquet")
         .select(
@@ -582,176 +655,30 @@ def enriched_segment_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("c_mktsegment").alias("segment"),
         )
     )
-    agg = (
-        ev.join(F.broadcast(dim), "user_id")
-        .withWatermark("ts", "1 day")
-        .groupBy(F.window("ts", "1 day").alias("win"), "segment")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            (F.sum(F.col("value").cast("decimal(18,6)")) * 1000000)
-            .cast("bigint")
-            .alias("sum_value_micro"),
-        )
-        .select(
-            F.col("win.start").alias("win_start"),
-            "segment",
-            "n_events",
-            "sum_value_micro",
-        )
+    agg = _windowed_sums(
+        events_stream_source(spark, sf_dir).join(F.broadcast(dim), "user_id"),
+        F.window("ts", "1 day"),
+        "segment",
+        "win_start",
     )
-    with _stream_state_partitions(spark, f"{sf_dir}/events.parquet"):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName("events_segment_stream")
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table("events_segment_stream").select(
+    return _drain(
+        agg, f"{sf_dir}/events.parquet", "events_segment_stream", "complete"
+    ).select(
         "win_start", "segment",
         F.col("n_events").cast("bigint").alias("n_events"),
         "sum_value_micro",
     )
 
 
-def daily_counts_stream_over(
-    spark: SparkSession, staging_dir: str, schema
-) -> DataFrame:
-    """The daily_counts aggregation over an arbitrary staging directory
-    (files may ARRIVE over time — the crash/restart test feeds half the
-    lake, kills the query, adds the rest, and resumes from checkpoint).
-    Same expressions as daily_counts_stream so the batch twin
-    (catalog.q_events_daily) stays the oracle."""
-    raw = spark.readStream.schema(schema).format("parquet").load(staging_dir)
-    if isinstance(schema["ts"].dataType, T.LongType):
-        raw = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    else:
-        raw = raw.withColumn("ts", F.col("ts").cast("timestamp"))
-    return (
-        raw.withWatermark("ts", "1 day")
-        .groupBy(F.window("ts", "1 day").alias("win"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            (F.sum(F.col("value").cast("decimal(18,6)")) * 1000000)
-            .cast("bigint")
-            .alias("sum_value_micro"),
-        )
-        .select(
-            F.col("win.start").alias("day"),
-            "event_type",
-            "n_events",
-            "sum_value_micro",
-        )
-    )
-
-
-def scd2_upsert_restartable(
-    spark: SparkSession,
-    staging_dir: str,
-    schema,
-    work_dir: str,
-    seed: DataFrame | None = None,
-) -> DataFrame:
-    """Crash-RECOVERABLE streaming CDC ingest: both the stream
-    checkpoint and the dimension snapshot live under ``work_dir``, so a
-    torn-down (or crashed) query restarted with the same ``work_dir``
-    resumes exactly where it stopped — the file-source checkpoint
-    replays only unprocessed files, and the dimension state reloads
-    from the last COMMITTED snapshot.
-
-    Commit protocol: each microbatch writes its merged dimension to a
-    ``snap_<batch_id>`` directory, then flips the ``_LATEST`` pointer
-    file (the atomic commit — a crash between parquet write and pointer
-    flip leaves the previous snapshot current). Exactly-once composes
-    from two idempotencies: the batch_id-keyed snapshot dir makes a
-    replayed write land in the same place, and ``scd2_merge`` itself is
-    a no-op when re-applied (identical tracked values → "keep" branch,
-    no new version rows), so a batch replayed after a crash-after-write
-    cannot double-version the dimension.
-
-    Unlike scd2_upsert_stream (whose SQL oracle is exact only for a
-    single-batch drain), this variant ACCEPTS multi-batch ingestion:
-    version history then legitimately includes intermediate states, and
-    the recovery contract — what tests/test_streaming.py pins — is that
-    the CURRENT rows equal the batch twin's current rows and every
-    key's version intervals chain without overlap.
-
-    Returns the dimension read from the committed snapshot.
-    """
-    import os
-
-    from pdcm_etl_spark.operators.cdc import scd2_merge
-
-    ptr = f"{work_dir}/_LATEST"
-
-    def _load_state() -> DataFrame:
-        if os.path.exists(ptr):
-            with open(ptr) as fh:
-                return spark.read.parquet(
-                    f"{work_dir}/snap_{fh.read().strip()}"
-                )
-        if seed is None:
-            raise ValueError("no committed snapshot and no seed")
-        return seed
-
-    state = {"df": _load_state()}
-
-    def upsert(batch_df, batch_id):
-        # Crash window: if the last run died AFTER the pointer flip but
-        # BEFORE the stream checkpoint committed, the replayed batch
-        # arrives with the pointer already at batch_id. Re-merging
-        # would lazily read snap_<batch_id> while overwriting it
-        # (AnalysisException), so an already-committed batch is a pure
-        # no-op: reload the committed state and return.
-        if os.path.exists(ptr):
-            with open(ptr) as fh:
-                if fh.read().strip() == str(batch_id):
-                    state["df"] = batch_df.sparkSession.read.parquet(
-                        f"{work_dir}/snap_{batch_id}"
-                    )
-                    return
-        merged = scd2_merge(
-            state["df"],
-            batch_df.select("user_id", "event_type", "ts"),
-            keys=["user_id"],
-            tracked=["event_type"],
-        )
-        snap = f"{work_dir}/snap_{batch_id}"
-        merged.write.mode("overwrite").parquet(snap)
-        with open(ptr + ".tmp", "w") as fh:
-            fh.write(str(batch_id))
-        os.replace(ptr + ".tmp", ptr)  # atomic pointer flip
-        state["df"] = batch_df.sparkSession.read.parquet(snap)
-
-    raw = spark.readStream.schema(schema).format("parquet").load(staging_dir)
-    if isinstance(schema["ts"].dataType, T.LongType):
-        raw = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    else:
-        raw = raw.withColumn("ts", F.col("ts").cast("timestamp"))
-    with _stream_state_partitions(spark, staging_dir):
-        q = (
-            raw.select("user_id", "event_type", "ts")
-            .writeStream.foreachBatch(upsert)
-            .option("checkpointLocation", f"{work_dir}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return _load_state().select(
-        "user_id", "event_type", "valid_from", "valid_to", "is_current"
-    )
-
-
 def attribution_stream_left_join(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """Stream-stream LEFT OUTER join with an event-time range condition:
-    every click joins purchases by the same user within the preceding
-    hour — and clicks with NO purchase emit a null-extended row once
-    the watermark proves no match can still arrive (the semantics an
-    attribution pipeline needs: unconverted traffic must surface, not
-    linger in state forever).
+    """Stream-stream LEFT OUTER range join (``_attribution_join``) over
+    two streams of the lake: every click joins purchases by the same
+    user within the preceding hour — and clicks with NO purchase emit a
+    null-extended row once the watermark proves no match can still
+    arrive (the semantics an attribution pipeline needs: unconverted
+    traffic must surface, not linger in state forever).
 
     The outer side's state is the scale hazard: a row can only be
     null-emitted after the other side's watermark passes its joinable
@@ -764,60 +691,24 @@ def attribution_stream_left_join(
     Returns (event_id, user_id, click_ts, purchase_ts nullable,
     matched).
     """
-    clicks = (
-        events_stream_source(spark, sf_dir)
-        .filter(F.col("event_type") == "click")
-        .select(
-            "event_id",
-            F.col("user_id").alias("c_user_id"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", "1 day")
-    )
-    purchases = (
-        events_stream_source(spark, sf_dir)
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user_id"),
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", "1 day")
-    )
-    joined = clicks.join(
-        purchases,
-        F.expr(
-            "c_user_id = p_user_id AND "
-            "click_ts >= purchase_ts AND "
-            "click_ts <= purchase_ts + INTERVAL 1 HOUR"
-        ),
+    joined = _attribution_join(
+        events_stream_source(spark, sf_dir),
+        events_stream_source(spark, sf_dir),
         "left_outer",
-    ).select(
-        "event_id",
-        F.col("c_user_id").alias("user_id"),
-        "click_ts",
-        "purchase_ts",
-        F.col("purchase_ts").isNotNull().alias("matched"),
     )
-    with _stream_state_partitions(spark, f"{sf_dir}/events.parquet"):
-        q = (
-            joined.writeStream.format("memory")
-            .queryName("attribution_stream_left")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table("attribution_stream_left")
+    return _drain(
+        joined, f"{sf_dir}/events.parquet", "attribution_stream_left"
+    )
 
 
 def attribution_stream_left_join_restartable(
     spark: SparkSession,
     staging_dir: str,
-    schema,
+    schema: T.StructType,
     work_dir: str,
 ) -> DataFrame:
-    """Crash-recoverable twin of attribution_stream_left_join: file
-    sources over ``staging_dir``, parquet sink + checkpoint under
+    """Crash-recoverable twin of attribution_stream_left_join: one file
+    source over ``staging_dir``, parquet sink + checkpoint under
     ``work_dir`` — a torn-down (or crashed) drain restarted with the
     same ``work_dir`` resumes from the checkpoint and appends ONLY the
     still-unemitted rows.
@@ -832,52 +723,10 @@ def attribution_stream_left_join_restartable(
 
     Returns the accumulated parquet sink.
     """
-    raw = spark.readStream.schema(schema).format("parquet").load(staging_dir)
-    if isinstance(schema["ts"].dataType, T.LongType):
-        raw = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    else:
-        raw = raw.withColumn("ts", F.col("ts").cast("timestamp"))
-    clicks = (
-        raw.filter(F.col("event_type") == "click")
-        .select(
-            "event_id",
-            F.col("user_id").alias("c_user_id"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", "1 day")
+    raw = events_stream(spark, staging_dir, schema)
+    return _drain(
+        _attribution_join(raw, raw, "left_outer"),
+        staging_dir,
+        f"{work_dir}/out",
+        checkpoint=f"{work_dir}/ckpt",
     )
-    purchases = (
-        raw.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user_id"),
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", "1 day")
-    )
-    joined = clicks.join(
-        purchases,
-        F.expr(
-            "c_user_id = p_user_id AND "
-            "click_ts >= purchase_ts AND "
-            "click_ts <= purchase_ts + INTERVAL 1 HOUR"
-        ),
-        "left_outer",
-    ).select(
-        "event_id",
-        F.col("c_user_id").alias("user_id"),
-        "click_ts",
-        "purchase_ts",
-        F.col("purchase_ts").isNotNull().alias("matched"),
-    )
-    out = f"{work_dir}/out"
-    with _stream_state_partitions(spark, staging_dir):
-        q = (
-            joined.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", f"{work_dir}/ckpt")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.read.parquet(out)

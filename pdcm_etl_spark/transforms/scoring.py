@@ -22,7 +22,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 METADATA_WEIGHT = 0.9
 RAW_DATA_WEIGHT = 0.07
@@ -58,16 +57,6 @@ PDX_ONLY_WEIGHTS: dict[str, float] = {
     "xenograft_model_specimens.engraftment_sample_state": 0,
     "xenograft_model_specimens.passage_number": 1,
 }
-
-JSON_ARRAY_COLUMNS = ["quality_assurance", "xenograft_model_specimens"]
-
-_MAP_ARRAY = T.ArrayType(T.MapType(T.StringType(), T.StringType()))
-
-
-def is_valid(col: Column) -> Column:
-    lc = F.lower(F.coalesce(col, F.lit("")))
-    return ~lc.isin("", "not provided", "not collected", "unknown")
-
 
 _INVALID_SQL = "('', 'not provided', 'not collected', 'unknown')"
 

@@ -17,7 +17,7 @@ def test_stream_daily_counts_match_batch(spark, sf_dir):
     }
     stream = {
         (r["day"], r["event_type"]): (r["n_events"], r["sum_value_micro"])
-        for r in run_availablenow(spark, sf_dir, "t_stream_daily").collect()
+        for r in run_availablenow(spark, sf_dir).collect()
     }
     assert stream == batch
 
@@ -198,23 +198,20 @@ def test_stream_agg_kill_and_restart_from_checkpoint(
 
     from pdcm_etl_spark.plans.catalog import q_events_daily
     from pdcm_etl_spark.streaming.events_stream import (
-        daily_counts_stream_over,
+        _drain,
+        daily_counts_stream,
+        events_stream,
     )
 
     staging, schema, f2, f2_target = _stage_halves(spark, sf_dir, tmp_path)
 
     def drain(out, ckpt):
-        q = (
-            daily_counts_stream_over(spark, staging, schema)
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+        return _drain(
+            daily_counts_stream(events_stream(spark, staging, schema)),
+            staging,
+            out,
+            checkpoint=ckpt,
         )
-        q.awaitTermination()
-        return spark.read.parquet(out)
 
     out, ckpt = str(tmp_path / "sink"), str(tmp_path / "ckpt")
     phase1 = drain(out, ckpt).count()  # half the lake, then torn down
@@ -390,6 +387,44 @@ def test_stream_scd2_replay_after_pointer_flip_crash(
     current = [r for r in dim.collect() if r["is_current"]]
     assert len(current) == len({r["user_id"] for r in current})
     assert {r["user_id"]: r["event_type"] for r in current} == truth
+
+
+def test_stream_scd2_single_batch_guard_rejects_multi_batch_drain(
+    spark, sf_dir, tmp_path
+):
+    """scd2_upsert_stream's SQL oracle is exact only for a single-batch
+    drain, so its guard must raise when the drain takes more than one
+    microbatch. Drive the shared SCD2 body over both staged halves with
+    a source that admits one file per microbatch: two batches."""
+    import os
+    import shutil
+
+    import pytest
+
+    from pdcm_etl_spark.plans.catalog import load_events
+    from pdcm_etl_spark.streaming.events_stream import (
+        _first_event_seed,
+        _scd2_single_batch,
+    )
+
+    staging, schema, f2, f2_target = _stage_halves(spark, sf_dir, tmp_path)
+    shutil.copy(f2, f2_target)
+    # a file source admits files oldest first; copied in the same
+    # millisecond the halves could arrive out of event order, which
+    # scd2_merge rejects before the guard is reached
+    a_mtime = os.path.getmtime(f"{staging}/a.parquet")
+    os.utime(f2_target, (a_mtime + 60, a_mtime + 60))
+    # the guard counts microbatches whatever their values, so the
+    # test's own source casts ts without the nanos branch
+    events = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(staging)
+        .withColumn("ts", F.col("ts").cast("timestamp"))
+    )
+    seed = _first_event_seed(load_events(spark, sf_dir))
+    with pytest.raises(AssertionError, match="drain took 2 microbatches"):
+        _scd2_single_batch(events, staging, seed)
 
 
 def test_stream_left_outer_join_kill_and_restart(spark, sf_dir, tmp_path):
