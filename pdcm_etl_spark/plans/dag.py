@@ -12,9 +12,10 @@ molecular_characterization pattern, SURVEY §4).
 
 from __future__ import annotations
 
-import threading
-from concurrent.futures import Future, ThreadPoolExecutor
+import heapq
+from concurrent.futures import FIRST_COMPLETED, Future, ThreadPoolExecutor, wait
 from dataclasses import dataclass, field
+from functools import partial
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -164,18 +165,28 @@ class EntityDag:
     def run(self, targets: list[str] | None = None) -> dict[str, DataFrame]:
         """Resolve all (or the given) entities; returns name → DataFrame.
 
-        Nodes are resolved on a thread pool in dependency order: each node
-        starts as soon as its deps are done. This matters because resolving
-        a checkpointed node executes its upstream shuffle stages (AQE
-        finalizes the plan when the RDD is created) — serially that puts
-        every materialization on the critical path; threaded, independent
-        subgraphs overlap and the wall time is the DAG's critical path
-        (measured sf0.1 flagship: 45.9s → 27.7s cold at 8 threads; the
-        ``RESOLVE_THREADS`` = 24 threads take warm 32s → 24s — the
-        per-node materializations are small jobs, so a deeper submission
-        queue keeps the scheduler fed; executors are shared FIFO either
-        way). Spark job submission is thread-safe; node fns are pure plan
-        builders.
+        Scheduling model: the calling thread owns the graph and a pool of
+        ``RESOLVE_THREADS`` workers only builds nodes. A node is submitted
+        once its last dependency has resolved, so no worker ever blocks
+        waiting on another node; among the ready nodes the one with the
+        longest chain of needed dependents goes first, and at most one
+        node per worker is in flight, so a late-listed root on the
+        critical path is not queued behind short side branches. The first
+        node that raises stops all submission: the in-flight nodes finish,
+        the pool shuts down, the error propagates from ``run`` and no
+        dependent of the failed node runs.
+
+        Threads matter because resolving a checkpointed node executes its
+        upstream shuffle stages (AQE finalizes the plan when the RDD is
+        created): serially every materialization sits on the critical
+        path; on the pool independent subgraphs overlap and the wall time
+        is the DAG's critical path (sf0.1 flagship: 45.9 s → 27.7 s cold
+        at 8 threads). The thread count is a constant, not a knob: with
+        the blocking waits gone a worker only ever holds a runnable node,
+        and 4, 8 and 24 threads measured the same on a 4-core host while
+        the per-node jobs are small enough that a wide pool keeps the
+        Spark scheduler fed on larger hosts. Spark job submission is
+        thread-safe; node fns are pure plan builders.
         """
         names = targets or list(self.nodes)
 
@@ -194,34 +205,44 @@ class EntityDag:
                 if d not in self._results and d not in needed
             )
 
-        futures: dict[str, Future] = {}
-        lock = threading.Lock()
+        waiting = {
+            n: {d for d in self.nodes[n].deps if d in needed} for n in needed
+        }
+        dependents: dict[str, list[str]] = {n: [] for n in needed}
+        for n, deps in waiting.items():
+            for d in deps:
+                dependents[d].append(n)
+        # longest chain of needed dependents below each node (itself = 1)
+        height: dict[str, int] = {}
+        for n in reversed([n for n in self.topological_order() if n in needed]):
+            height[n] = 1 + max((height[c] for c in dependents[n]), default=0)
 
-        def resolve(name: str) -> DataFrame:
+        def resolve(name: str, args: list[DataFrame]) -> DataFrame:
             node = self.nodes[name]
-            args = [
-                self._results[d] if d in self._results else futures[d].result()
-                for d in node.deps
-            ]
-            df = (
-                node.fn(self.spark, *args)
-                if node.needs_spark
-                else node.fn(*args)
-            )
-            df = self._share_if_reused(name, df, scope=needed)
-            with lock:
-                self._results[name] = df
-            return df
+            df = node.fn(self.spark, *args) if node.needs_spark else node.fn(*args)
+            return self._share_if_reused(name, df, scope=needed)
 
+        ready = [(-height[n], n) for n, deps in waiting.items() if not deps]
+        heapq.heapify(ready)
+        running: dict[Future, str] = {}
         with ThreadPoolExecutor(max_workers=RESOLVE_THREADS) as pool:
-            # topo order guarantees dep futures exist before dependents
-            for n in self.topological_order():
-                if n in needed:
-                    futures[n] = pool.submit(resolve, n)
-            return {
-                n: futures[n].result() if n in futures else self._results[n]
-                for n in names
-            }
+            while ready or running:
+                while ready and len(running) < RESOLVE_THREADS:
+                    _, n = heapq.heappop(ready)
+                    args = [self._results[d] for d in self.nodes[n].deps]
+                    running[pool.submit(resolve, n, args)] = n
+                done, _ = wait(running, return_when=FIRST_COMPLETED)
+                for fut in done:
+                    n = running.pop(fut)
+                    if fut.exception() is not None:
+                        wait(running)
+                        raise fut.exception()
+                    self._results[n] = fut.result()
+                    for c in dependents[n]:
+                        waiting[c].discard(n)
+                        if not waiting[c]:
+                            heapq.heappush(ready, (-height[c], c))
+        return {n: self._results[n] for n in names}
 
     def topological_order(self) -> list[str]:
         order: list[str] = []
@@ -258,8 +279,8 @@ def build_metadata_dag(spark: SparkSession, raw: dict[str, DataFrame]) -> Entity
         dag.add_input(f"raw/{name}", df)
 
     dag.add("ethnicity", dims.ethnicity, ["raw/patient"])
-    dag.add("provider_type", dims.provider_type, ["raw/source"])
-    dag.add("project_group", dims.project_group, ["raw/source"])
+    _add_name_dims(dag, "source_name_dims", dims.source_name_dims,
+                   ["raw/source"], dims.SOURCE_NAME_DIMS)
     dag.add(
         "provider_group",
         dims.provider_group,
@@ -322,8 +343,8 @@ def build_metadata_dag(spark: SparkSession, raw: dict[str, DataFrame]) -> Entity
     )
 
     if "sample" in raw:
-        dag.add("tissue", sample_t.tissue, ["raw/sample"])
-        dag.add("tumour_type", sample_t.tumour_type, ["raw/sample"])
+        _add_name_dims(dag, "sample_name_dims", sample_t.sample_name_dims,
+                       ["raw/sample"], sample_t.SAMPLE_NAME_DIMS)
         dag.add(
             "patient_sample",
             sample_t.patient_sample,
@@ -331,12 +352,9 @@ def build_metadata_dag(spark: SparkSession, raw: dict[str, DataFrame]) -> Entity
         )
 
     if "drug_dosing" in raw and "patient_treatment" in raw:
-        dag.add("response", tr_t.response, ["raw/drug_dosing", "raw/patient_treatment"])
-        dag.add(
-            "response_classification",
-            tr_t.response_classification,
-            ["raw/drug_dosing", "raw/patient_treatment"],
-        )
+        _add_name_dims(dag, "response_name_dims", tr_t.response_name_dims,
+                       ["raw/drug_dosing", "raw/patient_treatment"],
+                       tr_t.RESPONSE_NAME_DIMS)
         dag.add(
             "treatment_protocol",
             tr_t.treatment_protocol,
@@ -375,10 +393,8 @@ def build_metadata_dag(spark: SparkSession, raw: dict[str, DataFrame]) -> Entity
     if "model" in raw:
         from pdcm_etl_spark.transforms import lineage as lin_t, specimen as spec_t
 
-        dag.add("engraftment_site", spec_t.engraftment_site, ["raw/model"])
-        dag.add("engraftment_type", spec_t.engraftment_type, ["raw/model"])
-        dag.add("engraftment_sample_type", spec_t.engraftment_sample_type, ["raw/model"])
-        dag.add("engraftment_sample_state", spec_t.engraftment_sample_state, ["raw/model"])
+        _add_name_dims(dag, "model_name_dims", spec_t.model_name_dims,
+                       ["raw/model"], spec_t.MODEL_NAME_DIMS)
         dag.add("host_strain", spec_t.host_strain, ["raw/model"])
         dag.add(
             "xenograft_model_specimen",
@@ -485,55 +501,17 @@ def build_metadata_dag(spark: SparkSession, raw: dict[str, DataFrame]) -> Entity
                 _available_columns_adapter(meas_mods),
                 [f"{m}_measurement_data" for m in meas_mods],
             )
-        # per-model marker-list aggregates for search_index
-        # (search_index_molecular_data_transformer_job.py:296-315): one
-        # markers_with_<type>_data array per measurement type
-        for mod, out_col, sym in [
-            ("mutation", "markers_with_mutation_data", "symbol"),
-            ("cna", "markers_with_cna_data", "symbol"),
-            ("expression", "markers_with_expression_data", "symbol"),
-            ("biomarker", "markers_with_biomarker_data", "symbol"),
-        ]:
-            if mod in meas_mods:
-                dag.add(
-                    out_col,
-                    _genes_per_model_adapter(out_col, sym),
-                    [f"{mod}_measurement_data", "model_molchar"],
-                )
-        if "immunemarker" in meas_mods:
-            dag.add(
-                "msi_status",
-                md_t.msi_status_per_model,
-                ["immunemarker_measurement_data", "model_molchar"],
-            )
-            dag.add(
-                "hla_types",
-                md_t.hla_types_per_model,
-                ["immunemarker_measurement_data", "model_molchar"],
-            )
-        if "biomarker" in meas_mods:
-            dag.add(
-                "breast_cancer_biomarkers",
-                md_t.breast_cancer_biomarkers_per_model,
-                ["biomarker_measurement_data", "model_molchar"],
-            )
-        # raw-data archive names per model (ENA/EGA/GEO from raw_data_url;
-        # ref model_metadata_transformer_job.py:88-89)
+        # every per-model molecular aggregate of search_index (marker
+        # lists, msi, hla, breast-cancer biomarkers, raw-data and
+        # annotation resources) in one aggregation over model_molchar
+        with_resources = "resource" in raw
         dag.add(
-            "raw_data_resources",
-            links_t.raw_data_resources_per_model,
-            ["molecular_characterization", "model_molchar"],
+            "molecular_aggregates_by_model",
+            _molecular_aggregates_adapter(meas_mods, with_resources),
+            [f"{m}_measurement_data" for m in meas_mods]
+            + ["molecular_characterization", "model_molchar"]
+            + (["raw/resource"] if with_resources else []),
         )
-        # annotation resources matching the model's molecular data
-        # (ref search_index_molecular_data_transformer_job.py:83-90)
-        annot_mods = [m for m in meas_mods if m in harmonisable]
-        if "resource" in raw and annot_mods:
-            dag.add(
-                "cancer_annotation_resources",
-                _annotation_resources_adapter(len(annot_mods)),
-                [f"{m}_measurement_data" for m in annot_mods]
-                + ["model_molchar", "raw/resource"],
-            )
 
     # imaging cluster (image_study/model_image modules)
     if "image_study" in raw:
@@ -609,15 +587,8 @@ def build_metadata_dag(spark: SparkSession, raw: dict[str, DataFrame]) -> Entity
             dag.add("publications_json_agg", meta_t.publications_json,
                     ["initial_model"])
             six_deps.append("publications_json_agg")
-            # molecular per-model aggregates (marker lists, msi, hla,
-            # breast-cancer biomarkers) — whichever this run produced
-            for agg in ("markers_with_mutation_data", "markers_with_cna_data",
-                        "markers_with_expression_data",
-                        "markers_with_biomarker_data", "msi_status",
-                        "hla_types", "breast_cancer_biomarkers",
-                        "raw_data_resources", "cancer_annotation_resources"):
-                if agg in dag.nodes:
-                    six_deps.append(agg)
+            if "molecular_aggregates_by_model" in dag.nodes:
+                six_deps.append("molecular_aggregates_by_model")
             # treatment-type list per model over harmonised ontology terms
             if ("treatment_name_harmonisation" in dag.nodes
                     and "treatment_component_helper" in dag.nodes):
@@ -691,27 +662,25 @@ def _resolve_molchar_model_ids(molchar, initial_model):
     )
 
 
-def _genes_per_model_adapter(out_col: str, symbol_col: str):
-    """Sorted distinct marker list per model for one measurement type —
-    feeds search_index and the models_by_mutated_gene view
-    (views.sql:1113-1126)."""
-    def build(md, model_molchar):
+def _add_name_dims(dag: EntityDag, family: str, build, deps, dims) -> None:
+    """One node builds the whole name-dim family (``dims.name_dims``);
+    each dim is a cheap slice of it, so the family counts the slices'
+    consumers and is shared once for all of them."""
+    from pdcm_etl_spark.transforms.dims import name_dim
+
+    dag.add(family, build, deps)
+    for dim in dims:
+        dag.add(dim, partial(name_dim, dim=dim), [family], cheap=True)
+
+
+def _molecular_aggregates_adapter(mods: list[str], with_resources: bool):
+    def build(*dfs):
         from pdcm_etl_spark.transforms import molecular_data as md_t
 
-        sym = symbol_col if symbol_col in md.columns else "biomarker"
-        return md_t.genes_per_model(md, model_molchar, out_col, symbol_col=sym)
-
-    return build
-
-
-def _annotation_resources_adapter(n_measurements: int):
-    def build(*dfs):
-        from pdcm_etl_spark.transforms import links as links_t
-
-        measurement_frames = list(dfs[:n_measurements])
-        model_molchar, resources = dfs[n_measurements], dfs[n_measurements + 1]
-        return links_t.cancer_annotation_resources_per_model(
-            measurement_frames, model_molchar, resources
+        n = len(mods)
+        return md_t.molecular_aggregates_per_model(
+            dict(zip(mods, dfs[:n])), dfs[n], dfs[n + 1],
+            dfs[n + 2] if with_resources else None,
         )
 
     return build

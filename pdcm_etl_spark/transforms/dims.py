@@ -14,11 +14,24 @@ Parity targets (semantics, not code):
 All dims end in (id, business columns) with a deterministic dense id over
 the business key. They are small by construction → always broadcast on the
 FK side.
+
+One name-dim builder: every one-column distinct-name dim (here
+ethnicity, provider_type, project_group; the engraftment, tissue /
+tumour_type and response dims in their own modules) comes out of
+``name_dims``. The dims that read the same raw module(s) form one family
+and are built in one plan: tagged ``(dim, name)`` rows, distinct, then
+``dense_rank()`` partitioned by dim and ordered by name, so each dim's
+ids equal its own dense rank. ``name_dim`` slices one dim back out; the
+entity DAG shares the family plan once and wires each dim as a cheap
+slice of it.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from functools import reduce
+from typing import Callable
+
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from pdcm_etl_spark.functions.cleaner import init_cap_and_trim_all, trim_all
@@ -26,25 +39,55 @@ from pdcm_etl_spark.functions.ids import add_id
 from pdcm_etl_spark.sources.tsv import PROVIDER_COL
 
 
-def _distinct_name_dim(df: DataFrame, src_col: str, clean=init_cap_and_trim_all) -> DataFrame:
-    out = (
-        df.select(clean(src_col).alias("name"))
-        .where("name is not null and name != ''")
-        .drop_duplicates()
+# dim -> (clean function, source columns): one family of name dims
+NameDims = dict[str, tuple[Callable[[str], Column], tuple[str, ...]]]
+
+SOURCE_NAME_DIMS: NameDims = {
+    "provider_type": (trim_all, ("provider_type",)),
+    "project_group": (trim_all, ("project",)),
+}
+
+
+def name_dims(frames: list[DataFrame], dims: NameDims) -> DataFrame:
+    """``(dim, id, name)`` for a family of one-column distinct-name dims
+    over the same raw frame(s): each row is cleaned and tagged once per
+    (dim, source column), empty and null names are dropped, and ids are
+    the dense rank of the name within its dim. One shuffle on the dim
+    tag serves the distinct and the rank window alike."""
+    cols = [
+        F.struct(F.lit(dim).alias("dim"), clean(c).alias("name"))
+        for dim, (clean, src_cols) in dims.items()
+        for c in src_cols
+    ]
+    tagged = reduce(
+        DataFrame.unionByName,
+        [df.select(F.inline(F.array(*cols))) for df in frames],
     )
-    return add_id(out, "id", key_cols=["name"]).select("id", "name")
+    return (
+        tagged.where("name is not null and name != ''")
+        .repartition("dim")
+        .distinct()
+        .withColumn(
+            "id",
+            F.dense_rank().over(Window.partitionBy("dim").orderBy("name")).cast("bigint"),
+        )
+        .select("dim", "id", "name")
+    )
+
+
+def name_dim(family: DataFrame, dim: str) -> DataFrame:
+    """One dim's ``(id, name)`` rows out of a ``name_dims`` family."""
+    return family.where(F.col("dim") == dim).select("id", "name")
 
 
 def ethnicity(raw_patient: DataFrame) -> DataFrame:
-    return _distinct_name_dim(raw_patient, "ethnicity")
+    dims = {"ethnicity": (init_cap_and_trim_all, ("ethnicity",))}
+    return name_dim(name_dims([raw_patient], dims), "ethnicity")
 
 
-def provider_type(raw_source: DataFrame) -> DataFrame:
-    return _distinct_name_dim(raw_source, "provider_type", clean=trim_all)
-
-
-def project_group(raw_source: DataFrame) -> DataFrame:
-    return _distinct_name_dim(raw_source, "project", clean=trim_all)
+def source_name_dims(raw_source: DataFrame) -> DataFrame:
+    """provider_type + project_group as one ``(dim, id, name)`` family."""
+    return name_dims([raw_source], SOURCE_NAME_DIMS)
 
 
 def provider_group(

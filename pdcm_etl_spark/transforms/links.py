@@ -157,75 +157,3 @@ def dbsnp_links(molecular_df: DataFrame, template: str = "https://www.ncbi.nlm.n
 
 def cosmic_links(molecular_df: DataFrame, template: str = "https://cancer.sanger.ac.uk/cosmic/search?q=COSMIC_ID") -> DataFrame:
     return regex_id_links(molecular_df, r"(COSV\d+)", template, "COSMIC_ID", "COSMIC", "variation_id")
-
-
-def raw_data_resources_per_model(
-    molchar_df: DataFrame, model_molchar_df: DataFrame
-) -> DataFrame:
-    """Sorted set of raw-data archive names per model ('ENA:ERP000001' →
-    'ENA'), parsed from the molecular characterization's raw_data_url.
-
-    Reference: model_metadata_transformer_job.py:88-89 +
-    resources_per_model_util.add_raw_data_resources — there the archive
-    name round-trips through an external_db_links JSON string; here it is
-    a direct split of the URL accession prefix. Scale: molchar metadata is
-    model-bounded; one set-agg shuffle of short strings."""
-    res = (
-        molchar_df.filter(
-            F.col("raw_data_url").isNotNull() & (F.trim("raw_data_url") != "")
-        )
-        .select(
-            F.col("id").alias("mol_char_id"),
-            F.split(F.col("raw_data_url"), ":").getItem(0).alias("resource"),
-        )
-    )
-    return (
-        model_molchar_df.join(res, "mol_char_id")
-        .groupBy("model_id")
-        .agg(F.array_sort(F.collect_set("resource")).alias("raw_data_resources"))
-    )
-
-
-def cancer_annotation_resources_per_model(
-    symbol_frames: list[DataFrame],
-    model_molchar_df: DataFrame,
-    resources_df: DataFrame,
-    symbol_col: str = "symbol",
-) -> DataFrame:
-    """Sorted set of Gene/Variant annotation resources (Civic, OncoMx, …)
-    whose downloaded entry lists match the model's molecular data.
-
-    The reference runs one groupBy PER resource over the external_db_links
-    strings (resources_per_model_util.py:94-112 — O(#resources) full
-    passes over fact-scale data). Spark-first rewrite: the resource entry
-    lists broadcast into ONE equi join against the distinct per-molchar
-    symbols, then a model-level set aggregation — a single pass no matter
-    how many resources are registered."""
-    lookup = F.broadcast(
-        resources_df.filter(F.col("type").isin("Gene", "Variant"))
-        .select(F.col("entry"), F.col("resource"))
-        .distinct()
-    )
-    md = None
-    for frame in symbol_frames:
-        sym = symbol_col if symbol_col in frame.columns else "biomarker"
-        part = frame.select(
-            "molecular_characterization_id", F.col(sym).alias("entry")
-        )
-        md = part if md is None else md.unionByName(part)
-    hits = (
-        md.join(lookup, "entry")
-        .select(
-            F.col("molecular_characterization_id").alias("mol_char_id"), "resource"
-        )
-        .distinct()
-    )
-    return (
-        model_molchar_df.join(hits, "mol_char_id")
-        .groupBy("model_id")
-        .agg(
-            F.array_sort(F.collect_set("resource")).alias(
-                "cancer_annotation_resources"
-            )
-        )
-    )

@@ -1,9 +1,10 @@
 """Patient-sample cluster: tissue & tumour_type dims + patient_sample.
 
 Parity: tissue_transformer_job / tumour_type_transformer_job (name dims
-over sample columns) and patient_sample_transformer_job.py:40-120 —
-extract, clean, FK patient (2-key join with provider), tissue FKs for
-primary & collection site, tumour_type FK, model name link.
+over sample columns, built as one family by dims.name_dims) and
+patient_sample_transformer_job.py:40-120 — extract, clean, FK patient
+(2-key join with provider), tissue FKs for primary & collection site,
+tumour_type FK, model name link.
 """
 
 from __future__ import annotations
@@ -15,26 +16,20 @@ from pdcm_etl_spark.functions.cleaner import init_cap_and_trim_all, lower_and_tr
 from pdcm_etl_spark.functions.ids import add_id
 from pdcm_etl_spark.functions.joins import transform_to_fk
 from pdcm_etl_spark.sources.tsv import PROVIDER_COL
+from pdcm_etl_spark.transforms.dims import NameDims, name_dims
 
 
-def tissue(raw_sample: DataFrame) -> DataFrame:
-    """Distinct lowercased site names from primary + collection site."""
-    out = (
-        raw_sample.select(lower_and_trim_all("primary_site").alias("name"))
-        .unionByName(raw_sample.select(lower_and_trim_all("collection_site").alias("name")))
-        .where("name is not null and name != ''")
-        .drop_duplicates()
-    )
-    return add_id(out, "id", key_cols=["name"]).select("id", "name")
+SAMPLE_NAME_DIMS: NameDims = {
+    # distinct lowercased site names from primary + collection site
+    "tissue": (lower_and_trim_all, ("primary_site", "collection_site")),
+    "tumour_type": (init_cap_and_trim_all, ("tumour_type",)),
+}
 
 
-def tumour_type(raw_sample: DataFrame) -> DataFrame:
-    out = (
-        raw_sample.select(init_cap_and_trim_all("tumour_type").alias("name"))
-        .where("name is not null and name != ''")
-        .drop_duplicates()
-    )
-    return add_id(out, "id", key_cols=["name"]).select("id", "name")
+def sample_name_dims(raw_sample: DataFrame) -> DataFrame:
+    """tissue + tumour_type as one ``(dim, id, name)`` family
+    (``dims.name_dims``)."""
+    return name_dims([raw_sample], SAMPLE_NAME_DIMS)
 
 
 def patient_sample(

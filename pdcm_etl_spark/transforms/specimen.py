@@ -3,7 +3,7 @@ specimens, quality assurance.
 
 Parity targets (semantics):
 - engraftment_site/type/sample_type/sample_state dims: name dims over the
-  PDX model module columns
+  PDX model module columns, built as one family (dims.name_dims)
 - host_strain: host_strain_transformer_job.py:28-56 — (name, nomenclature)
   with nomenclature uniqueness kept via row_number (our version makes the
   pick deterministic by ordering on name, not just the partition key)
@@ -22,31 +22,21 @@ from pdcm_etl_spark.functions.cleaner import init_cap_and_trim_all, lower_and_tr
 from pdcm_etl_spark.functions.ids import add_id
 from pdcm_etl_spark.functions.joins import transform_to_fk
 from pdcm_etl_spark.sources.tsv import PROVIDER_COL
+from pdcm_etl_spark.transforms.dims import NameDims, name_dims
 
 
-def _name_dim(raw_model: DataFrame, src_col: str) -> DataFrame:
-    out = (
-        raw_model.select(init_cap_and_trim_all(src_col).alias("name"))
-        .where("name is not null and name != ''")
-        .drop_duplicates()
-    )
-    return add_id(out, "id", key_cols=["name"]).select("id", "name")
+MODEL_NAME_DIMS: NameDims = {
+    "engraftment_site": (init_cap_and_trim_all, ("engraftment_site",)),
+    "engraftment_type": (init_cap_and_trim_all, ("engraftment_type",)),
+    "engraftment_sample_type": (init_cap_and_trim_all, ("sample_type",)),
+    "engraftment_sample_state": (init_cap_and_trim_all, ("sample_state",)),
+}
 
 
-def engraftment_site(raw_model: DataFrame) -> DataFrame:
-    return _name_dim(raw_model, "engraftment_site")
-
-
-def engraftment_type(raw_model: DataFrame) -> DataFrame:
-    return _name_dim(raw_model, "engraftment_type")
-
-
-def engraftment_sample_type(raw_model: DataFrame) -> DataFrame:
-    return _name_dim(raw_model, "sample_type")
-
-
-def engraftment_sample_state(raw_model: DataFrame) -> DataFrame:
-    return _name_dim(raw_model, "sample_state")
+def model_name_dims(raw_model: DataFrame) -> DataFrame:
+    """The four engraftment name dims over the PDX model module, as one
+    ``(dim, id, name)`` family (``dims.name_dims``)."""
+    return name_dims([raw_model], MODEL_NAME_DIMS)
 
 
 def host_strain(raw_model: DataFrame) -> DataFrame:

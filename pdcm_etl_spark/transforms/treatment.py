@@ -1,7 +1,8 @@
 """Treatment subsystem entities.
 
 Parity targets (semantics):
-- response / response_classification dims: name dims over protocol columns
+- response / response_classification dims: name dims over protocol
+  columns, built as one family (dims.name_dims)
 - treatment_protocol: treatment_protocol_transformer_job.py:45-115 —
   drug-dosing (model FK) ∪ patient-treatment (patient FK) + response FKs
 - treatment_and_component_helper:
@@ -14,7 +15,8 @@ Parity targets (semantics):
   regimen component lists (idiomatic rewrite: array_sort(collect_list)
   instead of window+max)
 - per-model aggregation: treatment_data_aggregator_by_model.py:90-165 —
-  arrays per (model, target), drug-dosing ⟗ patient full outer join
+  arrays per (model, target); the reference's drug-dosing ⟗ patient full
+  outer join becomes one groupBy(model) with per-target aggregates
 
 Scale: protocols/treatments are dim-sized relative to molecular data;
 the per-model aggregation is the only fact-scale shuffle (keyed on
@@ -24,7 +26,7 @@ by protocol count, with map-side dedup before the shuffle.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from pdcm_etl_spark.functions.cleaner import (
@@ -35,38 +37,21 @@ from pdcm_etl_spark.functions.cleaner import (
 from pdcm_etl_spark.functions.ids import add_id
 from pdcm_etl_spark.functions.joins import transform_to_fk
 from pdcm_etl_spark.sources.tsv import PROVIDER_COL
+from pdcm_etl_spark.transforms.dims import NameDims, name_dims
 
 
-def response(raw_drug_dosing: DataFrame, raw_patient_treatment: DataFrame) -> DataFrame:
-    out = (
-        raw_drug_dosing.select(init_cap_and_trim_all("treatment_response").alias("name"))
-        .unionByName(
-            raw_patient_treatment.select(
-                init_cap_and_trim_all("treatment_response").alias("name")
-            )
-        )
-        .where("name is not null and name != ''")
-        .drop_duplicates()
-    )
-    return add_id(out, "id", key_cols=["name"]).select("id", "name")
+RESPONSE_NAME_DIMS: NameDims = {
+    "response": (init_cap_and_trim_all, ("treatment_response",)),
+    "response_classification": (init_cap_and_trim_all, ("response_classification",)),
+}
 
 
-def response_classification(
+def response_name_dims(
     raw_drug_dosing: DataFrame, raw_patient_treatment: DataFrame
 ) -> DataFrame:
-    out = (
-        raw_drug_dosing.select(
-            init_cap_and_trim_all("response_classification").alias("name")
-        )
-        .unionByName(
-            raw_patient_treatment.select(
-                init_cap_and_trim_all("response_classification").alias("name")
-            )
-        )
-        .where("name is not null and name != ''")
-        .drop_duplicates()
-    )
-    return add_id(out, "id", key_cols=["name"]).select("id", "name")
+    """response + response_classification over drug dosing ∪ patient
+    treatment as one ``(dim, id, name)`` family (``dims.name_dims``)."""
+    return name_dims([raw_drug_dosing, raw_patient_treatment], RESPONSE_NAME_DIMS)
 
 
 def treatment_protocol(
@@ -248,12 +233,18 @@ def treatment_aggregation_by_model(
     patient_sample_df: DataFrame | None = None,
 ) -> DataFrame:
     """Per-model arrays of treatments/responses for drug-dosing and patient
-    targets, full-outer joined (a model may have either or both).
+    targets: one row per model, each target's pair of columns NULL when
+    the model has no protocol of that target (a model may have either or
+    both).
 
     Patient-target protocols carry a patient FK, not a model FK — they are
     resolved to the patient's model(s) through patient_sample (the
     reference's ``tp.patient_id = ps.patient_id AND m.id = ps.model_id``
-    join, views.sql:1218-1230)."""
+    join, views.sql:1218-1230).
+
+    One ``groupBy(model_id)`` with per-target conditional aggregates: a
+    (model, target) aggregate split by a filter would run twice and need
+    a full outer join to put the halves back together."""
     comp = helper_df.select(
         "treatment_protocol_id", F.lower(trim_all("treatment_name")).alias("treatment_name")
     )
@@ -283,28 +274,34 @@ def treatment_aggregation_by_model(
         ).withColumn(
             "model_id", F.coalesce("model_id", "patient_model_id")
         ).drop("ps_patient_id", "patient_model_id")
-    proto = proto.drop("patient_id")
+    proto = proto.drop("patient_id").where(
+        F.col("treatment_target").isin("drug dosing", "patient")
+    )
     # no pre-dedupe: the per-model lists are array_distinct'ed below, so a
     # full-width drop_duplicates here is an extra fact-scale shuffle for
-    # an identical result (same reasoning as molecular_data.genes_per_model)
-    joined = proto.join(comp, "treatment_protocol_id", "left").drop(
-        "treatment_protocol_id"
-    )
-    grouped = joined.groupBy("model_id", "treatment_target").agg(
-        F.array_sort(F.array_distinct(F.collect_list("treatment_name"))).alias("treatments"),
-        F.array_sort(F.array_distinct(F.collect_list("treatment_response"))).alias("responses"),
-    )
-    dd = grouped.filter(F.col("treatment_target") == "drug dosing").select(
-        "model_id",
-        F.col("treatments").alias("model_treatments"),
-        F.col("responses").alias("model_treatments_responses"),
-    )
-    pt = grouped.filter(F.col("treatment_target") == "patient").select(
-        "model_id",
-        F.col("treatments").alias("patient_treatments"),
-        F.col("responses").alias("patient_treatments_responses"),
-    )
-    return dd.join(pt, on="model_id", how="outer")
+    # an identical result
+    joined = proto.join(comp, "treatment_protocol_id", "left")
+
+    def per_target(target: str, col: str) -> Column:
+        of_target = F.col("treatment_target") == target
+        values = F.collect_list(F.when(of_target, F.col(col)))
+        return F.when(
+            F.count_if(of_target) > 0, F.array_sort(F.array_distinct(values))
+        )
+
+    # a NULL model id never matched in the per-target outer join this
+    # replaces, so such rows keep one output row per target
+    null_model_target = F.when(
+        F.col("model_id").isNull(), F.col("treatment_target")
+    ).alias("__null_model_target")
+    return joined.groupBy("model_id", null_model_target).agg(
+        per_target("drug dosing", "treatment_name").alias("model_treatments"),
+        per_target("drug dosing", "treatment_response")
+        .alias("model_treatments_responses"),
+        per_target("patient", "treatment_name").alias("patient_treatments"),
+        per_target("patient", "treatment_response")
+        .alias("patient_treatments_responses"),
+    ).drop("__null_model_target")
 
 
 def harmonise_treatment_names(

@@ -97,3 +97,59 @@ def test_topological_order(dag):
     assert order.index("provider_type") < order.index("provider_group")
     assert order.index("initial_model") < order.index("model")
     assert order.index("publication_group") < order.index("model")
+
+
+def test_name_dim_family_ids_equal_per_dim_dense_rank(spark):
+    """Every dim sliced out of a ``name_dims`` family carries the ids a
+    dim built alone (distinct cleaned names, ``add_id`` dense rank)
+    would: across a two-frame family, a two-column dim, an empty-string
+    value and a dim with no rows at all."""
+    from pyspark.sql import functions as F
+
+    from pdcm_etl_spark.functions.cleaner import init_cap_and_trim_all, trim_all
+    from pdcm_etl_spark.functions.ids import add_id
+    from pdcm_etl_spark.transforms.dims import name_dim, name_dims
+
+    schema = "a string, b string, c string, d string"
+    left = spark.createDataFrame(
+        [(" beta", "x", "", None), ("alpha", " ", None, "q"),
+         ("Beta ", None, "", "p"), (None, "y", None, None)],
+        schema,
+    )
+    right = spark.createDataFrame(
+        [("gamma", "x", None, None), ("", "z ", "", "q")], schema
+    )
+    family = {
+        "first": (init_cap_and_trim_all, ("a",)),
+        "pair": (trim_all, ("b", "d")),
+        "empty": (trim_all, ("c",)),
+    }
+    stacked = name_dims([left, right], family)
+    for dim, (clean, cols) in family.items():
+        names = None
+        for frame in (left, right):
+            for c in cols:
+                part = frame.select(clean(c).alias("name"))
+                names = part if names is None else names.unionByName(part)
+        want = add_id(
+            names.where("name is not null and name != ''").drop_duplicates(),
+            "id", key_cols=["name"],
+        ).select("id", "name")
+        got = name_dim(stacked, dim)
+        assert got.schema == want.schema, dim
+        assert rows(got, "id", "name") == rows(want, "id", "name"), dim
+    assert rows(name_dim(stacked, "first"), "id", "name") == [
+        (1, "Alpha"), (2, "Beta"), (3, "Gamma")]
+    assert rows(name_dim(stacked, "pair"), "id", "name") == [
+        (1, "p"), (2, "q"), (3, "x"), (4, "y"), (5, "z")]
+    assert name_dim(stacked, "empty").count() == 0
+    assert stacked.where(F.col("name") == "").count() == 0
+
+
+def test_name_dims_are_cheap_slices_of_one_shared_family(dag):
+    """A name-dim family is one DAG node and its dims are cheap slices,
+    so the family counts their consumers and is shared once for all."""
+    assert dag.nodes["source_name_dims"].deps == ["raw/source"]
+    for d in ("provider_type", "project_group"):
+        assert dag.nodes[d].cheap and dag.nodes[d].deps == ["source_name_dims"]
+    assert dag._consumers("source_name_dims", set(dag.nodes)) > 1

@@ -46,18 +46,20 @@ def test_measurement_data_fk_and_stable_id(spark, molchar):
     assert {r["id"] for r in out.collect()} == {r["id"] for r in out2.collect()}
 
 
+def _by_model(df):
+    return {r["model_id"]: r.asDict() for r in df.collect()}
+
+
 def test_per_model_aggregates(spark, molchar):
+    """The fused per-model aggregation gives each former per-kind
+    aggregate's values (marker lists, MSI, HLA, breast-cancer biomarkers)."""
     mm = md.model_molchar(molchar)
     mc_id = {r["sample_id"]: r["id"] for r in molchar.collect()}
 
     mut = spark.createDataFrame(
         [(mc_id["MS1"], "TP53"), (mc_id["MS1"], "KRAS")],
-        "molecular_characterization_id long, hgnc_symbol string",
+        "molecular_characterization_id long, symbol string",
     )
-    genes = {r["model_id"]: r["markers_with_mutation_data"]
-             for r in md.genes_per_model(mut, mm, "markers_with_mutation_data").collect()}
-    assert genes["M1"] == ["KRAS", "TP53"]
-
     imm = spark.createDataFrame(
         [
             (mc_id["MS3"], "Model Genomics", "MSI", "Stable"),
@@ -66,11 +68,6 @@ def test_per_model_aggregates(spark, molchar):
         "molecular_characterization_id long, marker_type string, "
         "marker_name string, marker_value string",
     )
-    msi = {r["model_id"]: r["msi_status"] for r in md.msi_status_per_model(imm, mm).collect()}
-    assert msi == {"M2": ["Stable"]}
-    hla = {r["model_id"]: r["hla_types"] for r in md.hla_types_per_model(imm, mm).collect()}
-    assert hla == {"M2": ["HLA-A*02"]}
-
     bio = spark.createDataFrame(
         [
             (mc_id["MS2"], "ERBB2", "Positive"),
@@ -79,11 +76,77 @@ def test_per_model_aggregates(spark, molchar):
         ],
         "molecular_characterization_id long, biomarker string, biomarker_status string",
     )
-    bc = {r["model_id"]: r["breast_cancer_biomarkers"]
-          for r in md.breast_cancer_biomarkers_per_model(bio, mm).collect()}
-    assert bc["M1"] == ["ER/ESR1 negative", "HER2/ERBB2 positive"]
+    agg = _by_model(md.molecular_aggregates_per_model(
+        {"mutation": mut, "biomarker": bio, "immunemarker": imm},
+        molchar, mm,
+    ))
+    assert agg["M1"]["markers_with_mutation_data"] == ["KRAS", "TP53"]
+    assert {m: r["msi_status"] for m, r in agg.items() if r["msi_status"]} == {
+        "M2": ["Stable"]}
+    assert {m: r["hla_types"] for m, r in agg.items() if r["hla_types"]} == {
+        "M2": ["HLA-A*02"]}
+    assert agg["M1"]["breast_cancer_biomarkers"] == [
+        "ER/ESR1 negative", "HER2/ERBB2 positive"]
 
     avail = {r["model_id"]: r["dataset_available"]
              for r in md.dataset_available_per_model(mm).collect()}
     assert avail["M1"] == ["biomarker", "mutation"]
     assert avail["M2"] == ["immunemarker"]
+
+
+def test_per_model_aggregates_edge_cases(spark):
+    """Left-join kinds give [] for a model with molecular data but no
+    rows of the kind; the former inner-join kinds stay NULL unless the
+    model has a row of the kind (a NULL value still counts); a missing
+    measurement module drops its column; a characterization whose model
+    did not resolve keeps its own NULL-model row."""
+    mm = spark.createDataFrame(
+        [(1, "A", "mutation"), (2, "B", "immunemarker"), (3, None, "mutation")],
+        "mol_char_id long, model_id string, molchar_type string",
+    )
+    molchar = spark.createDataFrame(
+        [(1, "ENA:ERP1"), (2, None), (3, "EGA:EGAS1"), (9, "GEO:GSE9")],
+        "id long, raw_data_url string",
+    )
+    mut = spark.createDataFrame(
+        [(1, "KRAS"), (1, None), (3, "TP53"), (None, "ORPHAN"), (9, "NOMODEL")],
+        "molecular_characterization_id long, symbol string",
+    )
+    imm = spark.createDataFrame(
+        [(2, "Model Genomics", "MSI", None), (1, "Other", "MSI", "Stable")],
+        "molecular_characterization_id long, marker_type string, "
+        "marker_name string, marker_value string",
+    )
+    resources = spark.createDataFrame(
+        [("TP53", "Civic", "Gene"), ("KRAS", "OncoMx", "Variant"),
+         ("KRAS", "Skip", "Other")],
+        "entry string, resource string, type string",
+    )
+    out = md.molecular_aggregates_per_model(
+        {"mutation": mut, "immunemarker": imm}, molchar, mm, resources
+    )
+    assert out.columns == [
+        "model_id", "markers_with_mutation_data", "msi_status", "hla_types",
+        "raw_data_resources", "cancer_annotation_resources",
+    ]
+    agg = _by_model(out)
+    assert set(agg) == {"A", "B", None}
+    assert agg["A"] == dict(
+        model_id="A", markers_with_mutation_data=["KRAS"], msi_status=None,
+        hla_types=None, raw_data_resources=["ENA"],
+        cancer_annotation_resources=["OncoMx"],
+    )
+    # molchar rows but no mutation rows: [] (left join); an MSI row with
+    # a NULL value: [] (the model has a row of the kind)
+    assert agg["B"] == dict(
+        model_id="B", markers_with_mutation_data=[], msi_status=[],
+        hla_types=None, raw_data_resources=None,
+        cancer_annotation_resources=None,
+    )
+    assert agg[None]["markers_with_mutation_data"] == ["TP53"]
+    assert agg[None]["raw_data_resources"] == ["EGA"]
+    assert agg[None]["cancer_annotation_resources"] == ["Civic"]
+    # no resources: no annotation column
+    bare = md.molecular_aggregates_per_model({"cna": mut}, molchar, mm)
+    assert bare.columns == [
+        "model_id", "markers_with_cna_data", "raw_data_resources"]

@@ -8,7 +8,7 @@ plan_fingerprint) and compared against the committed snapshot. A lost
 broadcast, a new shuffle, or a Python UDF creeping into a scalar path
 fails HERE with a one-line refresh path:
 
-    python scripts_dev/refresh_fingerprints.py
+    python scripts_dev/refresh_fingerprints.py <sf_dir> --only <queries>
 
 after which the JSON diff is the review artifact for the intentional
 plan change.
@@ -41,6 +41,7 @@ def test_registry_plan_fingerprints_match_snapshot(sf_dir):
     )
     assert proc.returncode == 0, (
         "plan fingerprints drifted (refresh after an INTENTIONAL "
-        "change: python scripts_dev/refresh_fingerprints.py):\n"
+        "change: python scripts_dev/refresh_fingerprints.py <sf_dir> "
+        "--only <queries>):\n"
         + proc.stdout[-8000:] + proc.stderr[-2000:]
     )

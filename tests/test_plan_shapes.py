@@ -109,8 +109,11 @@ def test_annotation_resources_single_join_any_resource_count(spark):
     ONCE regardless of how many resources are registered — the rewrite of
     the reference's per-resource groupBy loop (resources_per_model_util
     .py:94-112, O(#resources) passes). Join-operator count in the
-    optimized plan must not grow with the resource count."""
-    from pdcm_etl_spark.transforms.links import cancer_annotation_resources_per_model
+    optimized plan of the per-model molecular aggregation must not grow
+    with the resource count."""
+    from pdcm_etl_spark.transforms.molecular_data import (
+        molecular_aggregates_per_model,
+    )
 
     md = spark.createDataFrame(
         [(1, "GENE1"), (1, "GENE2"), (2, "GENE3")],
@@ -120,13 +123,16 @@ def test_annotation_resources_single_join_any_resource_count(spark):
         [(1, 10, "mutation"), (2, 20, "mutation")],
         "mol_char_id bigint, model_id bigint, molchar_type string",
     )
+    molchar = spark.createDataFrame(
+        [(1, "ENA:1"), (2, None)], "id bigint, raw_data_url string"
+    )
 
     def resources(n):
         rows = [(f"GENE{g}", f"R{i}", "Gene", "") for i in range(n) for g in (1, 2, 3)]
         return spark.createDataFrame(rows, "entry string, resource string, type string, link string")
 
     def n_joins(res_df):
-        out = cancer_annotation_resources_per_model([md], mm, res_df)
+        out = molecular_aggregates_per_model({"mutation": md}, molchar, mm, res_df)
         plan = out._jdf.queryExecution().optimizedPlan().toString()
         return plan.count("Join ")
 

@@ -4,6 +4,7 @@ import pytest
 
 import fixtures
 from pdcm_etl_spark.transforms import lineage, model as model_t, specimen
+from pdcm_etl_spark.transforms.dims import name_dim
 
 
 @pytest.fixture(scope="module")
@@ -33,12 +34,10 @@ def test_specimen_fks(spark, raw_model):
     sharing = fixtures.make_module_df(spark, "sharing", [])
     cell = fixtures.make_module_df(spark, "cell_model", [])
     initial = model_t.initial_model(raw_model, cell, sharing)
+    model_dims = specimen.model_name_dims(raw_model)
     sp = specimen.xenograft_model_specimen(
         raw_model,
-        specimen.engraftment_site(raw_model),
-        specimen.engraftment_type(raw_model),
-        specimen.engraftment_sample_type(raw_model),
-        specimen.engraftment_sample_state(raw_model),
+        *[name_dim(model_dims, d) for d in specimen.MODEL_NAME_DIMS],
         initial,
         specimen.host_strain(raw_model),
     )

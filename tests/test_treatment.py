@@ -36,13 +36,15 @@ def raw(spark):
 @pytest.fixture(scope="module")
 def entities(spark, raw):
     eth = dims.ethnicity(raw["patient"])
-    pt = dims.provider_type(raw["source"])
-    pj = dims.project_group(raw["source"])
+    source_dims = dims.source_name_dims(raw["source"])
+    pt = dims.name_dim(source_dims, "provider_type")
+    pj = dims.name_dim(source_dims, "project_group")
     pg = dims.provider_group(raw["source"], pt, pj)
     patient_df = patient_t.patient(raw["patient"], eth, pg)
     initial = model_t.initial_model(raw["model"], raw["cell_model"], raw["sharing"])
-    resp = tr.response(raw["drug_dosing"], raw["patient_treatment"])
-    resp_cls = tr.response_classification(raw["drug_dosing"], raw["patient_treatment"])
+    resp_dims = tr.response_name_dims(raw["drug_dosing"], raw["patient_treatment"])
+    resp = dims.name_dim(resp_dims, "response")
+    resp_cls = dims.name_dim(resp_dims, "response_classification")
     proto = tr.treatment_protocol(
         raw["drug_dosing"], raw["patient_treatment"], initial, patient_df, resp, resp_cls
     )
@@ -126,3 +128,44 @@ def test_aggregation_by_model(entities):
     m1 = rows[mid["M1"]]
     assert m1["model_treatments"] == ["cisplatin", "dactolisib", "gemcitabine"]
     assert m1["patient_treatments"] is None  # patient rows carry no model FK here
+
+
+def test_aggregation_by_model_one_row_per_model(spark):
+    """Per-target lists come out of one groupBy: a model with both
+    targets is one row, a target the model lacks leaves its two columns
+    NULL (an empty list when the model has the target but no names),
+    and protocols with no model keep one row per target."""
+    proto = spark.createDataFrame(
+        [
+            (1, 10, None, "drug dosing", 1),
+            (2, None, 7, "patient", 2),
+            (3, 20, None, "drug dosing", None),
+            (4, None, None, "drug dosing", 1),
+            (5, None, None, "patient", None),
+            (6, 30, None, "other", 1),
+        ],
+        "id long, model_id long, patient_id long, treatment_target string, "
+        "response_id long",
+    )
+    helper = spark.createDataFrame(
+        [(1, "Cisplatin "), (1, "cisplatin"), (2, "Tamoxifen"), (4, "X")],
+        "treatment_protocol_id long, treatment_name string",
+    )
+    resp = spark.createDataFrame(
+        [(1, "Stable Disease"), (2, "Complete Response")], "id long, name string"
+    )
+    ps = spark.createDataFrame(
+        [(7, 10), (7, None)], "patient_id long, model_id long"
+    )
+    agg = tr.treatment_aggregation_by_model(proto, helper, resp, ps)
+    assert agg.columns == [
+        "model_id", "model_treatments", "model_treatments_responses",
+        "patient_treatments", "patient_treatments_responses",
+    ]
+    got = sorted((tuple(r) for r in agg.collect()), key=repr)
+    assert got == sorted([
+        (10, ["cisplatin"], ["Stable Disease"], ["tamoxifen"], ["Complete Response"]),
+        (20, [], [], None, None),
+        (None, ["x"], ["Stable Disease"], None, None),
+        (None, None, None, [], []),
+    ], key=repr)
