@@ -16,6 +16,8 @@ import re
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from pdcm_etl_spark.operators.sharing import shared
+
 _INF = 1 << 62
 
 
@@ -205,22 +207,21 @@ def crosstab_lift(
 
     Plan: one (row, col) count aggregation (cell cardinality ≪ rows),
     marginals re-aggregated FROM THE CELLS, the grand total from the
-    same cells as a one-row broadcast. The cell table is eagerly
-    checkpointed so the marginal/total branches read the materialized
-    cells — without it each lineage branch re-derives the aggregation
-    from the scan and the data is read FOUR times (verified in the
-    plan: 4 FileScans, no static exchange reuse). The checkpoint is
-    cell-cardinality-sized — trivial at any scale.
+    same cells as a one-row broadcast. The cell table is shared so the
+    marginal/total branches read the materialized cells — without it
+    each lineage branch re-derives the aggregation from the scan and
+    the data is read FOUR times (verified in the plan: 4 FileScans, no
+    static exchange reuse). The shared table is cell-cardinality-sized
+    — trivial at any scale.
 
     Returns (row_val, col_val, n, row_n, col_n, lift_ppm).
     """
-    cells = (
+    cells = shared(
         df.select(
             F.col(row_col).alias("row_val"), F.col(col_col).alias("col_val")
         )
         .groupBy("row_val", "col_val")
         .agg(F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
     )
     row_n = cells.groupBy("row_val").agg(F.sum("n").alias("row_n"))
     col_n = cells.groupBy("col_val").agg(F.sum("n").alias("col_n"))
@@ -320,13 +321,12 @@ def chi_square_assoc(
     the cells (crosstab_lift's broadcast shape), one bounded-size sum.
     Returns ONE row: (n_rows_cat, n_cols_cat, df, total, chi2_milli).
     """
-    cells = (
+    cells = shared(
         df.select(
             F.col(row_col).alias("row_val"), F.col(col_col).alias("col_val")
         )
         .groupBy("row_val", "col_val")
         .agg(F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
     )
     row_n = cells.groupBy("row_val").agg(F.sum("n").alias("row_n"))
     col_n = cells.groupBy("col_val").agg(F.sum("n").alias("col_n"))
@@ -392,7 +392,9 @@ def benford_profile(df: DataFrame, value_col: str) -> DataFrame:
     benford = F.create_map(
         *[F.lit(x) for kv in BENFORD_PPM.items() for x in kv]
     )
-    digits = (
+    # ≤9 rows — sharing lets the total derive from the digit counts
+    # instead of a SECOND full scan of the data
+    digits = shared(
         df.filter(F.col(value_col) > 0)
         .select(
             F.substring(F.col(value_col).cast("bigint").cast("string"), 1, 1)
@@ -401,9 +403,6 @@ def benford_profile(df: DataFrame, value_col: str) -> DataFrame:
         )
         .groupBy("digit")
         .agg(F.count(F.lit(1)).alias("n"))
-        # ≤9 rows — checkpointing lets the total derive from the digit
-        # counts instead of a SECOND full scan of the data
-        .localCheckpoint(eager=True)
     )
     total = digits.agg(F.sum("n").cast("bigint").alias("total"))
     return (
@@ -586,8 +585,6 @@ def grouped_moments(
     the sf0.01 gate passed with 2× headroom). Returns (key, n,
     min_micro, max_micro, mean_micro, var_micro2, var_sample_micro2).
     """
-    from pdcm_etl_spark.operators.sharing import shared
-
     base = df.select(
         F.col(key_col).alias("key"),
         value_micro.cast("bigint").alias("m"),
@@ -722,8 +719,6 @@ def ks_drift(
     all-null input, which yields ZERO rows (matching the SQL oracle,
     whose value×total cross join is empty when no values exist).
     """
-    from pdcm_etl_spark.operators.sharing import shared
-
     # tagged feeds the bounds collect, the per-bucket windows AND the
     # bucket totals — share so the scan+filter runs once (the bounds
     # action materializes it; both bucket consumers replay blocks)
@@ -853,7 +848,10 @@ def chisq_drift(
 
     Returns (category, n_before, n_after, contrib_milli).
     """
-    cells = (
+    # bounded (category cardinality); shared so the slice totals
+    # re-derive from it instead of re-scanning the data (the
+    # chi_square_assoc idiom)
+    cells = shared(
         df.select(
             F.col(category_col).alias("category"),
             F.when(after_pred, 1).otherwise(0).alias("a"),
@@ -863,10 +861,6 @@ def chisq_drift(
             F.sum(F.lit(1) - F.col("a")).cast("bigint").alias("n_before"),
             F.sum("a").cast("bigint").alias("n_after"),
         )
-        # bounded (category cardinality); materialized once so the slice
-        # totals re-derive from it instead of re-scanning the data (the
-        # chi_square_assoc idiom)
-        .localCheckpoint(eager=True)
     )
     totals = F.broadcast(
         cells.agg(

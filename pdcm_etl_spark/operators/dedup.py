@@ -456,13 +456,14 @@ def minhash_dedup(
 ) -> DataFrame:
     """Full MinHash-LSH near-dup pipeline: shingle → signature → banded
     candidates → exact-Jaccard verification of candidates only."""
-    sh = shingles(df, id_col, text_col, n).persist()
-    # signatures are one row per doc — persisting them keeps the banding
+    # shingles feed both the signatures and the verification
+    sh = _shared(shingles(df, id_col, text_col, n))
+    # signatures are one row per doc — sharing them keeps the banding
     # self-join from re-running the groupBy over the (much larger) shingles
-    sigs = minhash_signatures(sh, num_perm).persist()
+    sigs = _shared(minhash_signatures(sh, num_perm))
     # candidates feed verification twice (the pair join + the semi-join
-    # that prunes shingle collection) — persist so banding runs once
-    cands = lsh_candidate_pairs(sigs, bands).persist()
+    # that prunes shingle collection) — share so banding runs once
+    cands = _shared(lsh_candidate_pairs(sigs, bands))
     return verify_pairs_jaccard(cands, sh, min_bp=min_bp)
 
 
@@ -564,19 +565,18 @@ def minhash_dedup_incremental(
     Returns (id_a, id_b, inter, jaccard_bp, is_new_pair) where
     is_new_pair is true iff both sides are new-batch documents."""
     marked = df.withColumn("__existing", is_existing)
-    sh = shingles(marked, id_col, text_col, n).persist()
-    sigs = minhash_signatures(sh, num_perm).persist()
+    sh = _shared(shingles(marked, id_col, text_col, n))
+    sigs = _shared(minhash_signatures(sh, num_perm))
     flags = marked.select(
         F.col(id_col).alias("id"), F.col("__existing").alias("existing")
     )
-    cands = (
+    cands = _shared(
         lsh_candidate_pairs(sigs, bands)
         .join(flags.select(F.col("id").alias("id_a"),
                            F.col("existing").alias("ex_a")), "id_a")
         .join(flags.select(F.col("id").alias("id_b"),
                            F.col("existing").alias("ex_b")), "id_b")
         .filter(~(F.col("ex_a") & F.col("ex_b")))
-        .persist()
     )
     verified = verify_pairs_jaccard(
         cands.select("id_a", "id_b"), sh, min_bp=min_bp

@@ -7,7 +7,7 @@ pdcm_api.get_parents_tree). Both are transitive-closure problems; at
 100 TB neither a driver graph nor a recursive-SQL UPDATE survives, so the
 engine's primitive is an **iterative DataFrame self-join to fixpoint**:
 each round doubles nothing — it extends every frontier path by one edge,
-checkpointed via persist so lineage stays flat.
+cut with an eager ``localCheckpoint`` so lineage stays flat.
 
 Depth is bounded by the longest path (ontology DAGs: ~20; the synthetic
 test hierarchy: ~4), so the loop is cheap; every round is one shuffle on
@@ -18,7 +18,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
+
+from pdcm_etl_spark.operators.sharing import shared
 
 
 def ancestor_closure(
@@ -40,26 +41,31 @@ def ancestor_closure(
     Semantics match a WITH RECURSIVE over ``parent_map`` (see the DuckDB
     oracle in plans/catalog.py).
     """
-    # the parent map is probed once per round — persist it or every
+    # the parent map is probed once per round — share it or every
     # iteration re-runs the source scan
-    parent_map = edges.select(
-        F.col(node_col).alias("pm_node"), F.col(parent_col).alias("pm_parent")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    parent_map = shared(
+        edges.select(
+            F.col(node_col).alias("pm_node"), F.col(parent_col).alias("pm_parent")
+        )
+    )
 
     frontier = edges.select(
         F.col(node_col).alias("node"),
         F.col(parent_col).alias("ancestor"),
         F.lit(1).cast("int").alias("depth"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    ).localCheckpoint(eager=True)
 
     out = [frontier]
-    for _ in range(max_iterations):
-        # extend paths whose current ancestor still has a parent
+    for i in range(max_iterations):
+        # extend paths whose current ancestor still has a parent; the
+        # round's row count is observe()d during its checkpoint, so an
+        # empty frontier ends the loop without a second action
         live = (
             frontier.filter(F.col("ancestor") > stop_at)
             if stop_at is not None
             else frontier
         )
+        obs = Observation(f"closure_round_{i}")
         nxt = (
             live.join(parent_map, F.col("ancestor") == F.col("pm_node"), "inner")
             .select(
@@ -67,10 +73,10 @@ def ancestor_closure(
                 F.col("pm_parent").alias("ancestor"),
                 (F.col("depth") + 1).alias("depth"),
             )
-            .persist(StorageLevel.MEMORY_AND_DISK)
+            .observe(obs, F.count(F.lit(1)).alias("n"))
+            .localCheckpoint(eager=True)
         )
-        if nxt.isEmpty():
-            nxt.unpersist()
+        if obs.get["n"] == 0:
             break
         out.append(nxt)
         frontier = nxt
@@ -118,18 +124,17 @@ def connected_components(
         return labels
     if method != "minlabel":
         raise ValueError(f"connected_components: unknown method {method!r}")
-    sym = (
+    sym = shared(
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .unionByName(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
         .distinct()
-        .localCheckpoint(eager=False)
     )
     endpoints = sym.select(F.col("a").alias(node_col))
     if nodes is not None:
         endpoints = endpoints.unionByName(nodes.select(node_col))
-    labels = endpoints.distinct().select(
-        node_col, F.col(node_col).alias("component")
-    ).localCheckpoint(eager=False)
+    labels = shared(
+        endpoints.distinct().select(node_col, F.col(node_col).alias("component"))
+    )
 
     prev_sum = labels.agg(F.sum("component")).collect()[0][0]
     for i in range(max_iterations):
@@ -195,21 +200,20 @@ def _cc_star(
     """
     from pyspark.sql import Window
 
-    e = (
+    e = shared(
         edges.select(
             F.greatest(F.col(src), F.col(dst)).alias("u"),
             F.least(F.col(src), F.col(dst)).alias("v"),
         )
         .filter(F.col("u") != F.col("v"))
         .distinct()
-        .localCheckpoint(eager=False)
     )
     all_nodes = edges.select(F.col(src).alias(node_col)).unionByName(
         edges.select(F.col(dst).alias(node_col))
     )
     if nodes is not None:
         all_nodes = all_nodes.unionByName(nodes.select(node_col))
-    all_nodes = all_nodes.distinct().localCheckpoint(eager=False)
+    all_nodes = shared(all_nodes.distinct())
 
     # multiset signature of the edge set: count + Σ xxhash64 of each
     # endpoint (type-generic — works for string ids where a raw sum
@@ -283,8 +287,8 @@ def pagerank(
     per round, one (rank × out-degree-weighted edges) join shuffled on
     the source plus one contribution aggregation shuffled on the
     destination. Iteration count is fixed (training-pipeline PageRank
-    runs a budgeted number of sweeps), lineage stays flat via
-    materialize-then-unpersist like the BPE/k-means trainers.
+    runs a budgeted number of sweeps), and each round's ranks are cut
+    with an eager ``localCheckpoint`` so lineage stays flat.
 
     Ranks live in integer ``scale`` units (micro by default) and every
     per-edge share is floor-divided — floats never appear, so the ranks
@@ -300,25 +304,24 @@ def pagerank(
     standard simplification.
 
     Scale: per-round cost is one shuffle join on ``src`` + one groupBy
-    on ``dst`` — both AQE-planned; the edge table with attached
-    out-degrees is computed once and persisted. No data-sized collect.
+    on ``dst`` — both AQE-planned; the node set and the edge table with
+    attached out-degrees are computed once and shared. No data-sized
+    collect.
 
     Returns (node, pr_micro) after ``iterations`` rounds.
     """
-    nodes = (
+    nodes = shared(
         edges.select(F.col(src).alias("node"))
         .unionByName(edges.select(F.col(dst).alias("node")))
         .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     outdeg = edges.groupBy(F.col(src).alias("node")).agg(
         F.count(F.lit(1)).alias("outdeg")
     )
-    ew = (
+    ew = shared(
         edges.select(F.col(src).alias("e_src"), F.col(dst).alias("e_dst"))
         .join(outdeg, F.col("e_src") == F.col("node"))
         .select("e_src", "e_dst", "outdeg")
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     base = (scale * (100 - damp_pct)) // 100
     pr = nodes.select("node", F.lit(scale).cast("bigint").alias("pr"))
@@ -340,7 +343,6 @@ def pagerank(
                 .alias("inflow")
             )
         )
-        old = pr
         pr = (
             nodes.join(contrib, "node", "left")
             .select(
@@ -349,15 +351,9 @@ def pagerank(
                 .cast("bigint")
                 .alias("pr"),
             )
-            .persist(StorageLevel.MEMORY_AND_DISK)
+            .localCheckpoint(eager=True)
         )
-        pr.count()  # materialize before dropping the parent lineage
-        if old is not nodes:
-            old.unpersist()
-    out = pr.select("node", F.col("pr").alias("pr_micro"))
-    ew.unpersist()
-    nodes.unpersist()
-    return out
+    return pr.select("node", F.col("pr").alias("pr_micro"))
 
 
 def triangle_count(
@@ -384,8 +380,6 @@ def triangle_count(
 
     Returns (node, n_triangles) for nodes in at least one triangle.
     """
-    from pdcm_etl_spark.operators.sharing import shared
-
     # e feeds the degree union (2×) and the orientation join; oe feeds
     # the wedge sides (2×) and the closing join — share both, or the
     # canonical-edge distinct pipeline re-runs per consumer (measured:
@@ -526,7 +520,7 @@ def bfs_distances(
         e = e.unionByName(
             edges.select(F.col(dst).alias("a"), F.col(src).alias("b"))
         )
-    e = e.distinct().localCheckpoint(eager=False)
+    e = shared(e.distinct())
 
     dist = (
         sources.select(F.col(node_col).alias("n"))
@@ -574,8 +568,6 @@ def link_predict_cn(
 
     Returns (node_a, node_b, common_neighbors), node_a < node_b.
     """
-    from pdcm_etl_spark.operators.sharing import shared
-
     # und feeds the degree agg, the wedge source, and the existing-edge
     # anti join; nbrs feeds BOTH wedge sides — share, or the symmetrize+
     # distinct pipeline re-runs per consumer (measured: 44 source scans

@@ -1,34 +1,45 @@
-"""Compute-once sharing for multi-consumer intermediates — the one place
-that decides how a frame read by several consumers is shared.
+"""The one storage rule for operators and the flagship DAG:
 
-Catalyst does not common-subexpression-eliminate repeated SUBTREES, and
-AQE's ReusedExchange only fires on byte-identical exchange subplans.
-Measured on the dedup pair-generation core (r11 plan capture): the
-documents scan + shingle explode executed SIX times per `jaccard_pairs`
-call (hot-shingle guard, pair buckets, both size-side probes), and
-`itemset_pairs` scanned lineitem 20 times — every consumer of a shared
-DataFrame re-runs its whole upstream pipeline. At 100 TB those are full
-corpus re-scans.
+1. A frame read by more than one consumer goes through ``shared()``.
+2. A loop's per-round state (graph closures and components, pagerank,
+   the BPE trainer) is cut with ``localCheckpoint(eager=True)`` in the
+   loop itself: a lineage cut, not a sharing decision, so the mode
+   below does not govern it.
+
+Nothing outside this module persists, caches or unpersists a frame
+(``plans/audit.bounded_checkpoint`` excepted; tests/test_sharing.py
+guards both). ``persist()`` registers the plan in the session's
+CacheManager until unpersisted, and any later plan that ``sameResult``s
+it is served from blocks ``release`` below may already have dropped.
+
+Why share: Catalyst does not common-subexpression-eliminate repeated
+SUBTREES, and AQE's ReusedExchange only fires on byte-identical exchange
+subplans. Measured on the dedup pair-generation core (r11 plan capture):
+the documents scan + shingle explode executed SIX times per
+`jaccard_pairs` call (hot-shingle guard, pair buckets, both size-side
+probes), and `itemset_pairs` scanned lineitem 20 times — every consumer
+of a shared DataFrame re-runs its whole upstream pipeline. At 100 TB
+those are full corpus re-scans.
 
 ``shared(df)`` is the fix: a lazy ``localCheckpoint`` — materialized by
 the first consumer, replayed from stored blocks (memory-and-disk,
 spills gracefully) by the rest; the guide-§8 decide-once pattern.
 
-The same policy governs every other compute-once site: the operators'
-multi-consumer intermediates, the flagship ``EntityDag``'s
-multiply-consumed entities (``plans/dag.py``) and the synthetic provider
-spine (``plans/synth.py``). Truncating lineage matters most in the DAG:
-with ~50 chained entities, full lineage makes Catalyst re-analyze an
-ever-deeper tree for every downstream node (quadratic driver cost —
-measured ~40% of flagship wall time at sf0.1).
-
-``SPARK_GRAFT_SHARE_INTERMEDIATES`` picks the mode for all of them:
+``SPARK_GRAFT_SHARE_INTERMEDIATES`` picks the mode for every
+``shared()`` site: the operators' multi-consumer intermediates, the
+flagship ``EntityDag``'s multiply-consumed entities (``plans/dag.py``)
+and the synthetic provider spine (``plans/synth.py``). Truncating
+lineage matters most in the DAG: with ~50 chained entities, full
+lineage makes Catalyst re-analyze an ever-deeper tree for every
+downstream node (quadratic driver cost — measured ~40% of flagship wall
+time at sf0.1).
 
 - ``checkpoint`` (default): the lazy ``localCheckpoint`` above.
 - ``persist``: ``persist(MEMORY_AND_DISK)``, full lineage kept, so an
   executor loss recomputes the blocks instead of failing the job
   (localCheckpoint blocks die with their executor). Measured 2× slower
-  on the flagship from re-analysis cost.
+  on the flagship from re-analysis cost. This mode registers every
+  shared frame in the CacheManager.
 - ``none``: recompute in every consumer.
 
 Memory-pressure note (measured at sf1, 4g heap): the binding variable is

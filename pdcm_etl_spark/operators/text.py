@@ -482,8 +482,7 @@ def bpe_train(
     """
     from pdcm_etl_spark.functions.local_table import values_table
 
-    merges, vocab = _bpe_vocab_loop(df, text_col, n_merges)
-    vocab.unpersist()
+    merges, _ = _bpe_vocab_loop(df, text_col, n_merges)
     return values_table(
         df.sparkSession, merges, "r int, a string, b string, merged string, n bigint"
     )
@@ -493,7 +492,8 @@ def _bpe_vocab_loop(
     df: DataFrame, text_col: str, n_merges: int
 ) -> tuple[list[tuple], DataFrame]:
     """Shared BPE training loop: returns (merge table rows, final vocab
-    DataFrame (w, syms, freq) — persisted; caller unpersists)."""
+    DataFrame (w, syms, freq)). Each round's vocabulary is cut with an
+    eager ``localCheckpoint``, so lineage stays one round deep."""
     words = (
         df.select(F.explode(F.split(F.lower(F.col(text_col)), " ")).alias("w"))
         .filter(F.col("w") != "")
@@ -504,7 +504,9 @@ def _bpe_vocab_loop(
         F.sequence(F.lit(1), F.length("w")),
         lambda i: F.col("w").substr(i, F.lit(1)),
     )
-    vocab = words.select("w", chars.alias("syms"), "freq").persist()
+    vocab = words.select(
+        "w", chars.alias("syms"), "freq"
+    ).localCheckpoint(eager=True)
     merges: list[tuple] = []
     for r in range(1, n_merges + 1):
         pair_arr = F.when(
@@ -542,10 +544,9 @@ def _bpe_vocab_loop(
                 ),
             ).otherwise(F.concat(acc, F.array(x))),
         )
-        old = vocab
-        vocab = old.select("w", new_syms.alias("syms"), "freq").persist()
-        vocab.count()  # materialize before unpersisting the parent
-        old.unpersist()
+        vocab = vocab.select(
+            "w", new_syms.alias("syms"), "freq"
+        ).localCheckpoint(eager=True)
     return merges, vocab
 
 
@@ -578,7 +579,7 @@ def bpe_encode(
         .filter(F.col("w") != "")
     )
     toks = vocab.select("w", F.size("syms").alias("w_tokens"))
-    out = (
+    return (
         doc_words.join(toks, "w")
         .groupBy("id")
         .agg(
@@ -596,11 +597,6 @@ def bpe_encode(
             F.expr("(n_tokens * 10000) div n_chars").alias("compression_bp"),
         )
     )
-    # vocab stays persisted until the caller's action completes; register
-    # a lazy unpersist via the plan is not possible — the frame is small
-    # (vocabulary-sized) and unpersisting here would recompute the loop,
-    # so leave it to Spark's LRU.
-    return out
 
 
 def unigram_lm_score(

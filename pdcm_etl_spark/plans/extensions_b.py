@@ -620,8 +620,7 @@ def x_dedup_recall_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     truth is paid on p² of the pairs while recall, a ratio over a
     uniformly-sampled pair subset (Bernoulli doc sampling ⇒ each truth
     pair survives iff both endpoints do), transfers. This is the
-    variant the sf1 sweep RUNS (the full-truth twin stays sf≤0.1);
-    scripts_dev/dedup_recall_sf1.py commits its recall_ppm at sf1."""
+    variant the sf1 sweep RUNS (the full-truth twin stays sf≤0.1)."""
     from pdcm_etl_spark.operators import dedup as dd
 
     return dd.banding_recall(

@@ -87,16 +87,16 @@ def extend_sample_with_ontology(
 def search_index(
     model_df: DataFrame,
     search_index_patient_sample_df: DataFrame,
-    model_aggregates: list[DataFrame] | None = None,
-    provider_group_df: DataFrame | None = None,
-    project_group_df: DataFrame | None = None,
+    model_aggregates: list[DataFrame],
+    provider_group_df: DataFrame,
+    project_group_df: DataFrame,
 ) -> DataFrame:
     """The denormalized wide search table (search_index_transformer_job.py
-    :42-126): model spine ⟕ patient/sample slice ⟕ each per-model
-    aggregate (dataset_available, marker lists, msi/hla, treatments,
-    scores…). Every aggregate frame must carry a ``model_id`` column; all
-    joins are left joins on the model spine so models without molecular
-    or treatment data still appear."""
+    :42-126): model spine ⟕ provider/project names ⟕ patient/sample
+    slice ⟕ each per-model aggregate (dataset_available, marker lists,
+    msi/hla, treatments, scores…). Every aggregate frame must carry a
+    ``model_id`` column; all joins are left joins on the model spine so
+    models without molecular or treatment data still appear."""
     spine_cols = [
         F.col("id").alias("pdcm_model_id"),
         F.col("external_model_id"),
@@ -112,28 +112,21 @@ def search_index(
             F.col(opt) if opt in model_df.columns
             else F.lit(None).cast("string").alias(opt)
         )
-    spine = model_df.select(*spine_cols)
-    if provider_group_df is not None:
-        prov_cols = [
+    pg = provider_group_df.join(
+        F.broadcast(project_group_df.select(
+            F.col("id").alias("project_group_id"),
+            F.col("name").alias("project_name"),
+        )),
+        "project_group_id", "left",
+    )
+    providers = F.broadcast(
+        pg.select(
             F.col("data_source_tmp").alias("data_source"),
             F.col("name").alias("provider_name"),
-        ]
-        if project_group_df is not None and "project_group_id" in provider_group_df.columns:
-            pg = provider_group_df.join(
-                F.broadcast(project_group_df.select(
-                    F.col("id").alias("project_group_id"),
-                    F.col("name").alias("project_name"),
-                )),
-                "project_group_id", "left",
-            )
-            prov_cols.append("project_name")
-        else:
-            pg = provider_group_df.withColumn(
-                "project_name", F.lit(None).cast("string")
-            )
-            prov_cols.append("project_name")
-        providers = F.broadcast(pg.select(*prov_cols).dropDuplicates(["data_source"]))
-        spine = spine.join(providers, "data_source", "left")
+            "project_name",
+        ).dropDuplicates(["data_source"])
+    )
+    spine = model_df.select(*spine_cols).join(providers, "data_source", "left")
     out = spine.join(search_index_patient_sample_df, "pdcm_model_id", "left")
     # N per-model aggregates as ONE union + groupBy + single left join
     # instead of N sort-merge joins (2N exchanges) — see
@@ -141,7 +134,7 @@ def search_index(
     from pdcm_etl_spark.functions.joins import merge_keyed_aggregates
 
     merged = merge_keyed_aggregates(
-        list(model_aggregates or []), "pdcm_model_id", rename_key="model_id"
+        model_aggregates, "pdcm_model_id", rename_key="model_id"
     )
     if merged is not None:
         out = out.join(merged, "pdcm_model_id", "left")
@@ -189,12 +182,12 @@ def search_index_patient_sample(
     patient_df: DataFrame,
     sample_to_ontology_df: DataFrame,
     ontology_term_diagnosis_df: DataFrame,
-    tissue_df: DataFrame | None = None,
-    tumour_type_df: DataFrame | None = None,
-    ethnicity_df: DataFrame | None = None,
+    tissue_df: DataFrame,
+    tumour_type_df: DataFrame,
+    ethnicity_df: DataFrame,
 ) -> DataFrame:
     """The search_index's patient/sample slice: sample ⋈ ontology ⋈
-    patient, age binned, sex normalized. The optional dims resolve the
+    patient, age binned, sex normalized. The dims resolve the
     sample's tissue/tumour-type and the patient's ethnicity FKs back to
     display names — the reference search_index carries primary_site /
     collection_site / tumour_type / patient_ethnicity as names
@@ -229,31 +222,24 @@ def search_index_patient_sample(
             df.select(F.col("id").alias(key_col), F.col("name").alias(out_col))
         )
 
-    if tissue_df is not None:
-        out = out.join(
+    out = (
+        out.join(
             dim_name(tissue_df, "primary_site_id", "primary_site"),
             "primary_site_id", "left",
-        ).join(
+        )
+        .join(
             dim_name(tissue_df, "collection_site_id", "collection_site"),
             "collection_site_id", "left",
         )
-    else:
-        out = out.withColumn("primary_site", F.lit(None).cast("string"))
-        out = out.withColumn("collection_site", F.lit(None).cast("string"))
-    if tumour_type_df is not None:
-        out = out.join(
+        .join(
             dim_name(tumour_type_df, "tumour_type_id", "tumour_type"),
             "tumour_type_id", "left",
         )
-    else:
-        out = out.withColumn("tumour_type", F.lit(None).cast("string"))
-    if ethnicity_df is not None:
-        out = out.join(
+        .join(
             dim_name(ethnicity_df, "patient_ethnicity_id", "patient_ethnicity"),
             "patient_ethnicity_id", "left",
         )
-    else:
-        out = out.withColumn("patient_ethnicity", F.lit(None).cast("string"))
+    )
     # passthroughs carried under the reference search_index names
     # (entities_registry SEARCH_INDEX_ENTITY): patient_sample_<col> —
     # aliased inline in the ONE final select instead of a 9-step

@@ -1,6 +1,11 @@
-"""One sharing policy: ``operators.sharing.shared`` decides how every
+"""One storage rule: ``operators.sharing.shared`` decides how every
 compute-once site shares a frame, the flagship EntityDag's
-multiply-consumed entities included."""
+multiply-consumed entities included; loop rounds are cut with an eager
+``localCheckpoint``; nothing is left registered in Spark's CacheManager."""
+
+import ast
+import os
+import re
 
 import pytest
 from pyspark import StorageLevel
@@ -121,3 +126,78 @@ def test_single_module_harmonisation_matches_per_module_cascade(
     )
     assert got.count() == 3
     assert _is_checkpoint(out["harmonised_measurements"])
+
+
+# Queries whose operators kept frames with persist() before the storage
+# rule; each one left entries in the session's CacheManager.
+_PERSISTING_QUERIES = (
+    "etl_search_index",
+    "etl_search_index_incremental",
+    "recursive_closure",
+    "pagerank",
+    "bpe_encode",
+    "dedup_minhash_lsh",
+    "dedup_minhash_incremental",
+    "dedup_recall",
+    "dedup_recall_banded",
+    "dedup_recall_sampled",
+)
+
+
+def test_no_query_leaves_cache_manager_entries(spark, sf_dir, monkeypatch):
+    """A persisted frame stays registered in the CacheManager until it is
+    unpersisted, and later plans that ``sameResult`` it are served from
+    its blocks. Under the default mode no query may leave one behind."""
+    import __spark_entry__ as entry
+
+    monkeypatch.delenv("SPARK_GRAFT_SHARE_INTERMEDIATES", raising=False)
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    queries = entry.queries()
+    left = {}
+    for name in _PERSISTING_QUERIES:
+        # start each query empty: a plan already cached by an earlier one
+        # would absorb this query's identical persist()
+        spark.catalog.clearCache()
+        queries[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+        if cache_manager.cachedData().size():
+            left[name] = cache_manager.cachedData().size()
+    assert not left, f"CacheManager entries left per query: {left}"
+
+
+_PKG = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "pdcm_etl_spark"
+)
+_STORAGE_CALL = re.compile(
+    r"\.persist\(|\.unpersist\(|\.cache\(\)|StorageLevel"
+    r"|localCheckpoint\((?:eager=)?False"
+)
+
+
+def _bounded_checkpoint_lines() -> range:
+    path = os.path.join(_PKG, "plans", "audit.py")
+    with open(path) as fh:
+        tree = ast.parse(fh.read())
+    fn = next(
+        n for n in tree.body
+        if isinstance(n, ast.FunctionDef) and n.name == "bounded_checkpoint"
+    )
+    return range(fn.lineno, fn.end_lineno + 1)
+
+
+def test_storage_calls_stay_in_sharing():
+    """Storage calls live in ``operators/sharing.py`` and in the window
+    audit's ``bounded_checkpoint``; everywhere else a frame is kept only
+    through ``shared()`` or cut with ``localCheckpoint(eager=True)``."""
+    audit = os.path.join("plans", "audit.py")
+    hits = []
+    for root, _dirs, files in os.walk(_PKG):
+        for f in sorted(files):
+            rel = os.path.relpath(os.path.join(root, f), _PKG)
+            if not f.endswith(".py") or rel == os.path.join("operators", "sharing.py"):
+                continue
+            skip = _bounded_checkpoint_lines() if rel == audit else ()
+            with open(os.path.join(root, f)) as fh:
+                for i, line in enumerate(fh, 1):
+                    if i not in skip and _STORAGE_CALL.search(line):
+                        hits.append(f"{rel}:{i}: {line.strip()}")
+    assert not hits, "storage calls outside operators/sharing.py:\n" + "\n".join(hits)
