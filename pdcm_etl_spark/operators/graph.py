@@ -39,7 +39,7 @@ def ancestor_closure(
     frontier emptying: ancestors without a parent row stop naturally.
 
     Semantics match a WITH RECURSIVE over ``parent_map`` (see the DuckDB
-    oracle in plans/catalog.py).
+    oracle in catalog/graph.py).
     """
     # the parent map is probed once per round — share it or every
     # iteration re-runs the source scan

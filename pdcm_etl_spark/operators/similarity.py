@@ -251,7 +251,7 @@ def kmeans_fit(
     assign_method: str = "auto",
 ) -> tuple[list[tuple[int, list[float]]], DataFrame]:
     """Deterministic distributed k-means: fixed iteration count, exact
-    cross-engine semantics (DuckDB oracle in plans/extensions.py).
+    cross-engine semantics (DuckDB oracle in catalog/similarity.py).
 
     Two determinism rules make an FP-iterative algorithm hash-stable:
     - **init**: centroids are the first ``k`` vectors by id — no RNG;

@@ -17,7 +17,7 @@ Cost: ONE shuffle of left+right on the equality keys and a sorted window
 scan — no range explosion, no per-key collect. Skewed keys follow the
 same mitigation as any window (pre-filter hot keys or salt + re-merge).
 
-Oracle: DuckDB's native ``ASOF LEFT JOIN`` (plans/extensions.py).
+Oracle: DuckDB's native ``ASOF LEFT JOIN`` (catalog/temporal.py).
 """
 
 from __future__ import annotations

@@ -2,7 +2,7 @@
 
 All pure column expressions / higher-order functions — JVM-side,
 whole-stage-codegen'd, no Python in the hot path. Each operator keeps the
-determinism rules from plans/catalog.py (floor-basis-points instead of
+determinism rules from catalog/__init__.py (floor-basis-points instead of
 round; md5 for fingerprints) so it can be oracle-checked cross-engine.
 
 Scale: every operator here is embarrassingly parallel (per-row), so the

@@ -1,1 +1,2 @@
-"""Plans: declarative query catalog, DAG runner, SQL view layer."""
+"""Plans: the flagship search-index build and its incremental twin, the
+entity DAG runner, the SQL view layer and plan audits."""

@@ -28,6 +28,9 @@ different names are defined below. The reports surface
 
 from __future__ import annotations
 
+import sys
+
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
 # name → SQL over the registered entity views. Each is a complete,
@@ -623,7 +626,10 @@ def create_views(spark: SparkSession, only: list[str] | None = None) -> list[str
     model_molecular_metadata which reads molecular_characterization_vw),
     so creation loops to a fixpoint: each pass creates whatever now
     resolves, until no progress — the SQL-level equivalent of the
-    reference's ordered views.sql script, without hand-ordering.
+    reference's ordered views.sql script, without hand-ordering. Each
+    view still pending at the fixpoint is named on stderr with the error
+    class of its last failure (stdout stays free for callers that parse
+    it).
 
     The catalog is listed once per call: the views created here are
     never measurement tables or passthrough entities, so one listing
@@ -639,6 +645,7 @@ def create_views(spark: SparkSession, only: list[str] | None = None) -> list[str
             continue
         pending[name] = fn
     created: list[str] = []
+    last_error: dict[str, str] = {}
     progressed = True
     while pending and progressed:
         progressed = False
@@ -650,11 +657,15 @@ def create_views(spark: SparkSession, only: list[str] | None = None) -> list[str
                 continue
             try:
                 spark.sql(f"CREATE OR REPLACE TEMP VIEW {name} AS {sql}")
-            except Exception:
-                continue  # source not registered (yet) — retry next pass
+            except AnalysisException as exc:
+                # a source not registered (yet) resolves on a later pass
+                last_error[name] = exc.getCondition() or type(exc).__name__
+                continue
             created.append(name)
             del pending[name]
             progressed = True
+    for name in pending:
+        print(f"create_views: skipped {name} ({last_error[name]})", file=sys.stderr)
     # passthrough API views: the registered entity view under the same
     # name is the view — report the ones live in this session's catalog
     for name in PASSTHROUGH_VIEWS:

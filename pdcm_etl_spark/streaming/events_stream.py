@@ -18,7 +18,7 @@ one drain, and each streaming mechanism exists once:
 
 AvailableNow drains everything currently in the source, so each result
 is deterministically comparable to its batch twin (e.g.
-plans/catalog.py::q_events_daily) — that equivalence is the correctness
+catalog/relational.py::q_events_daily) — that equivalence is the correctness
 oracle for the streaming path.
 
 Scale: in production the source is a file/Kafka stream; the watermark
@@ -34,6 +34,8 @@ import os
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from pdcm_etl_spark.sources.lake import load_events
 
 # Compressed source bytes per streaming state partition. Every shuffle
 # in a streaming query doubles as the STATE STORE partitioning, and each
@@ -116,7 +118,7 @@ def events_stream(
 
     A file stream needs a declared schema; without ``schema`` it comes
     from a batch footer read of the same path. `ts` is normalized
-    exactly like the batch twin (catalog.load_events): legacy
+    exactly like the batch twin (lake.load_events): legacy
     nanos-as-long → µs timestamp; µs TIMESTAMP_NTZ → session-tz
     timestamp (UTC session ⇒ value-identical)."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -204,7 +206,7 @@ def _windowed_sums(
 def daily_counts_stream(ev: DataFrame) -> DataFrame:
     """Event stream ``ev`` → event-time watermark → tumbling 1-day window
     per event_type. Same aggregates as the batch twin
-    (catalog.q_events_daily), which stays the oracle whatever the
+    (relational.q_events_daily), which stays the oracle whatever the
     source: the lake, or a staging directory whose files arrive over
     time (the crash/restart test)."""
     return _windowed_sums(ev, F.window("ts", "1 day"), "event_type", "day")
@@ -321,8 +323,6 @@ def dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     would evict keys mid-drain and re-emit duplicates the DISTINCT oracle
     does not have. The one-row min/max batch scan that sizes it is
     metadata-grade (parquet footer statistics serve it)."""
-    from pdcm_etl_spark.plans.catalog import load_events
-
     span = (
         load_events(spark, sf_dir)
         .selectExpr("max(ts) - min(ts) AS span")
@@ -477,8 +477,6 @@ def scd2_upsert_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming CDC ingestion of the lake (``_scd2_upsert``), seeded
     with each user's first event and drained as one microbatch, so
     SQL_SCD2_MERGE is an exact oracle (``_scd2_single_batch``)."""
-    from pdcm_etl_spark.plans.catalog import load_events
-
     return _scd2_single_batch(
         events_stream_source(spark, sf_dir),
         f"{sf_dir}/events.parquet",

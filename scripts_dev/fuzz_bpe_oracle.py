@@ -14,7 +14,7 @@ import duckdb
 import pandas as pd
 
 sys.path.insert(0, "/root/repo")
-from pdcm_etl_spark.plans.extensions import _sql_bpe_train, _sql_bpe_encode
+from pdcm_etl_spark.catalog.text import _sql_bpe_encode, _sql_bpe_train
 
 
 def py_bpe_train(texts, n_merges=4):

@@ -328,7 +328,7 @@ def test_registry_import_error_is_fatal(monkeypatch):
     import __spark_entry__ as e
 
     # a None entry in sys.modules makes the next import raise ImportError
-    monkeypatch.setitem(sys.modules, "pdcm_etl_spark.plans.extensions_j", None)
+    monkeypatch.setitem(sys.modules, "pdcm_etl_spark.catalog.streaming", None)
     with pytest.raises(ImportError):
         e.queries()
 
@@ -342,3 +342,55 @@ def test_registry_duplicate_name_is_fatal(monkeypatch):
     monkeypatch.setattr(e, "_CATALOGS", e._CATALOGS + e._CATALOGS[-1:])
     with pytest.raises(ValueError, match="registered twice"):
         e.queries()
+
+
+def test_registry_is_one_module_per_layer():
+    """The registry is exactly the layer modules of pdcm_etl_spark/catalog/,
+    each exporting CATALOG, with module-level imports only and no private
+    name borrowed from a sibling layer; no lower package imports it."""
+    import ast
+    import glob
+    import os
+    from importlib import import_module
+
+    import __spark_entry__ as e
+
+    pkg = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "pdcm_etl_spark",
+    )
+
+    def imports(path):
+        tree = ast.parse(open(path).read())
+        top = set(map(id, tree.body))
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Import):
+                yield node, id(node) in top, [a.name for a in node.names]
+            elif isinstance(node, ast.ImportFrom):
+                mod = "." * node.level + (node.module or "")
+                yield node, id(node) in top, [f"{mod}.{a.name}" for a in node.names]
+
+    layers = {
+        f"pdcm_etl_spark.catalog.{os.path.basename(path)[:-3]}": path
+        for path in glob.glob(os.path.join(pkg, "catalog", "*.py"))
+        if not path.endswith("__init__.py")
+    }
+    assert sorted(e._CATALOGS) == sorted(layers)
+    for module, path in layers.items():
+        assert isinstance(import_module(module).CATALOG, dict), module
+        for node, at_top, names in imports(path):
+            assert at_top, f"{module}:{node.lineno}: function-local import"
+            for name in names:
+                sibling = name.startswith(("pdcm_etl_spark.catalog.", "."))
+                assert not (sibling and name.rsplit(".", 1)[1].startswith("_")), (
+                    f"{module}:{node.lineno}: private {name} from another layer"
+                )
+
+    for sub in ("operators", "streaming", "transforms", "sources", "functions"):
+        for path in glob.glob(os.path.join(pkg, sub, "**", "*.py"), recursive=True):
+            for node, _top, names in imports(path):
+                bad = [
+                    n for n in names
+                    if n.startswith(("pdcm_etl_spark.catalog", "pdcm_etl_spark.plans.catalog"))
+                ]
+                assert not bad, f"{path}:{node.lineno} imports {bad}"

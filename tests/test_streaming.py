@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 
 
 def test_stream_daily_counts_match_batch(spark, sf_dir):
-    from pdcm_etl_spark.plans.catalog import q_events_daily
+    from pdcm_etl_spark.catalog.relational import q_events_daily
     from pdcm_etl_spark.streaming.events_stream import run_availablenow
 
     batch = {
@@ -23,7 +23,7 @@ def test_stream_daily_counts_match_batch(spark, sf_dir):
 
 
 def test_stream_sessionize_closed_sessions_match_batch(spark, sf_dir):
-    from pdcm_etl_spark.plans.catalog import load_events
+    from pdcm_etl_spark.sources.lake import load_events
     from pdcm_etl_spark.streaming.sessionize import (
         sessionize_batch,
         sessionize_stream,
@@ -61,7 +61,7 @@ def test_stream_parquet_sink_exactly_once(spark, sf_dir, tmp_path):
     """File sink + checkpoint: one AvailableNow drain lands every closed
     window once; a second drain from the same checkpoint is a no-op (the
     exactly-once guarantee a restart relies on)."""
-    from pdcm_etl_spark.plans.catalog import q_events_daily
+    from pdcm_etl_spark.catalog.relational import q_events_daily
     from pdcm_etl_spark.streaming.events_stream import run_to_parquet
 
     out_dir, ckpt = str(tmp_path / "sink"), str(tmp_path / "ckpt")
@@ -91,7 +91,7 @@ def test_stream_dq_monitor_counters_match_batch(spark, sf_dir):
     AvailableNow drain is exactly the batch answer)."""
     from pyspark.sql import functions as F
 
-    from pdcm_etl_spark.plans.catalog import load_events
+    from pdcm_etl_spark.sources.lake import load_events
     from pdcm_etl_spark.streaming.events_stream import dq_monitor_stream
 
     got = {
@@ -129,7 +129,7 @@ def test_stream_dq_monitor_counters_match_batch(spark, sf_dir):
 def test_stream_static_join_matches_batch(spark, sf_dir):
     from pyspark.sql import functions as F
 
-    from pdcm_etl_spark.plans.catalog import load_events
+    from pdcm_etl_spark.sources.lake import load_events
     from pdcm_etl_spark.streaming.events_stream import (
         enriched_segment_stream,
     )
@@ -196,7 +196,7 @@ def test_stream_agg_kill_and_restart_from_checkpoint(
     no gaps) and agree with the batch oracle on every emitted window."""
     import shutil
 
-    from pdcm_etl_spark.plans.catalog import q_events_daily
+    from pdcm_etl_spark.catalog.relational import q_events_daily
     from pdcm_etl_spark.streaming.events_stream import (
         _drain,
         daily_counts_stream,
@@ -252,7 +252,7 @@ def test_stream_scd2_kill_and_restart_from_checkpoint(
 
     from pyspark.sql import Window
 
-    from pdcm_etl_spark.plans.catalog import load_events
+    from pdcm_etl_spark.sources.lake import load_events
     from pdcm_etl_spark.streaming.events_stream import (
         scd2_upsert_restartable,
     )
@@ -327,7 +327,7 @@ def test_stream_scd2_replay_after_pointer_flip_crash(
 
     from pyspark.sql import Window
 
-    from pdcm_etl_spark.plans.catalog import load_events
+    from pdcm_etl_spark.sources.lake import load_events
     from pdcm_etl_spark.streaming.events_stream import (
         scd2_upsert_restartable,
     )
@@ -401,7 +401,7 @@ def test_stream_scd2_single_batch_guard_rejects_multi_batch_drain(
 
     import pytest
 
-    from pdcm_etl_spark.plans.catalog import load_events
+    from pdcm_etl_spark.sources.lake import load_events
     from pdcm_etl_spark.streaming.events_stream import (
         _first_event_seed,
         _scd2_single_batch,

@@ -234,3 +234,21 @@ def test_model_metadata_api_views(spark, full_dag):  # noqa: F811
     qa = spark.table("model_quality_assurance").collect()
     assert {r["model_id"] for r in qa} == {"M1"}
     assert {r["validation_technique"] for r in qa} == {"Histology"}
+
+
+def test_create_views_names_its_skips(spark, capsys):
+    """A view that cannot be created is reported on stderr with the error
+    class of its failure, and is left out of the returned names."""
+    had = spark.catalog.tableExists("search_index")
+    saved = spark.table("search_index") if had else None
+    try:
+        spark.range(3).toDF("pdcm_model_id").createOrReplaceTempView("search_index")
+        created = views.create_views(spark, only=["models_by_primary_site"])
+    finally:
+        if had:
+            saved.createOrReplaceTempView("search_index")
+        else:
+            spark.catalog.dropTempView("search_index")
+    assert "models_by_primary_site" not in created
+    err = capsys.readouterr().err
+    assert "skipped models_by_primary_site (UNRESOLVED_COLUMN" in err
