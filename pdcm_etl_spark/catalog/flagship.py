@@ -247,7 +247,8 @@ SELECT
   CASE o.ok % 3 WHEN 0 THEN 'ENA' WHEN 1 THEN 'EGA' END AS raw_data_resources,
   CASE WHEN annot.res IS NOT NULL AND len(annot.res) > 0
        THEN array_to_string(annot.res, '|') END AS cancer_annotation_resources,
-  CAST(NULL AS VARCHAR) AS model_availability,
+  CASE o.ok % 3 WHEN 0 THEN 'available' WHEN 1 THEN 'unknown'
+       ELSE 'not available' END AS model_availability,
   CAST(NULL AS VARCHAR) AS date_submitted,
   CASE WHEN o.ok % 10 = 0 THEN '{"in_vitro_metadata_score":69}'
        WHEN o.ok % 7 = 0 THEN '{"pdx_metadata_score":87}'

@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pdcm_etl_spark.operators.sharing import shared
+
 
 def itemset_pairs(
     baskets: DataFrame,
@@ -47,8 +49,6 @@ def itemset_pairs(
     Returns (item_1, item_2, n_pair, n_1, n_2, lift_ppm),
     n_pair >= min_support.
     """
-    from pdcm_etl_spark.operators.sharing import shared
-
     # bi feeds the size guard AND the anti-join probe; guarded feeds the
     # per-item supports, the basket count, and BOTH self-join sides —
     # without sharing every consumer re-scans the source (measured: 20

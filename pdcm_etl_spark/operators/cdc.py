@@ -21,6 +21,8 @@ from functools import reduce
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from pdcm_etl_spark.operators.sharing import shared
+
 
 def scd2_merge(
     dim: DataFrame,
@@ -75,8 +77,6 @@ def scd2_merge(
     cond = reduce(
         lambda a, b: a & b, [open_rows[k] == upd[f"__u_{k}"] for k in keys]
     )
-    from pdcm_etl_spark.operators.sharing import shared
-
     # the full-outer join feeds THREE branch filters (keep_open,
     # close_old, insert_new) — without sharing, each re-runs the whole
     # join including both input scans and the update-compaction window

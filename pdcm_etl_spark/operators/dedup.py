@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pdcm_etl_spark.operators.sharing import shared
+
 # ---------------------------------------------------------------------------
 # exact dedup
 # ---------------------------------------------------------------------------
@@ -117,12 +119,6 @@ def _size_sides(sizes: DataFrame) -> tuple[DataFrame, DataFrame]:
     return sz_a, sz_b
 
 
-# compute-once sharing for multi-consumer intermediates — see
-# operators/sharing.py for the measured rationale (6× corpus re-scan
-# per jaccard_pairs call without it)
-from pdcm_etl_spark.operators.sharing import shared as _shared  # noqa: E402
-
-
 def _guarded_intersections(
     sh: DataFrame, max_shingle_freq: int | None
 ) -> tuple[DataFrame, DataFrame]:
@@ -145,7 +141,7 @@ def _guarded_intersections(
     if max_shingle_freq is not None:
         # the posting rows feed BOTH the hot-count pass and the anti-join
         # probe side — share them so the corpus is shingled once, not twice
-        sh = _shared(sh)
+        sh = shared(sh)
         hot = (
             sh.groupBy("shingle")
             .agg(F.count(F.lit(1)).alias("freq"))
@@ -156,7 +152,7 @@ def _guarded_intersections(
     # consumed by the pair explosion AND both size-side probes (3×) —
     # share, or the whole scan→shingle→guard→collect pipeline re-runs
     # per consumer (measured: 6 corpus scans per jaccard_pairs call)
-    buckets = _shared(
+    buckets = shared(
         sh.groupBy("shingle").agg(F.collect_list("id").alias("ids"))
     )
     # per-doc shingle-set sizes over the GUARDED shingles (freq-1 buckets
@@ -422,8 +418,8 @@ def verify_pairs_jaccard(
         .distinct()
     )
     # both pair endpoints probe the same collected sets (2×) — share so
-    # the semi-join + collect_set pipeline runs once (see _shared)
-    sets = _shared(
+    # the semi-join + collect_set pipeline runs once (see shared)
+    sets = shared(
         sh.join(cand_ids, "id", "left_semi")
         .groupBy("id")
         .agg(F.collect_set("shingle").alias("sset"))
@@ -457,13 +453,13 @@ def minhash_dedup(
     """Full MinHash-LSH near-dup pipeline: shingle → signature → banded
     candidates → exact-Jaccard verification of candidates only."""
     # shingles feed both the signatures and the verification
-    sh = _shared(shingles(df, id_col, text_col, n))
+    sh = shared(shingles(df, id_col, text_col, n))
     # signatures are one row per doc — sharing them keeps the banding
     # self-join from re-running the groupBy over the (much larger) shingles
-    sigs = _shared(minhash_signatures(sh, num_perm))
+    sigs = shared(minhash_signatures(sh, num_perm))
     # candidates feed verification twice (the pair join + the semi-join
     # that prunes shingle collection) — share so banding runs once
-    cands = _shared(lsh_candidate_pairs(sigs, bands))
+    cands = shared(lsh_candidate_pairs(sigs, bands))
     return verify_pairs_jaccard(cands, sh, min_bp=min_bp)
 
 
@@ -518,7 +514,7 @@ def simhash_near_pairs(sims: DataFrame, max_hamming: int = 3, bands: int = 4) ->
     # exploded-stream class the wave-1 A/Bs already ruled out), while
     # the pre-explode table is 16 bytes/row and its upstream is the
     # expensive part (operators/sharing.py)
-    sims = _shared(sims.select("id", "simhash"))
+    sims = shared(sims.select("id", "simhash"))
     banded = sims.select("id", "simhash", band_idx).withColumn(
         "bh",
         F.expr(
@@ -565,12 +561,12 @@ def minhash_dedup_incremental(
     Returns (id_a, id_b, inter, jaccard_bp, is_new_pair) where
     is_new_pair is true iff both sides are new-batch documents."""
     marked = df.withColumn("__existing", is_existing)
-    sh = _shared(shingles(marked, id_col, text_col, n))
-    sigs = _shared(minhash_signatures(sh, num_perm))
+    sh = shared(shingles(marked, id_col, text_col, n))
+    sigs = shared(minhash_signatures(sh, num_perm))
     flags = marked.select(
         F.col(id_col).alias("id"), F.col("__existing").alias("existing")
     )
-    cands = _shared(
+    cands = shared(
         lsh_candidate_pairs(sigs, bands)
         .join(flags.select(F.col("id").alias("id_a"),
                            F.col("existing").alias("ex_a")), "id_a")
@@ -650,7 +646,7 @@ def paragraph_dedup(
     # shuffle_hash pinned (no broadcast at 100 TB)
     # segs feeds the keeper aggregation AND the join-back probe — share
     # so the segmentation explode runs once (operators/sharing.py)
-    segs = _shared(segs.withColumn("dig", F.md5("seg")))
+    segs = shared(segs.withColumn("dig", F.md5("seg")))
     keepers = segs.groupBy("dig").agg(
         F.min(F.struct("id", "seg_idx")).alias("__first")
     )
@@ -1002,7 +998,7 @@ def substring_dedup_incremental(
     )
     # wins feeds the keeper aggregation AND the join-back probe — share
     # so the window-digest explode runs once (operators/sharing.py)
-    wins = _shared(wins)
+    wins = shared(wins)
     keepers = wins.groupBy("dig").agg(
         F.min(
             F.struct(
@@ -1100,7 +1096,7 @@ def edit_distance_pairs(
     norm = F.lower(F.trim(F.col(text_col)))
     # keyed feeds the block-count guard AND the anti-join probe; guarded
     # feeds BOTH self-join sides — share (operators/sharing.py)
-    keyed = _shared(
+    keyed = shared(
         df.select(
             F.col(id_col).alias("id"),
             norm.alias("t"),
@@ -1110,7 +1106,7 @@ def edit_distance_pairs(
     )
     blocks = keyed.groupBy("__pfx", "__lb").agg(F.count(F.lit(1)).alias("__n"))
     hot = blocks.filter(F.col("__n") > max_bucket).select("__pfx", "__lb")
-    guarded = _shared(keyed.join(hot, ["__pfx", "__lb"], "left_anti"))
+    guarded = shared(keyed.join(hot, ["__pfx", "__lb"], "left_anti"))
     a = guarded.select(
         F.col("__pfx"), F.col("__lb"),
         F.col("id").alias("id_1"), F.col("t").alias("t1"),
@@ -1221,8 +1217,8 @@ def prefix_filter_pairs(
     # (freq asc, shingle asc) and survives the trip through array_sort
     # on both engines (no struct-ordering semantics to align)
     # posting rows feed the frequency pass AND the freq-keyed join —
-    # share (see _shared: measured multi-scan of the corpus otherwise)
-    sh = _shared(sh)
+    # share (see shared: measured multi-scan of the corpus otherwise)
+    sh = shared(sh)
     freq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("freq"))
     keyed = sh.join(freq.hint("shuffle_hash"), "shingle").select(
         "id",
@@ -1233,7 +1229,7 @@ def prefix_filter_pairs(
         ).alias("k"),
     )
     # consumed by the prefix postings and BOTH verify-side probes (3×)
-    docs = _shared(
+    docs = shared(
         keyed.groupBy("id")
         .agg(F.array_sort(F.collect_list("k")).alias("toks"))
         .select(
@@ -1416,7 +1412,7 @@ def sorted_neighborhood_pairs(
 
     # base feeds the in-bucket ranking AND the bucket totals; g feeds
     # both pair sides — share (operators/sharing.py)
-    base = _shared(
+    base = shared(
         df.select(
             F.col(id_col).alias("id"),
             F.col(key_col).alias("k"),
@@ -1437,7 +1433,7 @@ def sorted_neighborhood_pairs(
     offsets = totals.select(
         "__b", F.coalesce(F.sum("__n").over(w_off), F.lit(0)).alias("__off")
     )
-    g = _shared(
+    g = shared(
         ranked.join(F.broadcast(offsets), "__b").select(
             "id", "k", (F.col("__off") + F.col("__r_in")).alias("rank")
         )
@@ -1572,10 +1568,10 @@ def banding_recall(
     min_bp = min_ppm // 100
     # each side is consumed twice (the hit semi-join + its own scalar
     # count) — share, or the full truth/LSH pipeline runs twice
-    truth = _shared(
+    truth = shared(
         prefix_filter_pairs(sh, min_ppm=min_ppm).select("id_a", "id_b")
     )
-    found = _shared(
+    found = shared(
         minhash_dedup(
             docs, id_col, text_col, n, num_perm, bands, min_bp=min_bp
         ).select("id_a", "id_b")

@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from pdcm_etl_spark.operators.sharing import shared
+
 _INTEGRAL = {"tinyint", "smallint", "int", "bigint"}
 
 
@@ -147,8 +149,6 @@ def iqr_outliers(
     """
     from pyspark.sql import Window
 
-    from pdcm_etl_spark.operators.sharing import shared
-
     # base feeds the rank window, the counts, and the flagging join —
     # share so the source scan+filter runs once (operators/sharing.py)
     base = shared(
@@ -219,8 +219,6 @@ def mad_outliers(
     Returns outlier rows: (id, key, value_micro, med_micro, mad_micro).
     """
     from pyspark.sql import Window
-
-    from pdcm_etl_spark.operators.sharing import shared
 
     # base feeds the counts, the median window, and the deviation join;
     # dev feeds the MAD window and the flagging join — share both
@@ -356,8 +354,6 @@ def target_encode_loo(
     # through the whole expression benched 2.6× the wall). If a
     # category's TOTAL genuinely exceeds int64 (9.2e18 micro), the ANSI
     # cast aborts loudly — never silently wrong.
-    from pdcm_etl_spark.operators.sharing import shared
-
     # cats feeds the global rollup AND the encoding join — share it, or
     # the full category aggregation over the fact runs twice; the
     # global totals then derive FROM cats (sum of per-category sums ≡
@@ -416,8 +412,6 @@ def robust_scale_ppm(
     Returns (id, key, value_micro, robust_z_ppm nullable).
     """
     from pyspark.sql import Window
-
-    from pdcm_etl_spark.operators.sharing import shared
 
     # base feeds the counts, the median window, and the deviation join;
     # dev feeds the MAD window and the final scaling join — share both,

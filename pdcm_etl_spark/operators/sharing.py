@@ -3,8 +3,7 @@
 1. A frame read by more than one consumer goes through ``shared()``.
 2. A loop's per-round state (graph closures and components, pagerank,
    the BPE trainer) is cut with ``localCheckpoint(eager=True)`` in the
-   loop itself: a lineage cut, not a sharing decision, so the mode
-   below does not govern it.
+   loop itself: a lineage cut, not a sharing decision.
 
 Nothing outside this module persists, caches or unpersists a frame
 (``plans/audit.bounded_checkpoint`` excepted; tests/test_sharing.py
@@ -23,49 +22,42 @@ those are full corpus re-scans.
 
 ``shared(df)`` is the fix: a lazy ``localCheckpoint`` — materialized by
 the first consumer, replayed from stored blocks (memory-and-disk,
-spills gracefully) by the rest; the guide-§8 decide-once pattern.
-
-``SPARK_GRAFT_SHARE_INTERMEDIATES`` picks the mode for every
-``shared()`` site: the operators' multi-consumer intermediates, the
-flagship ``EntityDag``'s multiply-consumed entities (``plans/dag.py``)
-and the synthetic provider spine (``plans/synth.py``). Truncating
-lineage matters most in the DAG: with ~50 chained entities, full
-lineage makes Catalyst re-analyze an ever-deeper tree for every
+spills gracefully) by the rest; the guide-§8 decide-once pattern. It
+covers every compute-once site: the operators' multi-consumer
+intermediates, the flagship ``EntityDag``'s multiply-consumed entities
+(``plans/dag.py``) and the synthetic provider spine (``plans/synth.py``).
+Truncating lineage matters most in the DAG: with ~50 chained entities,
+full lineage makes Catalyst re-analyze an ever-deeper tree for every
 downstream node (quadratic driver cost — measured ~40% of flagship wall
 time at sf0.1).
 
-- ``checkpoint`` (default): the lazy ``localCheckpoint`` above.
-- ``persist``: ``persist(MEMORY_AND_DISK)``, full lineage kept, so an
-  executor loss recomputes the blocks instead of failing the job
-  (localCheckpoint blocks die with their executor). Measured 2× slower
-  on the flagship from re-analysis cost. This mode registers every
-  shared frame in the CacheManager.
-- ``none``: recompute in every consumer.
+There is one storage path and no switch. ``persist(MEMORY_AND_DISK)``
+keeps full lineage, so a lost executor would recompute instead of
+failing, but it measured 2× slower on the flagship (re-analysis cost),
+OOMed in serialization where the checkpoint blocks spilled, and left
+every shared frame registered in the CacheManager, where ``release``
+below dropped its blocks and a second build recomputed through the old
+lineage. Recomputing in every consumer is the six-scan fault above.
+Should executor loss ever cost checkpoint blocks real work, the choice
+must key on what the session shows (its master URL: ``local[N]`` has no
+separate executor to lose), never on a user setting.
 
 Memory-pressure note (measured at sf1, 4g heap): the binding variable is
-PER-TASK memory, not the mode — 4g ÷ 32 concurrent tasks kills the
-flagship in either mode, 4g ÷ 4 tasks completes with ~18 GB of spill and
-zero OOM (scripts_dev/mem_pressure.py).
+PER-TASK memory, not the storage path — 4g ÷ 32 concurrent tasks kills
+the flagship either way, 4g ÷ 4 tasks completes with ~18 GB of spill
+and zero OOM (scripts_dev/mem_pressure.py).
 
 ``release(spark, keep)`` is the counterpart: it unpersists every
-persistent RDD (checkpoint or persist blocks) whose id is not in the
+persistent RDD (checkpoint blocks) whose id is not in the
 ``keep`` snapshot taken earlier with ``persistent_rdd_ids``.
 """
 
 from __future__ import annotations
 
-import os
-
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 
 
 def shared(df: DataFrame) -> DataFrame:
-    mode = os.environ.get("SPARK_GRAFT_SHARE_INTERMEDIATES", "checkpoint")
-    if mode == "none":
-        return df
-    if mode == "persist":
-        return df.persist(StorageLevel.MEMORY_AND_DISK)
     return df.localCheckpoint(eager=False)
 
 

@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from pdcm_etl_spark.operators.sharing import shared
+
 
 def _dvec(col) -> Column:
     c = F.col(col) if isinstance(col, str) else col
@@ -569,8 +571,6 @@ def semantic_dedup(
 
     Returns (``id_col``, cid, removed).
     """
-    from pdcm_etl_spark.operators.sharing import shared
-
     _, assigned = kmeans_fit(
         embeddings, k, iterations, id_col, vec_col, assign_method
     )

@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from pdcm_etl_spark.operators.sharing import shared
+
 
 def asof_join(
     left: DataFrame,
@@ -143,8 +145,6 @@ def funnel_stages(
     """
     if not stages:
         raise ValueError("funnel_stages: need at least one stage")
-    from pdcm_etl_spark.operators.sharing import shared
-
     # one corpus scan for ALL stages (pushed IN filter), shared so each
     # stage's filter reads stored blocks; the accumulating `out` is
     # consumed twice per stage (the constraint join + the left fold) —
@@ -205,8 +205,6 @@ def cohort_retention(
     week = F.expr(
         f"cast(datediff(to_date({ts_col}), date'1970-01-01') div 7 as int)"
     )
-    from pdcm_etl_spark.operators.sharing import shared
-
     # consumed by the cohort-assignment aggregation AND the join back —
     # share so the distinct runs once (operators/sharing.py)
     activity = shared(
@@ -1511,8 +1509,6 @@ def revenue_retention(
     retention_ppm is NULL for a zero week-0 base (no scale to retain
     against).
     """
-    from pdcm_etl_spark.operators.sharing import shared
-
     week = F.expr(
         f"CAST(unix_micros(CAST({ts_col} AS TIMESTAMP))"
         " div 604800000000 AS BIGINT)"

@@ -48,6 +48,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pdcm_etl_spark.operators.sharing import persistent_rdd_ids, release
+from pdcm_etl_spark.plans.synth import (
+    SEARCH_INDEX_COLUMNS,
+    build_search_index,
+    synthesize_provider_modules,
+)
 from pdcm_etl_spark.sources.tsv import PROVIDER_COL
 
 # (applicationId, sf_dir-hash, provider) -> base search_index parquet dir
@@ -87,9 +92,6 @@ def _base_six_dir(
     wrapper carries ~2× the flagship footprint by construction and
     OOMs at the reference's 4g executor profile while the two-job
     shape passes (mem_pressure_r8)."""
-    from pdcm_etl_spark.plans.dag import build_metadata_dag
-    from pdcm_etl_spark.plans.synth import _project_columns
-
     app = spark.sparkContext.applicationId
     digest = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
     key = (app, digest, delta_provider)
@@ -99,8 +101,7 @@ def _base_six_dir(
     base_raw = _filter_modules(
         raw, F.col(PROVIDER_COL) != delta_provider
     )
-    dag = build_metadata_dag(spark, base_raw)
-    six = _project_columns(dag.run(targets=["search_index"])["search_index"])
+    six = build_search_index(spark, base_raw)
     out = os.path.join(
         tempfile.gettempdir(), f"pdcm_base_six_{app}_{digest}"
     )
@@ -132,13 +133,6 @@ def run_etl_search_index_incremental(
     every driver-hash check is the proof that delta-applied ≡ rebuilt
     from scratch, 67 columns wide.
     """
-    from pdcm_etl_spark.plans.dag import build_metadata_dag
-    from pdcm_etl_spark.plans.synth import (
-        SEARCH_INDEX_COLUMNS,
-        _project_columns,
-        synthesize_provider_modules,
-    )
-
     raw = synthesize_provider_modules(spark, sf_dir)
     base_dir = _base_six_dir(spark, sf_dir, raw, delta_provider)
 
@@ -155,10 +149,7 @@ def run_etl_search_index_incremental(
         (F.col(PROVIDER_COL) == delta_provider)
         | ~F.col(PROVIDER_COL).isin(registered),
     )
-    ddag = build_metadata_dag(spark, delta_raw)
-    delta_six = _project_columns(
-        ddag.run(targets=["search_index"])["search_index"]
-    )
+    delta_six = build_search_index(spark, delta_raw)
 
     # partition-pruned drop of the (possibly re-shipped) provider, then
     # append the recomputed rows — the upsert contract is idempotent:

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from pdcm_etl_spark.functions.local_table import values_table
 from pdcm_etl_spark.operators.sharing import shared
+from pdcm_etl_spark.plans.dag import build_metadata_dag
 from pdcm_etl_spark.sources.registry import module_columns
 from pdcm_etl_spark.sources.tsv import PROVIDER_COL
 
@@ -669,13 +670,17 @@ def _project_columns(six: DataFrame) -> DataFrame:
     return six.select(*cols)
 
 
+def build_search_index(
+    spark: SparkSession, raw: dict[str, DataFrame]
+) -> DataFrame:
+    """The flagship build over provider modules ``raw``: the metadata DAG
+    run for search_index, projected onto SEARCH_INDEX_COLUMNS."""
+    dag = build_metadata_dag(spark, raw)
+    return _project_columns(dag.run(targets=["search_index"])["search_index"])
+
+
 def run_etl_search_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The flagship query: full metadata DAG over the synthetic provider
     workload, returning the denormalized search_index with the
     reference's full declared column list."""
-    from pdcm_etl_spark.plans.dag import build_metadata_dag
-
-    raw = synthesize_provider_modules(spark, sf_dir)
-    dag = build_metadata_dag(spark, raw)
-    out = dag.run(targets=["search_index"])
-    return _project_columns(out["search_index"])
+    return build_search_index(spark, synthesize_provider_modules(spark, sf_dir))

@@ -28,14 +28,97 @@ different names are defined below. The reports surface
 
 from __future__ import annotations
 
+import logging
 import sys
+from typing import Callable
 
 from pyspark.errors import AnalysisException
+from pyspark.logger import PySparkLogger
 from pyspark.sql import DataFrame, SparkSession
 
-# name → SQL over the registered entity views. Each is a complete,
-# independently creatable TEMP VIEW.
-VIEW_DEFINITIONS: dict[str, str] = {
+# measurement-table registry: data_type label → temp-view name
+# (model_molecular_metadata / details_molecular_data build their
+# data_exists flag from whichever of these are registered in this run)
+MEASUREMENT_TABLES: dict[str, str] = {
+    "mutation": "mutation_measurement_data",
+    "expression": "expression_measurement_data",
+    "copy number alteration": "cna_measurement_data",
+    "cna": "cna_measurement_data",  # providers abbreviate the type label
+    "bio markers": "biomarker_measurement_data",
+}
+
+
+def _molecular_preamble(registered: set[str]) -> tuple[str, str] | None:
+    """The SQL both molecular views build their data-presence flag from,
+    or None when no measurement table is in ``registered`` (the session
+    catalog's names): a distinct-id union over the registered
+    measurement tables (one shuffle instead of N correlated EXISTS
+    probes) and the CASE arms mapping data_type to its table."""
+    present = {label: t for label, t in MEASUREMENT_TABLES.items()
+               if t in registered}
+    if not present:
+        return None
+    existing = " UNION ALL ".join(
+        f"SELECT DISTINCT molecular_characterization_id, '{t}' AS src_table FROM {t}"
+        for t in sorted(set(present.values()))
+    )
+    type_to_table = " ".join(
+        f"WHEN '{label}' THEN '{t}'" for label, t in MEASUREMENT_TABLES.items()
+    )
+    return existing, type_to_table
+
+
+def _mmm_sql(registered: set[str]) -> str | None:
+    """model_molecular_metadata (views.sql:406-446): molchar metadata +
+    data_exists (EXISTS per measurement table) + data_restricted from
+    the restriction config."""
+    preamble = _molecular_preamble(registered)
+    if preamble is None:
+        return None
+    existing, type_to_table = preamble
+    return f"""
+        SELECT mcv.*,
+               CASE WHEN ex.molecular_characterization_id IS NOT NULL
+                    THEN 'TRUE' ELSE 'FALSE' END AS data_exists,
+               CASE WHEN r.data_source IS NOT NULL
+                    THEN 'TRUE' ELSE 'FALSE' END AS data_restricted
+        FROM molecular_characterization_vw mcv
+        LEFT JOIN ({existing}) ex
+          ON ex.molecular_characterization_id = mcv.molecular_characterization_id
+         AND ex.src_table = CASE mcv.data_type {type_to_table} END
+        LEFT JOIN molecular_data_restriction r
+          ON r.data_source = mcv.data_source
+         AND r.molecular_data_table = CASE mcv.data_type {type_to_table} END
+        WHERE mcv.data_type != 'immunemarker'
+    """
+
+
+def _details_molecular_data_sql(registered: set[str]) -> str | None:
+    """details_molecular_data (views.sql:1041-1095): molchar rows with a
+    per-type data_availability flag."""
+    preamble = _molecular_preamble(registered)
+    if preamble is None:
+        return None
+    existing, type_to_table = preamble
+    return f"""
+        SELECT mcv.molecular_characterization_id AS id,
+               mcv.sample_id, mcv.model_id, mcv.source,
+               mcv.xenograft_passage, mcv.raw_data_url, mcv.data_type,
+               mcv.platform_name,
+               CASE WHEN ex.molecular_characterization_id IS NOT NULL
+                    THEN 'TRUE' ELSE 'FALSE' END AS data_availability
+        FROM molecular_characterization_vw mcv
+        LEFT JOIN ({existing}) ex
+          ON ex.molecular_characterization_id = mcv.molecular_characterization_id
+         AND ex.src_table = CASE mcv.data_type {type_to_table} END
+    """
+
+
+# name → SQL over the registered entity views, in creation order: a view
+# comes after every view it reads. A callable entry builds its SQL from
+# the session catalog's names, or returns None when its inputs are
+# absent in this run.
+VIEW_DEFINITIONS: dict[str, str | Callable[[set[str]], str | None]] = {
     # models per type (views.sql models_by_type pattern)
     "models_by_type": """
         SELECT type AS model_type, COUNT(*) AS n_models
@@ -188,6 +271,8 @@ VIEW_DEFINITIONS: dict[str, str] = {
                mc.id AS molecular_characterization_id
         FROM molecular_characterization mc
     """,
+    "model_molecular_metadata": _mmm_sql,
+    "details_molecular_data": _details_molecular_data_sql,
     # mutation_data_table (views.sql:363-404): restriction filter is the
     # reference's (data_source, table) NOT IN → here an anti-join shape;
     # (row)::text → to_json(struct(*)).
@@ -507,97 +592,12 @@ for _name in ("data_overview_mutation_cohorts", "data_overview_expression_cohort
     VIEW_DEFINITIONS[_name] = VIEW_DEFINITIONS[_name].replace("{genes}", _GENE_LIST_SQL)
 
 
-# measurement-table registry: data_type label → temp-view name
-# (model_molecular_metadata / details_molecular_data build their
-# data_exists flag from whichever of these are registered in this run)
-MEASUREMENT_TABLES: dict[str, str] = {
-    "mutation": "mutation_measurement_data",
-    "expression": "expression_measurement_data",
-    "copy number alteration": "cna_measurement_data",
-    "cna": "cna_measurement_data",  # providers abbreviate the type label
-    "bio markers": "biomarker_measurement_data",
-}
-
-
-def _molecular_preamble(registered: set[str]) -> tuple[str, str] | None:
-    """The SQL both molecular views build their data-presence flag from,
-    or None when no measurement table is in ``registered`` (the session
-    catalog's names): a distinct-id union over the registered
-    measurement tables (one shuffle instead of N correlated EXISTS
-    probes) and the CASE arms mapping data_type to its table."""
-    present = {label: t for label, t in MEASUREMENT_TABLES.items()
-               if t in registered}
-    if not present:
-        return None
-    existing = " UNION ALL ".join(
-        f"SELECT DISTINCT molecular_characterization_id, '{t}' AS src_table FROM {t}"
-        for t in sorted(set(present.values()))
-    )
-    type_to_table = " ".join(
-        f"WHEN '{label}' THEN '{t}'" for label, t in MEASUREMENT_TABLES.items()
-    )
-    return existing, type_to_table
-
-
-def _mmm_sql(registered: set[str]) -> str | None:
-    """model_molecular_metadata (views.sql:406-446): molchar metadata +
-    data_exists (EXISTS per measurement table) + data_restricted from
-    the restriction config."""
-    preamble = _molecular_preamble(registered)
-    if preamble is None:
-        return None
-    existing, type_to_table = preamble
-    return f"""
-        SELECT mcv.*,
-               CASE WHEN ex.molecular_characterization_id IS NOT NULL
-                    THEN 'TRUE' ELSE 'FALSE' END AS data_exists,
-               CASE WHEN r.data_source IS NOT NULL
-                    THEN 'TRUE' ELSE 'FALSE' END AS data_restricted
-        FROM molecular_characterization_vw mcv
-        LEFT JOIN ({existing}) ex
-          ON ex.molecular_characterization_id = mcv.molecular_characterization_id
-         AND ex.src_table = CASE mcv.data_type {type_to_table} END
-        LEFT JOIN molecular_data_restriction r
-          ON r.data_source = mcv.data_source
-         AND r.molecular_data_table = CASE mcv.data_type {type_to_table} END
-        WHERE mcv.data_type != 'immunemarker'
-    """
-
-
-def _details_molecular_data_sql(registered: set[str]) -> str | None:
-    """details_molecular_data (views.sql:1041-1095): molchar rows with a
-    per-type data_availability flag."""
-    preamble = _molecular_preamble(registered)
-    if preamble is None:
-        return None
-    existing, type_to_table = preamble
-    return f"""
-        SELECT mcv.molecular_characterization_id AS id,
-               mcv.sample_id, mcv.model_id, mcv.source,
-               mcv.xenograft_passage, mcv.raw_data_url, mcv.data_type,
-               mcv.platform_name,
-               CASE WHEN ex.molecular_characterization_id IS NOT NULL
-                    THEN 'TRUE' ELSE 'FALSE' END AS data_availability
-        FROM molecular_characterization_vw mcv
-        LEFT JOIN ({existing}) ex
-          ON ex.molecular_characterization_id = mcv.molecular_characterization_id
-         AND ex.src_table = CASE mcv.data_type {type_to_table} END
-    """
-
-
-# views whose SQL depends on which entities this run registered; each
-# callable takes the catalog's names and returns SQL or None (skip)
-DYNAMIC_VIEW_DEFINITIONS = {
-    "model_molecular_metadata": _mmm_sql,
-    "details_molecular_data": _details_molecular_data_sql,
-}
-
 # The reference's `CREATE VIEW pdcm_api.X AS SELECT * FROM X`
 # passthroughs (scripts/views.sql passim). register_entities() exposes
 # each entity under exactly this name, so the entity temp view IS the
 # API view — codified here (round-2 verdict item 8) so the name-set
 # parity vs views.sql is executable: every view name in the reference
-# script is either in VIEW_DEFINITIONS / DYNAMIC_VIEW_DEFINITIONS or in
+# script is either in VIEW_DEFINITIONS or in
 # this list (pinned by tests/test_views.py).
 PASSTHROUGH_VIEWS: list[str] = [
     "cell_model", "contact_form", "contact_people",
@@ -622,50 +622,38 @@ def create_views(spark: SparkSession, only: list[str] | None = None) -> list[str
     """CREATE OR REPLACE TEMP VIEW for every definition whose source
     entities are registered; returns the created view names.
 
-    Views reference other views (e.g. mutation_data_extended reads
-    model_molecular_metadata which reads molecular_characterization_vw),
-    so creation loops to a fixpoint: each pass creates whatever now
-    resolves, until no progress — the SQL-level equivalent of the
-    reference's ordered views.sql script, without hand-ordering. Each
-    view still pending at the fixpoint is named on stderr with the error
-    class of its last failure (stdout stays free for callers that parse
-    it).
+    One pass in VIEW_DEFINITIONS order, which lists a view after the
+    views it reads — the reference's ordered views.sql script. A view
+    that does not resolve is named on stderr with its error class
+    (stdout stays free for callers that parse it); PySpark's own ERROR
+    record of the failure, a stack trace, is held back.
 
     The catalog is listed once per call: the views created here are
     never measurement tables or passthrough entities, so one listing
     answers every presence check."""
     registered = {t.name for t in spark.catalog.listTables()}
-    pending: dict[str, object] = {}
-    for name, sql in VIEW_DEFINITIONS.items():
-        if only and name not in only:
-            continue
-        pending[name] = sql
-    for name, fn in DYNAMIC_VIEW_DEFINITIONS.items():
-        if only and name not in only:
-            continue
-        pending[name] = fn
     created: list[str] = []
-    last_error: dict[str, str] = {}
-    progressed = True
-    while pending and progressed:
-        progressed = False
-        for name in list(pending):
-            defn = pending[name]
+    # an AnalysisException logs an ERROR record with the full Java stack
+    # trace (~19 KB) before the except below sees it
+    logger = PySparkLogger.getLogger("SQLQueryContextLogger")
+    level = logger.level
+    logger.setLevel(logging.CRITICAL)
+    try:
+        for name, defn in VIEW_DEFINITIONS.items():
+            if only and name not in only:
+                continue
             sql = defn(registered) if callable(defn) else defn
-            if sql is None:  # dynamic view: inputs absent in this run
-                del pending[name]
+            if sql is None:  # inputs absent in this run
                 continue
             try:
                 spark.sql(f"CREATE OR REPLACE TEMP VIEW {name} AS {sql}")
             except AnalysisException as exc:
-                # a source not registered (yet) resolves on a later pass
-                last_error[name] = exc.getCondition() or type(exc).__name__
+                error = exc.getCondition() or type(exc).__name__
+                print(f"create_views: skipped {name} ({error})", file=sys.stderr)
                 continue
             created.append(name)
-            del pending[name]
-            progressed = True
-    for name in pending:
-        print(f"create_views: skipped {name} ({last_error[name]})", file=sys.stderr)
+    finally:
+        logger.setLevel(level)
     # passthrough API views: the registered entity view under the same
     # name is the view — report the ones live in this session's catalog
     for name in PASSTHROUGH_VIEWS:

@@ -62,7 +62,7 @@ def initial_model(
         trim_all("accessibility").alias("accessibility"),
         trim_all("europdx_access_modality").alias("europdx_access_modality"),
         "email", "name", "form_url", "database_url", "license",
-        "date_submitted",
+        "date_submitted", "model_availability",
         F.col(PROVIDER_COL),
     ).drop_duplicates()
 
@@ -145,7 +145,8 @@ def model(
         "model_name", "model_name_aliases", "growth_properties", "growth_media",
         "media_id", "plate_coating", "other_plate_coating", "passage_number",
         "contaminated", "contamination_details", "supplements", "drug",
-        "drug_concentration", "date_submitted", PROVIDER_COL,
+        "drug_concentration", "date_submitted", "model_availability",
+        PROVIDER_COL,
     )
 
 

@@ -217,10 +217,3 @@ def molecular_aggregates_per_model(
             for k in inner_kinds
         ],
     )
-
-
-def dataset_available_per_model(model_molchar_df: DataFrame) -> DataFrame:
-    """Sorted set of molecular data types available per model."""
-    return model_molchar_df.groupBy("model_id").agg(
-        F.array_sort(F.collect_set("molchar_type")).alias("dataset_available")
-    )

@@ -30,16 +30,10 @@ def main() -> None:
     args = list(sys.argv[1:])
     pairs = 4
     conf: dict[str, str] = {}
-    envb: dict[str, str] = {}
     while "--conf" in args:
         i = args.index("--conf")
         k, _, v = args[i + 1].partition("=")
         conf[k] = v
-        del args[i : i + 2]
-    while "--env" in args:
-        i = args.index("--env")
-        k, _, v = args[i + 1].partition("=")
-        envb[k] = v
         del args[i : i + 2]
     if "--pairs" in args:
         i = args.index("--pairs")
@@ -70,22 +64,17 @@ def main() -> None:
         stages with id > after_stage — wall-interference-resistant
         evidence of how much WORK each arm did."""
         run = cpu = tasks = 0
-        try:
-            for s in _stages():
-                if s["stageId"] <= after_stage:
-                    continue
-                run += s.get("executorRunTime") or 0
-                cpu += (s.get("executorCpuTime") or 0) // 1_000_000
-                tasks += s.get("numCompleteTasks") or 0
-        except Exception:
-            pass
+        for s in _stages():
+            if s["stageId"] <= after_stage:
+                continue
+            run += s.get("executorRunTime") or 0
+            cpu += (s.get("executorCpuTime") or 0) // 1_000_000
+            tasks += s.get("numCompleteTasks") or 0
         return run, cpu, tasks
 
     def _last_stage() -> int:
-        try:
-            return max((s["stageId"] for s in _stages()), default=-1)
-        except Exception:
-            return -1
+        return max((s["stageId"] for s in _stages()), default=-1)
+
     import __spark_entry__ as entrymod
 
     queries = entrymod.queries()
@@ -95,33 +84,20 @@ def main() -> None:
     if not os.path.isdir(warm_dir):
         warm_dir = sf_dir
 
-    env_baseline = {k: os.environ.get(k) for k in envb}
-
-    def set_arm(armconf: dict[str, str | None], arm: str = "A") -> None:
+    def set_arm(armconf: dict[str, str | None]) -> None:
         for k, v in armconf.items():
             if v is None:
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
-        env_vals = envb if arm == "B" else env_baseline
-        for k, v in env_vals.items():
-            if v is None:
-                os.environ.pop(k, None)
-            else:
-                os.environ[k] = v
 
     for name in names:
         fn = queries[name]
         # warm both arms' codegen paths
-        for arm, armconf in (("A", baseline), ("B", conf)):
-            set_arm(armconf, arm)
-            try:
-                fn(spark, warm_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-            except Exception:
-                pass
-        set_arm(baseline, "A")
+        for armconf in (baseline, conf):
+            set_arm(armconf)
+            fn(spark, warm_dir).write.format("noop").mode("overwrite").save()
+        set_arm(baseline)
         a_runs, b_runs = [], []
         a_work, b_work = [], []
         for p in range(pairs):
@@ -129,7 +105,7 @@ def main() -> None:
                 ("A", baseline, a_runs, a_work),
                 ("B", conf, b_runs, b_work),
             ):
-                set_arm(armconf, arm)
+                set_arm(armconf)
                 release_blocks(spark)
                 mark = _last_stage()
                 spark.sparkContext.setJobDescription(f"ab:{name}:{arm}{p}")
@@ -139,7 +115,7 @@ def main() -> None:
                 runs.append(round(time.time() - t0, 3))
                 spark.sparkContext.setJobDescription(None)
                 work.append(_totals(mark))
-        set_arm(baseline, "A")
+        set_arm(baseline)
         med = lambda xs: sorted(xs)[len(xs) // 2]  # noqa: E731
         deltas = [b - a for a, b in zip(a_runs, b_runs)]
         print(

@@ -88,11 +88,6 @@ def test_per_model_aggregates(spark, molchar):
     assert agg["M1"]["breast_cancer_biomarkers"] == [
         "ER/ESR1 negative", "HER2/ERBB2 positive"]
 
-    avail = {r["model_id"]: r["dataset_available"]
-             for r in md.dataset_available_per_model(mm).collect()}
-    assert avail["M1"] == ["biomarker", "mutation"]
-    assert avail["M2"] == ["immunemarker"]
-
 
 def test_per_model_aggregates_edge_cases(spark):
     """Left-join kinds give [] for a model with molecular data but no

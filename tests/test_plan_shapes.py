@@ -18,21 +18,34 @@ def _plan(df, mode="formatted") -> str:
     return buf.getvalue()
 
 
-def _unshared_plan(fn, spark, sf_dir, mode="formatted") -> str:
-    """Plan with compute-once sharing disabled (operators/sharing.py).
+@contextlib.contextmanager
+def _unshared():
+    """Build plans with compute-once sharing off (operators/sharing.py).
 
-    The r11 share boundary truncates the printed plan at a
-    `Scan ExistingRDD` — the shape below it still executes, it just
-    materializes once. Shape pins on subtrees that now sit behind a
-    boundary assert under the documented recompute toggle, which prints
-    the full logical shape unchanged."""
-    import os
+    A share boundary truncates the printed plan at a `Scan ExistingRDD`:
+    the shape below it still executes, it just materializes once. Shape
+    pins on subtrees behind a boundary assert the full recompute plan
+    instead. ``shared()`` is the only lazy ``localCheckpoint`` caller
+    (tests/test_sharing.py guards that), so a lazy checkpoint that
+    returns the frame itself removes exactly the share boundaries; eager
+    loop checkpoints still cut."""
+    from pyspark.sql.classic.dataframe import DataFrame
 
-    os.environ["SPARK_GRAFT_SHARE_INTERMEDIATES"] = "none"
+    checkpoint = DataFrame.localCheckpoint
+
+    def lazy_is_identity(self, eager=True, *args, **kwargs):
+        return checkpoint(self, eager, *args, **kwargs) if eager else self
+
+    DataFrame.localCheckpoint = lazy_is_identity
     try:
-        return _plan(fn(spark, sf_dir), mode=mode)
+        yield
     finally:
-        os.environ.pop("SPARK_GRAFT_SHARE_INTERMEDIATES", None)
+        DataFrame.localCheckpoint = checkpoint
+
+
+def _unshared_plan(fn, spark, sf_dir, mode="formatted") -> str:
+    with _unshared():
+        return _plan(fn(spark, sf_dir), mode=mode)
 
 
 @pytest.fixture(scope="module")
@@ -174,25 +187,19 @@ def test_jaccard_pairs_bucketed_no_freq_join(spark):
 
     from pdcm_etl_spark.operators.dedup import jaccard_pairs, shingles
 
-    import os
-
     docs = spark.range(100).select(
         F.col("id").alias("doc_id"),
         F.concat(F.lit("a b c d e f g h word"), F.col("id") % 7).alias("text"),
     )
     # r11: the candidate core shares its multi-consumer intermediates
     # (operators/sharing.py), which truncates the printed plan at the
-    # share boundary — assert the LOGICAL shape under the documented
-    # recompute toggle (same plan, no boundary), then pin the boundary
-    # itself with sharing on.
-    os.environ["SPARK_GRAFT_SHARE_INTERMEDIATES"] = "none"
-    try:
+    # share boundary — assert the LOGICAL shape with sharing off (same
+    # plan, no boundary), then pin the boundary itself with sharing on.
+    with _unshared():
         plan = _plan(
             jaccard_pairs(shingles(docs), min_bp=1000, max_shingle_freq=50),
             mode="simple",
         )
-    finally:
-        os.environ.pop("SPARK_GRAFT_SHARE_INTERMEDIATES", None)
     n_joins = sum(plan.count(j) for j in
                   ("SortMergeJoin", "ShuffledHashJoin", "BroadcastHashJoin",
                    "BroadcastNestedLoopJoin", "CartesianProduct"))
@@ -217,14 +224,11 @@ def test_jaccard_pairs_bucketed_no_freq_join(spark):
     )
     assert "Scan ExistingRDD" in shared_plan, shared_plan
     # without the guard there is no anti-join: just the two size joins
-    os.environ["SPARK_GRAFT_SHARE_INTERMEDIATES"] = "none"
-    try:
+    with _unshared():
         no_guard = _plan(
             jaccard_pairs(shingles(docs), min_bp=1000, max_shingle_freq=None),
             mode="simple",
         )
-    finally:
-        os.environ.pop("SPARK_GRAFT_SHARE_INTERMEDIATES", None)
     n_joins_ng = sum(no_guard.count(j) for j in
                      ("SortMergeJoin", "ShuffledHashJoin", "BroadcastHashJoin"))
     assert n_joins_ng == 2, no_guard
@@ -282,7 +286,7 @@ def test_scd2_merge_join_decomposition(spark, sf_dir, queries):
     """r11: the full-outer merge join is computed ONCE behind a share
     boundary and its three branch filters (keep / close / insert)
     replay stored blocks — the old Catalyst decomposition re-ran the
-    join (and both input scans) per branch. Under the recompute toggle
+    join (and both input scans) per branch. With sharing off
     the per-branch decomposition must still hold: only equi joins, one
     per branch, no nested loop."""
     plan = _unshared_plan(queries["scd2_merge"], spark, sf_dir,
@@ -384,8 +388,8 @@ def test_edit_distance_pairs_blocked_equi_join(spark, sf_dir, queries):
     """Candidate generation must be an equi join on the (prefix, length
     bucket) block key — never a cartesian text×text scan — and the
     hot-block guard must appear as a LeftAnti join before pairing.
-    (Shape asserted under the recompute toggle — the guard now sits
-    behind the r11 share boundary; see _unshared_plan.)"""
+    (Shape asserted with sharing off — the guard now sits
+    behind the r11 share boundary; see _unshared.)"""
     plan = _unshared_plan(queries["dedup_edit_distance"], spark, sf_dir)
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
@@ -425,8 +429,8 @@ def test_triangle_count_all_joins_keyed(spark, sf_dir, queries):
 def test_itemset_pairs_guarded_basket_join(spark, sf_dir, queries):
     """The basket-size guard must appear as a LeftAnti join before the
     in-basket pair self-join, and the only non-equi operator allowed is
-    the one-row total broadcast. (Shape asserted under the recompute
-    toggle — the guard sits behind the r11 share boundary.)"""
+    the one-row total broadcast. (Shape asserted with sharing off — the
+    guard sits behind the r11 share boundary.)"""
     plan = _unshared_plan(queries["itemset_pairs"], spark, sf_dir)
     assert "LeftAnti" in plan, plan
     assert "CartesianProduct" not in plan, plan
@@ -466,7 +470,7 @@ def test_pareto_frontier_bounded_windows(spark, sf_dir, queries):
 def test_containment_pairs_same_guarded_core_as_jaccard(spark, sf_dir, queries):
     """Containment reuses the guarded in-bucket candidate core: the
     stop-shingle anti-join must sit below the posting-list collect.
-    (Shape asserted under the recompute toggle — the guarded core sits
+    (Shape asserted with sharing off — the guarded core sits
     behind the r11 share boundary.)"""
     plan = _unshared_plan(
         queries["dedup_containment"], spark, sf_dir, mode="simple"
@@ -546,7 +550,7 @@ def test_language_mix_one_agg_plus_broadcast_total(spark, sf_dir, queries):
     one-row BroadcastNestedLoopJoin, which is the intended shape (never
     a collect, never a data-sized window). (The per-language aggregate
     sits behind the r11 share boundary — both consumers replay one
-    corpus pass; pinned under the recompute toggle.)"""
+    corpus pass; pinned with sharing off.)"""
     plan = _unshared_plan(
         queries["corpus_language_mix"], spark, sf_dir, mode="simple"
     )
@@ -732,9 +736,8 @@ def test_winnow_hash_stream_never_explodes(spark, sf_dir, queries):
     each is ~n/w elements). What must NEVER happen is a Generate whose
     input is the raw k-gram hash transform itself — that would put ≈
     text-length rows per doc on the row stream. The md5/conv hashing
-    must stay inside Project nodes. (Shape asserted under the recompute
-    toggle — the hash-stream projection sits behind the r11 share
-    boundary.)"""
+    must stay inside Project nodes. (Shape asserted with sharing off —
+    the hash-stream projection sits behind the r11 share boundary.)"""
     plan = _unshared_plan(
         queries["dedup_winnow"], spark, sf_dir, mode="simple"
     )
@@ -803,7 +806,7 @@ def test_sorted_neighborhood_no_global_sort(spark, sf_dir, queries):
     UNPARTITIONED window runs over the bucket-totals aggregate (tiny),
     which re-enters on a broadcast join. No rank-wide Distinct: the
     block pairing is exactly-once by construction. (Shape asserted
-    under the recompute toggle — the rank pipeline sits behind the r11
+    with sharing off — the rank pipeline sits behind the r11
     share boundary.)"""
     plan = _unshared_plan(
         queries["sorted_neighborhood"], spark, sf_dir, mode="simple"

@@ -1,13 +1,14 @@
-"""One storage rule: ``operators.sharing.shared`` decides how every
-compute-once site shares a frame, the flagship EntityDag's
-multiply-consumed entities included; loop rounds are cut with an eager
-``localCheckpoint``; nothing is left registered in Spark's CacheManager."""
+"""One storage rule: every compute-once site shares a frame through
+``operators.sharing.shared``, a lazy ``localCheckpoint``, the flagship
+EntityDag's multiply-consumed entities included; loop rounds are cut
+with an eager ``localCheckpoint``; nothing is left registered in Spark's
+CacheManager; the engine reads no setting from the environment outside
+``session.py``."""
 
 import ast
 import os
 import re
 
-import pytest
 from pyspark import StorageLevel
 
 import fixtures
@@ -17,16 +18,9 @@ def _is_checkpoint(df) -> bool:
     return df._jdf.queryExecution().logical().nodeName() == "LogicalRDD"
 
 
-@pytest.mark.parametrize("mode", ["checkpoint", "persist"])
-def test_dag_and_operators_share_the_same_way(spark, monkeypatch, mode):
+def test_dag_and_operators_share_the_same_way(spark):
     from pdcm_etl_spark.operators.sharing import shared
     from pdcm_etl_spark.plans.dag import build_metadata_dag
-
-    if mode == "checkpoint":
-        # the default: the variable unset
-        monkeypatch.delenv("SPARK_GRAFT_SHARE_INTERMEDIATES", raising=False)
-    else:
-        monkeypatch.setenv("SPARK_GRAFT_SHARE_INTERMEDIATES", mode)
 
     dag = build_metadata_dag(spark, fixtures.metadata_fixture(spark))
     multi = next(
@@ -37,12 +31,8 @@ def test_dag_and_operators_share_the_same_way(spark, monkeypatch, mode):
     frames = {"shared()": shared(spark.range(10)), multi: dag.run()[multi]}
     try:
         for name, df in frames.items():
-            if mode == "checkpoint":
-                assert _is_checkpoint(df), name
-                assert df.storageLevel == StorageLevel.NONE, name
-            else:
-                assert not _is_checkpoint(df), name
-                assert df.storageLevel == StorageLevel.MEMORY_AND_DISK, name
+            assert _is_checkpoint(df), name
+            assert df.storageLevel == StorageLevel.NONE, name
     finally:
         for df in frames.values():
             df.unpersist()
@@ -55,12 +45,11 @@ def _checkpointed(dag) -> set[str]:
     }
 
 
-def test_get_and_run_share_the_same_nodes(spark, monkeypatch):
+def test_get_and_run_share_the_same_nodes(spark):
     """``get`` is ``run`` with one target: both count a node's consumers
     inside the requested cone only, so they checkpoint the same nodes."""
     from pdcm_etl_spark.plans.dag import build_metadata_dag
 
-    monkeypatch.delenv("SPARK_GRAFT_SHARE_INTERMEDIATES", raising=False)
     by_get = build_metadata_dag(spark, fixtures.metadata_fixture(spark))
     by_get.get("model")
     by_run = build_metadata_dag(spark, fixtures.metadata_fixture(spark))
@@ -69,9 +58,7 @@ def test_get_and_run_share_the_same_nodes(spark, monkeypatch):
     assert _checkpointed(by_get) == _checkpointed(by_run)
 
 
-def test_single_module_harmonisation_matches_per_module_cascade(
-    spark, monkeypatch
-):
+def test_single_module_harmonisation_matches_per_module_cascade(spark):
     """With ``markers`` and ONE harmonisable module the measurement table
     still goes through the shared cascade node: its rows and ids equal
     the cascade applied to that module alone, and the cascade is shared
@@ -80,7 +67,6 @@ def test_single_module_harmonisation_matches_per_module_cascade(
     from pdcm_etl_spark.transforms import molecular as mol_t
     from pdcm_etl_spark.transforms import molecular_data as md_t
 
-    monkeypatch.delenv("SPARK_GRAFT_SHARE_INTERMEDIATES", raising=False)
     raw = fixtures.metadata_fixture(spark)
     mk = fixtures.make_module_df
     raw["molchar_sample"] = mk(spark, "molchar_sample", [
@@ -144,13 +130,12 @@ _PERSISTING_QUERIES = (
 )
 
 
-def test_no_query_leaves_cache_manager_entries(spark, sf_dir, monkeypatch):
+def test_no_query_leaves_cache_manager_entries(spark, sf_dir):
     """A persisted frame stays registered in the CacheManager until it is
     unpersisted, and later plans that ``sameResult`` it are served from
-    its blocks. Under the default mode no query may leave one behind."""
+    its blocks. No query may leave one behind."""
     import __spark_entry__ as entry
 
-    monkeypatch.delenv("SPARK_GRAFT_SHARE_INTERMEDIATES", raising=False)
     cache_manager = spark._jsparkSession.sharedState().cacheManager()
     queries = entry.queries()
     left = {}
@@ -201,3 +186,59 @@ def test_storage_calls_stay_in_sharing():
                     if i not in skip and _STORAGE_CALL.search(line):
                         hits.append(f"{rel}:{i}: {line.strip()}")
     assert not hits, "storage calls outside operators/sharing.py:\n" + "\n".join(hits)
+
+
+def _package_trees():
+    for root, _dirs, files in os.walk(_PKG):
+        for f in sorted(files):
+            if f.endswith(".py"):
+                path = os.path.join(root, f)
+                with open(path) as fh:
+                    yield os.path.relpath(path, _PKG), ast.parse(fh.read())
+
+
+def test_shared_is_imported_once_at_module_top():
+    """Every module that shares a frame imports ``shared`` by its own
+    name in one module-top import; no function-local import, no alias."""
+    bad = []
+    for rel, tree in _package_trees():
+        top = [
+            n for n in tree.body
+            if isinstance(n, ast.ImportFrom)
+            and n.module == "pdcm_etl_spark.operators.sharing"
+            and any(a.name == "shared" for a in n.names)
+        ]
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.ImportFrom)
+                and node.module == "pdcm_etl_spark.operators.sharing"
+            ):
+                for alias in node.names:
+                    if alias.name == "shared" and (
+                        alias.asname or node not in top
+                    ):
+                        bad.append(f"{rel}:{node.lineno}")
+        if len(top) > 1:
+            bad.append(f"{rel}: {len(top)} module-top imports")
+    assert not bad, "shared imported other than once at module top:\n" + "\n".join(bad)
+
+
+def test_only_session_reads_the_environment():
+    """The engine takes no setting from the environment except the
+    session's CPU and heap sizing (``session.py``); a choice the code
+    can observe is made from the session, not from a variable read per
+    call."""
+    hits = []
+    for rel, tree in _package_trees():
+        if rel == "session.py":
+            continue
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Attribute)
+                and node.attr in ("environ", "getenv", "environb")
+            ) or (
+                isinstance(node, ast.alias)
+                and node.name in ("environ", "getenv", "environb")
+            ):
+                hits.append(f"{rel}:{getattr(node, 'lineno', '?')}")
+    assert not hits, "environment reads outside session.py:\n" + "\n".join(hits)

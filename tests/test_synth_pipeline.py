@@ -82,3 +82,35 @@ def test_raw_modules_all_string(spark):
         if name == "obo":
             continue
         assert all(f.dataType.simpleString() == "string" for f in df.schema.fields), name
+
+
+def test_model_availability_reaches_index_and_views(spark, six_rows):
+    """The sharing module's model_availability is carried through the
+    model entities: every index row holds one of the synthesized values,
+    and the enriched view's availability flag follows it."""
+    from pdcm_etl_spark.plans import views
+    from pdcm_etl_spark.plans.dag import build_metadata_dag
+
+    values = {"available", "unknown", "not available"}
+    assert {r["model_availability"] for r in six_rows} == values
+
+    out = build_metadata_dag(spark, synthesize_provider_modules(spark, SF)).run(
+        targets=["search_index", "model_relationships"]
+    )
+    views.register_entities(out)
+    try:
+        assert views.create_views(spark, only=["search_index_enriched"]) == [
+            "search_index_enriched"
+        ]
+        rows = spark.table("search_index_enriched").select(
+            "model_availability", "vendor_link", "model_availability_boolean"
+        ).collect()
+    finally:
+        for name in [*out, "search_index_enriched"]:
+            spark.catalog.dropTempView(name)
+    for r in rows:
+        assert r["model_availability_boolean"] == (
+            r["model_availability"] in ("available", "unknown")
+            or (r["vendor_link"] or "").lower().startswith("http")
+        ), r
+    assert {r["model_availability_boolean"] for r in rows} == {True, False}

@@ -89,9 +89,7 @@ def test_reference_view_name_parity(spark, full_dag):  # noqa: F811
     either a defined view or a codified entity passthrough, and the
     passthroughs the DAG produces are live queryable views."""
     declared = (
-        set(views.VIEW_DEFINITIONS)
-        | set(views.DYNAMIC_VIEW_DEFINITIONS)
-        | set(views.PASSTHROUGH_VIEWS)
+        set(views.VIEW_DEFINITIONS) | set(views.PASSTHROUGH_VIEWS)
     )
     missing = REFERENCE_VIEW_NAMES - declared
     assert not missing, f"views.sql names with no definition/passthrough: {missing}"
@@ -237,18 +235,41 @@ def test_model_metadata_api_views(spark, full_dag):  # noqa: F811
 
 
 def test_create_views_names_its_skips(spark, capsys):
-    """A view that cannot be created is reported on stderr with the error
-    class of its failure, and is left out of the returned names."""
+    """A view that cannot be created is reported on stderr with one line
+    naming the error class of its failure, with no PySpark error record
+    or stack trace, and is left out of the returned names."""
+    import logging
+
+    from pyspark.logger import PySparkLogger
+
+    class Records(logging.Handler):
+        def __init__(self):
+            super().__init__()
+            self.records = []
+
+        def emit(self, record):
+            self.records.append(record)
+
+    logger = PySparkLogger.getLogger("SQLQueryContextLogger")
+    level = logger.level
+    records = Records()
+    logger.addHandler(records)
     had = spark.catalog.tableExists("search_index")
     saved = spark.table("search_index") if had else None
     try:
         spark.range(3).toDF("pdcm_model_id").createOrReplaceTempView("search_index")
         created = views.create_views(spark, only=["models_by_primary_site"])
     finally:
+        logger.removeHandler(records)
         if had:
             saved.createOrReplaceTempView("search_index")
         else:
             spark.catalog.dropTempView("search_index")
     assert "models_by_primary_site" not in created
-    err = capsys.readouterr().err
-    assert "skipped models_by_primary_site (UNRESOLVED_COLUMN" in err
+    assert not records.records, [r.getMessage()[:200] for r in records.records]
+    assert logger.level == level
+    err = capsys.readouterr().err.splitlines()
+    assert len(err) == 1, err
+    assert err[0].startswith(
+        "create_views: skipped models_by_primary_site (UNRESOLVED_COLUMN"
+    ), err
